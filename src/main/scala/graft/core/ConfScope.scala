@@ -12,8 +12,11 @@ import org.apache.spark.sql.SparkSession
   * driving the gate (the bench/verify harnesses run gates serially);
   * a body that ITSELF fans out driver threads (e.g. groom's concurrent
   * group compactions) is fine — inheriting the override is the point —
-  * but concurrent INDEPENDENT scopes need a cloned session
-  * (spark.newSession() inherits conf yet isolates set/unset).
+  * but concurrent INDEPENDENT scopes need a cloned session: Spark's
+  * `cloneSession()` (package-private to `org.apache.spark.sql`, so
+  * reached through a shim) inherits the runtime conf yet isolates
+  * set/unset. `newSession()` does NOT inherit it — it starts from the
+  * SparkConf defaults, silently dropping active overrides.
   */
 private[graft] object ConfScope {
 

@@ -121,48 +121,29 @@ object Merge {
     * model → written keys.
     *
     * Scale shape: the merged frame (typically gzip-JSONL parse + merge
-    * shuffle — expensive, not re-runnable for free) is materialized in
-    * ONE pass, `partitionBy(model)` into a transient staging tree;
-    * each model's store write then reads only its own staged subtree
-    * (a pruned columnar scan). Upstream cost is O(1) in the number of
-    * models — a thousand-model firehose batch costs one pass + one
-    * bounded listing, not a thousand upstream re-scans.
+    * shuffle — expensive, and not guaranteed to repeat identically) is
+    * materialized in ONE pass, `partitionBy(model)` into a transient
+    * LZ4 stage; one [[PartitionStore]] write then makes its two passes
+    * over the staged tree, every model at once. The upstream runs
+    * exactly once and never has to fit in memory, and a thousand-model
+    * batch costs the same job count as a one-model batch.
     */
   def writePerModel(merged: org.apache.spark.sql.DataFrame,
       storeDir: String): Map[String, Seq[String]] = {
     val spark = merged.sparkSession
-    val stageDir = s"$storeDir/_permodel_stage_${java.util.UUID.randomUUID()}"
-    val stagePath = new org.apache.hadoop.fs.Path(stageDir)
+    val stagePath = new org.apache.hadoop.fs.Path(
+      s"$storeDir/_permodel_stage_${java.util.UUID.randomUUID()}")
     val fs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // LZ4: the stage is transient, codec speed beats ratio
-    merged.write.option("compression", "lz4")
-      .partitionBy(Model).parquet(stageDir)
+    // the data sits one level down: Spark warns on every read of a
+    // root whose name starts with "_"
+    val stageData = new org.apache.hadoop.fs.Path(stagePath, "batch").toString
     try {
-      // model names are schema-validated to a filesystem-safe charset
-      // (Schema model regexp), so directory name == model name
-      val models = fs.listStatus(stagePath)
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith(s"$Model=") => n.drop(Model.length + 1) }
-        .sorted
-      // loud guard: a null/unvalidated model value reaches partitionBy
-      // as __HIVE_DEFAULT_PARTITION__ (or percent-escaped) and would
-      // otherwise materialize a bogus store subtree whose rows no
-      // legitimate listing ever finds
-      models.foreach(m => require(isValidModelName(m),
-        s"writePerModel: staged partition '$m' is not a valid model name " +
-          "(null or unvalidated model column in the merged frame?)"))
-      models.map { m =>
-        // the staged slice lost the model column to the directory key;
-        // PartitionStore.write drops it anyway, so no need to restore.
-        // Recompute: the slice is ALREADY cheap re-runnable columnar
-        // input (a pruned scan of the staging tree we just wrote), so
-        // neither a third disk copy nor a CacheManager persist buys
-        // anything — write()'s two passes each scan the pruned subtree
-        m -> graft.ingest.PartitionStore.write(
-          spark.read.parquet(s"$stageDir/$Model=$m"), storeDir, m,
-          staging = graft.ingest.PartitionStore.Staging.Recompute)
-      }.toMap
+      // LZ4: the stage is transient, codec speed beats ratio
+      merged.write.option("compression", "lz4").partitionBy(Model).parquet(stageData)
+      // read back with the merged schema: partition inference would
+      // type an all-digit model name as a number
+      PartitionStore.writeModels(spark.read.schema(merged.schema).parquet(stageData),
+        storeDir, PartitionStore.MaxRowsPerFile)
     } finally { fs.delete(stagePath, true); () }
   }
 

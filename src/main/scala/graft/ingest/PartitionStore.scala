@@ -16,24 +16,34 @@ import scala.jdk.CollectionConverters._
   * `rewarded_decisions/{model}/parquet/{yyyy}/{MM}/{dd}/`
   * (reference: src/ingest/partition.py:77-109, 375-463).
   *
-  * Write pipeline (all distributed; the only driver-side data are one
-  * (prefixLength → maxGroupCount) row per candidate resolution — ten
-  * rows — and the file listing, both bounded):
+  * Write pipeline: TWO passes over the input, both distributed, for
+  * every model in the frame at once. The only driver-side data are
+  * the census — one (model, prefixLength) row per candidate
+  * resolution, ten rows per model — and the file listing.
   *
-  *  1. assign each row its KSUID-timestamp prefix at the coarsest
-  *     resolution (YYYYmm → YYYYmmddTHHMMSS) at which every prefix
-  *     group holds ≤ maxRowsPerFile rows — the reference's
-  *     "split on timestamp boundaries" (partition.py:375-405), which
-  *     disperses overlap repairs through the timeline so grooming
-  *     converges in ~O(log N) passes;
-  *  2. shuffle by prefix, sort rows by decision_id within partitions,
-  *     write one parquet file per prefix chunk (deliberately NO
-  *     maxRecordsPerFile backstop — splitting a same-second overflow
-  *     would create identical-range files groom re-merges forever;
-  *     see the NOTE in write());
-  *  3. rename each written file to the name-encoded index using the
+  *  1. Census: per model, the coarsest KSUID-timestamp prefix
+  *     (YYYYmm → YYYYmmddTHHMMSS) at which every prefix group holds
+  *     ≤ maxRowsPerFile rows, plus the model's row total — the
+  *     reference's "split on timestamp boundaries"
+  *     (partition.py:375-405), which disperses overlap repairs through
+  *     the timeline so grooming converges in ~O(log N) passes. Each
+  *     model gets its own prefix length.
+  *  2. Chunked write: shuffle by (model, prefix), sort rows by
+  *     decision_id within partitions, write one parquet file per
+  *     (model, prefix) chunk (deliberately NO maxRecordsPerFile
+  *     backstop — splitting a same-second overflow would create
+  *     identical-range files groom re-merges forever; see the NOTE in
+  *     writeModels()).
+  *  3. Rename each written file to the name-encoded index using the
   *     parquet FOOTER statistics (min/max decision_id, row count) —
   *     metadata-only reads, no data scan.
+  *
+  * Determinism contract: the input is evaluated once per pass, so both
+  * passes must see the same rows — a parquet scan, a merge over one,
+  * or a frame the caller staged. This is checked, not assumed: before
+  * anything is renamed into the store, each model's Σ footer row
+  * counts must equal its census total, else the write throws
+  * IllegalStateException and the store is left untouched.
   */
 object PartitionStore {
 
@@ -48,146 +58,132 @@ object PartitionStore {
   private val MinPrefix = 6
   private val MaxPrefix = 15
 
-  /** How write() materializes its input for the two passes it makes
-    * (prefix-length census, then the chunked write).
-    */
-  sealed trait Staging
-  object Staging {
-    /** Stage to transient parquet and read back — the default, correct
-      * for EXPENSIVE upstreams (gzip JSONL parse + merge): the
-      * upstream runs exactly once and never has to fit in memory.
-      */
-    case object Disk extends Staging
-    /** Memory persist (spill-safe) — for small bounded batches where a
-      * disk round-trip costs more than it saves. Serializes on the
-      * session-global CacheManager write lock, so AVOID under
-      * concurrent writers (the groom lock convoy, r13).
-      */
-    case object Memory extends Staging
-    /** No staging: run the upstream once per pass. ONLY for upstreams
-      * that are already cheap re-runnable columnar scans (a staged
-      * parquet tree, a bounded groom group) AND deterministic — the
-      * census pass and the write pass must see identical rows. Removes
-      * the extra write+read round-trip and the CacheManager lock
-      * entirely; measured on the 12-concurrent-group groom fan-out,
-      * where the per-group disk stage was most of each group's wall
-      * time (OPTIMIZATION_r14.md).
-      */
-    case object Recompute extends Staging
-  }
-
   /** Write a merged rewarded-decision DataFrame for ONE model into the
     * store at `baseDir`; returns the written keys (relative to baseDir).
+    * Any `model` column of `df` is replaced by `model`.
     */
   def write(df: DataFrame, baseDir: String, model: String,
-      maxRowsPerFile: Int = MaxRowsPerFile,
-      staging: Staging = Staging.Disk): Seq[String] = {
+      maxRowsPerFile: Int = MaxRowsPerFile): Seq[String] =
+    writeModels(df.withColumn(Schema.Model, lit(model)), baseDir, maxRowsPerFile)
+      .getOrElse(model, Seq.empty)
+
+  /** Write a merged rewarded-decision DataFrame carrying a `model`
+    * column into the store at `baseDir`, every model in one pass;
+    * returns model → written keys (relative to baseDir).
+    */
+  private[ingest] def writeModels(df: DataFrame, baseDir: String,
+      maxRowsPerFile: Int): Map[String, Seq[String]] = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(baseDir).getFileSystem(conf)
-
-    // Default (Disk) staging writes the batch to parquet ONCE: the
-    // upstream (typically gzip JSONL parse + merge — not prunable, not
-    // cheap) executes exactly one time, and both follow-up passes read
-    // the staged columnar files instead (the counts pass reads just
-    // the decision_id column). Disk staging instead of persist() means
-    // the batch never has to fit in executor memory — a 100× backfill
-    // costs 2× write I/O, not an OOM. LZ4 because the stage is
-    // transient: encode/decode speed is the cost that matters, not
-    // bytes on disk. See [[Staging]] for the Memory/Recompute modes.
-    val stageDir = s"$baseDir/_stage_${java.util.UUID.randomUUID()}"
     val tmpDir = s"$baseDir/_tmp_${java.util.UUID.randomUUID()}"
     // native codegen KSUID decode (limb arithmetic, no BigInteger/UDF);
     // throws on an invalid id exactly like PartitionFilename.timestampOf
-    val withTs = df.drop(Schema.Model)
-      .withColumn("_ts",
-        graft.functions.KsuidExpressions.ksuidBasicIso(col(Schema.DecisionId)))
-    val staged = staging match {
-      case Staging.Disk =>
-        graft.train.Trainer.step("store.stage")(
-          withTs.write.option("compression", "lz4").parquet(stageDir))
-        spark.read.parquet(stageDir)
-      case Staging.Memory => withTs.persist()
-      case Staging.Recompute => withTs
-    }
-    // cleanup in finally: a failed write must not leak the staged
-    // batch copy / partial tmp output under baseDir (they live outside
-    // rewarded_decisions/, so nothing would ever reclaim them) nor the
-    // persisted partitions in the stageToDisk=false path
-    try {
+    val withTs = df.withColumn("_ts",
+      graft.functions.KsuidExpressions.ksuidBasicIso(col(Schema.DecisionId)))
 
-    // Prefix-length choice: the coarsest resolution at which every
-    // prefix group holds ≤ maxRowsPerFile rows. Per-second counts —
-    // one row per distinct second — roll up over all candidate
-    // lengths in one distributed agg, so exactly
-    // (MaxPrefix−MinPrefix+1) rows reach the driver.
-    val levelMax = graft.train.Trainer.step("store.levelMax")(staged
-      .select(substring(col("_ts"), 1, MaxPrefix).as("_p"))
-      .groupBy("_p").count()
-      .select(explode(array((MinPrefix to MaxPrefix).map(i =>
-        struct(lit(i).as("len"), substring(col("_p"), 1, i).as("pfx"))): _*)).as("lp"),
+    // Census: per-second counts — one row per (model, distinct second)
+    // — roll up over all candidate lengths in one distributed agg, so
+    // exactly (MaxPrefix−MinPrefix+1) rows per model reach the driver.
+    // Every level partitions the same rows, so any level's Σ is the
+    // model's row total.
+    val census = withTs
+      .select(col(Schema.Model), substring(col("_ts"), 1, MaxPrefix).as("_p"))
+      .groupBy(Schema.Model, "_p").count()
+      .select(col(Schema.Model),
+        explode(array((MinPrefix to MaxPrefix).map(i =>
+          struct(lit(i).as("len"), substring(col("_p"), 1, i).as("pfx"))): _*)).as("lp"),
         col("count"))
-      .groupBy(col("lp.len").as("len"), col("lp.pfx"))
+      .groupBy(col(Schema.Model), col("lp.len").as("len"), col("lp.pfx"))
       .agg(sum("count").as("n"))
-      .groupBy("len").agg(max("n").as("maxN"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
-    val prefixLen = (MinPrefix to MaxPrefix)
-      .find(i => levelMax.getOrElse(i, 0L) <= maxRowsPerFile)
-      .getOrElse(MaxPrefix)
+      .groupBy(Schema.Model, "len").agg(max("n").as("maxN"), sum("n").as("rows"))
+      .collect()
+      .groupBy(_.getString(0))
+    // loud guard: a null/unvalidated model value would become a
+    // __HIVE_DEFAULT_PARTITION__ (or percent-escaped) directory below
+    // and a store subtree no legitimate listing ever finds
+    census.keys.foreach(m => require(Schema.isValidModelName(m),
+      s"PartitionStore.write: '$m' is not a valid model name " +
+        "(null or unvalidated model column in the input?)"))
+    if (census.isEmpty) return Map.empty
+    val expectedRows = census.map { case (m, rs) => m -> rs.head.getLong(3) }
+    val prefixLen = census.map { case (m, rs) =>
+      val levelMax = rs.map(r => r.getInt(1) -> r.getLong(2)).toMap
+      m -> (MinPrefix to MaxPrefix)
+        .find(i => levelMax.getOrElse(i, 0L) <= maxRowsPerFile)
+        .getOrElse(MaxPrefix)
+    }
 
-    // NOTE: deliberately no maxRecordsPerFile backstop. If >maxRows
-    // rows share one SECOND (prefix length 15 still over the cap),
-    // splitting them into several files would create same-second
-    // overlapping ranges that groom re-merges forever (livelock);
-    // the reference writes one oversized file in that case
-    // (partition.py:375-405 splits only down to 1s resolution) and
-    // so do we.
-    graft.train.Trainer.step("store.chunkWrite")(staged
-      .withColumn("_chunk", substring(col("_ts"), 1, prefixLen))
-      .drop("_ts")
-      .repartition(col("_chunk"))
-      .sortWithinPartitions("_chunk", Schema.DecisionId)
-      .write
-      .partitionBy("_chunk")
-      .option("compression", "zstd")
-      .parquet(tmpDir))
-
-    graft.train.Trainer.step("store.rename") {
-    val written = listFiles(fs, new Path(tmpDir)).filter(_.getName.endsWith(".parquet"))
-    // Footer reads and renames are independent metadata operations; a
-    // pooled pass keeps the driver tail O(files / pool) instead of
-    // O(files) — at backfill scale one batch can emit ~10⁵ chunks, and
-    // against object stores each footer read + rename is a round trip.
-    // Hadoop FileSystem instances are thread-safe for these calls.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(written.size, RenamePoolSize)))
+    // cleanup in finally: a failed write must not leak partial tmp
+    // output under baseDir (it lives outside rewarded_decisions/, so
+    // nothing would ever reclaim it)
     try {
-      written.map { file =>
-        pool.submit(new java.util.concurrent.Callable[String] {
-          override def call(): String = {
-            val (minId, maxId, rows) = footerStats(conf, file)
-            val key = PartitionFilename.key(model, minId, maxId, rows)
-            val dest = new Path(baseDir, key)
-            fs.mkdirs(dest.getParent)
-            if (!fs.rename(file, dest))
-              throw new java.io.IOException(s"rename $file -> $dest failed")
-            key
-          }
-        })
-      }.map { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      // NOTE: deliberately no maxRecordsPerFile backstop. If >maxRows
+      // rows share one SECOND (prefix length 15 still over the cap),
+      // splitting them into several files would create same-second
+      // overlapping ranges that groom re-merges forever (livelock);
+      // the reference writes one oversized file in that case
+      // (partition.py:375-405 splits only down to 1s resolution) and
+      // so do we.
+      // one hashed IN-set test per distinct length (≤ 10), not a
+      // per-row scan of a model → length map
+      val chunkLen = prefixLen.groupMap(_._2)(_._1).foldLeft(lit(null).cast("int")) {
+        case (other, (len, models)) =>
+          when(col(Schema.Model).isin(models.toSeq: _*), len).otherwise(other)
       }
-    } finally pool.shutdownNow()
-    }
-    } finally {
-      staging match {
-        case Staging.Disk => fs.delete(new Path(stageDir), true)
-        case Staging.Memory => staged.unpersist(blocking = false)
-        case Staging.Recompute => ()
-      }
-      fs.delete(new Path(tmpDir), true)
-    }
+      withTs
+        .withColumn("_chunk", col("_ts").substr(lit(1), chunkLen))
+        .drop("_ts")
+        .repartition(col(Schema.Model), col("_chunk"))
+        .sortWithinPartitions(Schema.Model, "_chunk", Schema.DecisionId)
+        .write
+        .partitionBy(Schema.Model, "_chunk")
+        .option("compression", "zstd")
+        .parquet(tmpDir)
+
+      // written files are tmpDir/model=<m>/_chunk=<p>/part-*.parquet;
+      // model names passed the guard above, so the directory value IS
+      // the model name
+      val written = listFiles(fs, new Path(tmpDir))
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getParent.getParent.getName.stripPrefix(s"${Schema.Model}=") -> f)
+      // Footer reads and renames are independent metadata operations; a
+      // pooled pass keeps the driver tail O(files / pool) instead of
+      // O(files) — at backfill scale one batch can emit ~10⁵ chunks, and
+      // against object stores each footer read + rename is a round trip.
+      // Hadoop FileSystem instances are thread-safe for these calls.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(written.size, RenamePoolSize)))
+      def pooled[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+        xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = f(x)
+        })).map { fut =>
+          try fut.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      try {
+        val stats = pooled(written) { case (m, file) => (m, file, footerStats(conf, file)) }
+        // the determinism check: the chunk pass must have written
+        // exactly the rows the census counted, or the prefix choice
+        // (and the caller's data) cannot be trusted — fail before
+        // anything reaches the store
+        val writtenRows = stats.groupMapReduce(_._1)(_._3._3)(_ + _)
+        (expectedRows.keySet ++ writtenRows.keySet).foreach { m =>
+          val (want, got) = (expectedRows.getOrElse(m, 0L), writtenRows.getOrElse(m, 0L))
+          if (want != got) throw new IllegalStateException(
+            s"PartitionStore.write: model '$m' census counted $want rows but the " +
+              s"chunk pass wrote $got — the input is not deterministic across passes")
+        }
+        pooled(stats) { case (m, file, (minId, maxId, rows)) =>
+          val key = PartitionFilename.key(m, minId, maxId, rows)
+          val dest = new Path(baseDir, key)
+          fs.mkdirs(dest.getParent)
+          if (!fs.rename(file, dest))
+            throw new java.io.IOException(s"rename $file -> $dest failed")
+          m -> key
+        }.groupMap(_._1)(_._2)
+      } finally pool.shutdownNow()
+    } finally fs.delete(new Path(tmpDir), true)
   }
 
   /** min/max decision_id + row count from the parquet footer only. */

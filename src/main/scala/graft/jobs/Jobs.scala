@@ -45,7 +45,7 @@ object IngestJob {
     val census = FirehoseRecords.invalidCensus(parsed)
     if (census.nonEmpty) println(s"invalid records: $census")
 
-    val merged = Merge.merge(parsed.flatMap(_.row).toDF()).persist()
+    val merged = Merge.merge(parsed.flatMap(_.row).toDF())
     Merge.writePerModel(merged, storeDir).foreach { case (model, keys) =>
       println(s"model $model: wrote ${keys.length} partition(s)")
     }

@@ -280,22 +280,21 @@ object RdrPipeline {
     val pm = warm.getOrElse {
       // phase 1: minRows = maxRows realizes the scarce-data override
       // (the explore sample only thins data the cap would drop anyway)
-      val phase1 = Trainer.step("load1")(Loader.load(spark, storeDir, model,
+      val phase1 = Loader.load(spark, storeDir, model,
         maxRows = maxRows, minRows = maxRows, sample = sample, seed = cfg.seed)
-        .withColumn(Schema.Model, lit(model)).persist())
+        .withColumn(Schema.Model, lit(model)).persist()
       try {
-        Trainer.step("tap1")(phaseTap(1, phase1))
+        phaseTap(1, phase1)
         val trained = Trainer.trainPropensity(phase1, cfg)
-        Trainer.step("ckptSave")(
-          ckptDir.foreach(d => ModelStore.saveCheckpoint(trained, d)))
+        ckptDir.foreach(d => ModelStore.saveCheckpoint(trained, d))
         trained
       } finally { phase1.unpersist(); () }
     }
-    val phase2 = Trainer.step("load2")(Loader.load(spark, storeDir, model,
+    val phase2 = Loader.load(spark, storeDir, model,
       maxRows = maxRows, sample = sample, seed = cfg.seed + 1)
-      .withColumn(Schema.Model, lit(model)).persist())
+      .withColumn(Schema.Model, lit(model)).persist()
     try {
-      Trainer.step("tap2")(phaseTap(2, phase2))
+      phaseTap(2, phase2)
       TrainedChain(pm, Trainer.trainDecision(phase2, pm, cfg), warm.isDefined)
     } finally { phase2.unpersist(); () }
   }
@@ -331,10 +330,7 @@ object RdrPipeline {
         try body finally timings(step) = (System.nanoTime() - t0) / 1e9
       }
       val ingested = timed("merge")(cachedMerged(spark, sfDir))
-      // Recompute staging: `ingested` is the materialized merged-cache
-      // parquet — already cheap re-runnable columnar input
-      timed("store_write")(PartitionStore.write(ingested, s"$stage/store", "events",
-        staging = PartitionStore.Staging.Recompute))
+      timed("store_write")(PartitionStore.write(ingested, s"$stage/store", "events"))
       val cfg = Trainer.TrainConfig(
         maxFeatures = 20, pruneMinStringCount = 0, maxTrees = 5,
         propensityTrees = 5, treeDepth = 4, seed = 42L)
@@ -523,15 +519,8 @@ object RdrPipeline {
     // store + groom build in staging; the census below reads the
     // PUBLISHED slot the oracle SQL also reads (see buildSlot)
     val slot = GateArtifacts.buildSlot(sfDir, "store") { stage =>
-      val merged = graft.train.Trainer.step("store.merged")(
-        cachedMerged(spark, sfDir))
-      // Recompute staging: `merged` is the materialized merged-cache
-      // parquet — already cheap re-runnable columnar input
-      graft.train.Trainer.step("store.write")(
-        PartitionStore.write(merged, stage, "events",
-          staging = PartitionStore.Staging.Recompute))
-      graft.train.Trainer.step("store.groom")(
-        Groom.groom(spark, stage, "events"))
+      PartitionStore.write(cachedMerged(spark, sfDir), stage, "events")
+      Groom.groom(spark, stage, "events")
     }
     val keys = PartitionStore.listKeys(spark, slot, "events")
     Groom.assertNoOverlappingKeys(keys)

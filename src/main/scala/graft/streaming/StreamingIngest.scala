@@ -53,9 +53,7 @@ object StreamingIngest {
       .flatMap(_.row)
     // no rows.isEmpty pre-check: that is a FULL extra parse of the
     // batch; an empty batch already degrades to a no-op below (the
-    // distinct-models collect returns nothing)
-    val merged = Merge.merge(rows.toDF()).persist()
-    try Merge.writePerModel(merged, storeDir)
-    finally merged.unpersist()
+    // store write's census finds no models)
+    Merge.writePerModel(Merge.merge(rows.toDF()), storeDir)
   }
 }

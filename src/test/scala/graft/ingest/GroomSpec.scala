@@ -184,15 +184,15 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
       "re-ingesting an identical batch must groom to the identical store")
   }
 
-  test("disjoint groups of one iteration compact concurrently (latch-proven)") {
+  /** Two clusters of overlapping files far apart in time, each window
+    * 2 × 4000 rows: folding the first window's 8000 rows plus any file
+    * of the second overruns the 10k adjacency budget, so the grouping
+    * breaks exactly at the window boundary → two disjoint groups in
+    * one iteration (at maxRowsPerFile = 4000).
+    */
+  private def writeTwoDisjointWindows(dir: String): Unit = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("groom_conc").toString
     val base = 1660000000L
-    // two clusters of overlapping files far apart in time, each window
-    // 2 × 4000 rows: folding the first window's 8000 rows plus any file
-    // of the second overruns the 10k adjacency budget, so the grouping
-    // breaks exactly at the window boundary → two disjoint groups in
-    // one iteration
     for (window <- Seq(0L, 100000L); b <- 0 until 2) {
       val rows = (0 until 4000).map { i =>
         val ts = base + window + ((i * 7 + b * 3) % 120)
@@ -201,6 +201,11 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
       }
       PartitionStore.write(Merge.merge(rows.toDF()), dir, "m", maxRowsPerFile = 4000)
     }
+  }
+
+  test("disjoint groups of one iteration compact concurrently (latch-proven)") {
+    val dir = java.nio.file.Files.createTempDirectory("groom_conc").toString
+    writeTwoDisjointWindows(dir)
     val groups = Groom.groupPartitionsToGroom(PartitionStore.listKeys(spark, dir, "m"))
     assert(groups.size >= 2, s"setup should produce >= 2 groups, got ${groups.size}")
 
@@ -220,6 +225,47 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     } finally Groom.compactionStartHook = () => ()
     assert(Groom.peakConcurrentCompactions >= groups.size)
     Groom.assertNoOverlappingKeys(PartitionStore.listKeys(spark, dir, "m"))
+  }
+
+  test("a failing group leaves the narrow shuffle width in place until its siblings drain") {
+    val dir = java.nio.file.Files.createTempDirectory("groom_fail").toString
+    writeTwoDisjointWindows(dir)
+    val groups = Groom.groupPartitionsToGroom(PartitionStore.listKeys(spark, dir, "m"))
+    assert(groups.size >= 2, s"setup should produce >= 2 groups, got ${groups.size}")
+    val key = "spark.sql.shuffle.partitions"
+    val wide = spark.conf.get(key)
+    val narrow = "2" // groom's width at maxRowsPerFile = 4000
+    assume(wide != narrow, s"session width $wide must differ from groom's")
+
+    // the first group to pass the latch fails; the second reads the
+    // width once the groom thread has left the failed Await and sits
+    // in the pool drain (its only timed wait)
+    val groomThread = Thread.currentThread()
+    val entered = new java.util.concurrent.CountDownLatch(groups.size)
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val role = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = new java.util.concurrent.atomic.AtomicReference[String]()
+    Groom.compactionStartHook = () => {
+      entered.countDown()
+      entered.await(2, java.util.concurrent.TimeUnit.MINUTES)
+      role.getAndIncrement() match {
+        case 0 =>
+          failed.countDown()
+          throw new RuntimeException("injected compaction failure")
+        case 1 =>
+          failed.await(2, java.util.concurrent.TimeUnit.MINUTES)
+          val deadline = System.nanoTime() + 30L * 1000000000L
+          while (groomThread.getState != Thread.State.TIMED_WAITING &&
+              System.nanoTime() < deadline) Thread.sleep(10)
+          seen.set(spark.conf.get(key))
+        case _ =>
+      }
+    }
+    val err = try intercept[RuntimeException](Groom.groom(spark, dir, "m", maxRowsPerFile = 4000))
+    finally Groom.compactionStartHook = () => ()
+    assert(err.getMessage == "injected compaction failure")
+    assert(seen.get == narrow, "a sibling still running saw the restored session width")
+    assert(spark.conf.get(key) == wide, "the session width is restored after the drain")
   }
 
   test("a firehose batch landing MID-groom is neither lost nor double-merged") {

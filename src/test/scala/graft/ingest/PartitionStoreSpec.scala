@@ -110,12 +110,18 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(tailSecs < 120, s"bulk write took ${tailSecs}s")
   }
 
+  /** A key without its uuid: its directory plus `{maxTs}-{minTs}-{count}`. */
+  private def shapeOf(key: String): String = {
+    val (d, f) = key.splitAt(key.lastIndexOf('/') + 1)
+    d + f.split('-').take(3).mkString("-")
+  }
+
   test("writePerModel: 50 models, ONE pass over the merged frame, per-model stores intact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pstore_models").toString
     val nModels = 50
     val perModel = 20
-    val rows = (0 until nModels).flatMap { mi =>
+    val small = (0 until nModels).flatMap { mi =>
       (0 until perModel).map { i =>
         RewardedDecisionRow(
           decision_id = Ksuid.deterministic(base + mi * 1000 + i, (mi * 100 + i).toLong),
@@ -124,6 +130,18 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
           rewards = Some("{}"), reward = Some(0.0), model = f"model-$mi%02d")
       }
     }
+    // one model dense enough to need sub-hour chunks (12k rows inside
+    // one hour) next to one sparse enough for month chunks (300 rows over
+    // ~5 months): each must get its own prefix length in the one write
+    val dense = (0 until 12000).map { i =>
+      RewardedDecisionRow(Ksuid.deterministic(base + i * 3600L / 12000, 100000L + i),
+        Some(s"""{"d":$i}"""), Some("{}"), Some(2.0), None, Some("{}"), Some(0.0), "dense")
+    }
+    val sparse = (0 until 300).map { i =>
+      RewardedDecisionRow(Ksuid.deterministic(base + i * 45000L, 200000L + i),
+        Some(s"""{"s":$i}"""), Some("{}"), Some(2.0), None, Some("{}"), Some(0.0), "sparse")
+    }
+    val rows = small ++ dense ++ sparse
     // count how many times the merged frame's rows are EVALUATED: the
     // single-pass contract means upstream executes once, not once per
     // model. (Accumulators over-count on task retries; local mode has
@@ -136,7 +154,8 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     val merged = rows.toDF().withColumn(Schema.Item, counted(col(Schema.Item)))
     val written = Merge.writePerModel(merged, dir)
 
-    assert(written.keySet == (0 until nModels).map(mi => f"model-$mi%02d").toSet)
+    assert(written.keySet ==
+      (0 until nModels).map(mi => f"model-$mi%02d").toSet ++ Set("dense", "sparse"))
     assert(evals.value <= 2L * rows.size,
       s"merged frame evaluated ${evals.value} times for ${rows.size} rows — not one pass")
     // every model's store round-trips its own rows, nobody else's
@@ -147,8 +166,44 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
       assert(back.select(Schema.Item).as[String].collect()
         .forall(_.contains(s""""m":$mi,""")), m)
     }
+    // the mixed-density pair: same files (bounds, row counts) as a
+    // one-model write of each alone
+    val alone = java.nio.file.Files.createTempDirectory("pstore_alone").toString
+    Seq("dense" -> dense, "sparse" -> sparse, "model-07" -> small.filter(_.model == "model-07"))
+      .foreach { case (m, rs) =>
+        val solo = PartitionStore.write(rs.toDF(), alone, m)
+        assert(written(m).map(shapeOf).sorted == solo.map(shapeOf).sorted, m)
+        assert(PartitionStore.listKeys(spark, dir, m).map(shapeOf) ==
+          PartitionStore.listKeys(spark, alone, m).map(shapeOf), m)
+      }
+    // dense needs sub-hour chunks; at that length sparse would be 300 files
+    assert(written("dense").length > 2, written("dense"))
+    assert(written("sparse").length <= 6, written("sparse"))
     // the transient per-model staging tree is gone
     val leftovers = new java.io.File(dir).list().toSeq.filter(_.startsWith("_permodel_stage_"))
+    assert(leftovers.isEmpty, leftovers.toString)
+    // a null model is refused before anything reaches the store
+    val refused = java.nio.file.Files.createTempDirectory("pstore_null_model").toString
+    intercept[IllegalArgumentException](Merge.writePerModel(
+      sparse.toDF().withColumn(Schema.Model, lit(null).cast("string")), refused))
+    assert(!new java.io.File(refused, "rewarded_decisions").exists())
+  }
+
+  test("an upstream that changes between write()'s two passes fails loudly, store untouched") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("pstore_nondet").toString
+    val n = 300
+    // every evaluation of the input draws fresh counter values, so the
+    // census pass keeps all n rows and the chunk pass none of them
+    PartitionStoreSpec.draws.set(0L)
+    val draw = udf((_: String) => PartitionStoreSpec.draws.incrementAndGet())
+      .asNondeterministic()
+    val shifting = syntheticRows(n, 3600).toDF()
+      .filter(draw(col(Schema.DecisionId)) <= n)
+    val err = intercept[IllegalStateException](PartitionStore.write(shifting, dir, "m"))
+    assert(err.getMessage.contains("not deterministic"), err.getMessage)
+    assert(PartitionStore.listKeys(spark, dir, "m").isEmpty)
+    val leftovers = new java.io.File(dir).list().toSeq.filter(_.startsWith("_tmp_"))
     assert(leftovers.isEmpty, leftovers.toString)
   }
 
@@ -182,4 +237,11 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](
       PartitionStore.lookupDecision(spark, dir, "m", "not-a-ksuid"))
   }
+}
+
+object PartitionStoreSpec {
+  /** JVM-wide counter for the nondeterministic-upstream case: a UDF
+    * closure is serialized per task, so only a static survives it.
+    */
+  val draws = new java.util.concurrent.atomic.AtomicLong(0L)
 }
