@@ -3,13 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench", Sessions.cpus)
     // one-time JVM warmup (codegen compiler, parquet reader, shuffle
     // machinery) so the alphabetically-first query doesn't absorb
     // ~3-4 s of classloading that belongs to no query
@@ -56,17 +50,10 @@ object Bench {
     // swung 2-4× round to round from exactly this). A setup task only
     // runs when one of its consumer gates is selected.
     val selectedNames = selected.map(_._1).toSet
-    val setupTasks: Seq[(String, Set[String], () => Unit)] = Seq(
-      ("setup_dedup_pairs", graft.queries.ExtOps.derivedConsumers,
-        () => graft.queries.ExtOps.warmDerived(spark, sfDir)),
-      ("setup_rdr_merged", graft.pipeline.RdrPipeline.derivedConsumers,
-        () => graft.pipeline.RdrPipeline.warmDerived(spark, sfDir)),
-      ("setup_zonemap_table", graft.queries.SearchOps.derivedConsumers,
-        () => graft.queries.SearchOps.warmDerived(spark, sfDir)))
-    val setup = setupTasks.collect {
-      case (name, consumers, f) if consumers.exists(selectedNames) =>
+    val setup = SparkEntry.setupTasks.collect {
+      case SparkEntry.SetupTask(name, consumers, warm) if consumers.exists(selectedNames) =>
         val t =
-          try timeIt(f())
+          try timeIt(warm(spark, sfDir))
           catch {
             case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: $e"); -1.0

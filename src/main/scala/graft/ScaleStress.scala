@@ -46,14 +46,7 @@ object ScaleStress {
     val root = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIR", "target/scalestress")
     val x = sys.env.getOrElse("SPARK_GRAFT_STRESS_X", "10").toInt
     val xl = sys.env.getOrElse("SPARK_GRAFT_STRESS_XL", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-scalestress", Sessions.cpus)
 
     val xDir = s"$root/x$x"
     val xlDir = s"$root/xl$xl"

@@ -2,7 +2,6 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
-import graft.functions.Functions
 import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
 import graft.train.{Loader, ModelStore, Trainer}
 
@@ -12,22 +11,9 @@ import graft.train.{Loader, ModelStore, Trainer}
   * `sbt "runMain graft.jobs.<Job>"`.
   */
 object Jobs {
-  private[jobs] def session(app: String): SparkSession = {
-    val builder = SparkSession.builder()
-      .appName(app)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-    // precedence: explicit env > spark-submit's --master > local dev
-    // fallback (never override a cluster manager the submitter chose)
-    val s = (sys.env.get("SPARK_GRAFT_MASTER") match {
-      case Some(m) => builder.master(m)
-      case None if sys.props.contains("spark.master") => builder
-      case None => builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    }).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Functions.register(s)
-    s
-  }
+  private[jobs] def session(app: String): SparkSession =
+    graft.Sessions.local(app,
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(32))
 }
 
 /** IngestJob <storeDir> <jsonl-or-gz-file...> — parse, validate,

@@ -491,17 +491,6 @@ object Dedup {
       val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (spark.createDataFrame(rdd, df.schema), rdd)
     }
-    // round-by-round wall times to stderr when SPARK_GRAFT_CC_TIMINGS=1
-    // (profiling aid; zero overhead off)
-    val ccTimings = sys.env.get("SPARK_GRAFT_CC_TIMINGS").contains("1")
-    def roundTimed[A](name: String)(body: => A): A =
-      if (!ccTimings) body
-      else {
-        val t0 = System.nanoTime()
-        try body finally System.err.println(String.format(
-          java.util.Locale.ROOT, "[cc-timing] %s %.2fs",
-          name, Double.box((System.nanoTime() - t0) / 1e9)))
-      }
     var (labels, labelsRdd) = pin(edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id")))
     var converged = false
@@ -530,8 +519,7 @@ object Dedup {
           least(col("_prop"), coalesce(col("_plbl"), col("_prop"))).as("cluster"),
           (least(col("_prop"), coalesce(col("_plbl"), col("_prop"))) < col("_old"))
             .as("_changed")))
-      val changed = roundTimed(s"round $iter")(
-        next.filter(col("_changed")).limit(1).count())
+      val changed = next.filter(col("_changed")).limit(1).count()
       // the previous snapshot is no longer referenced — release it
       labelsRdd.unpersist(blocking = false)
       labels = next.select("id", "cluster")

@@ -253,14 +253,16 @@ object ExtOps {
         require(maxFanin > cap,
           s"q_dedup_capped: no over-cap bucket (max fan-in $maxFanin, " +
             s"cap $cap) — the star+chain path never engaged")
-        val verified = Dedup.exactVerify(
-          signed, Dedup.cappedCandidatePairs(signed, "doc_id", cap),
-          "doc_id", 0.9,
+        // handOff-persisted (Caching contract): released as soon as
+        // `capped` is materialized, which is all that reads it
+        val cands = Dedup.cappedCandidatePairs(signed, "doc_id", cap)
+        val verified = Dedup.exactVerify(signed, cands, "doc_id", 0.9,
           // capped candidates are clique-precision with short hashed
           // word sets — direct intersection measured 0.9 s vs 3.0 s
           // for the est-gated path, identical pairs (Dedup doc)
           estimateGate = false)
         val capped = Dedup.duplicateClusters(verified).persist()
+        val nCap = try capped.count() finally cands.unpersist(blocking = false)
         val uncapped = cachedClusters(s, d)
         val joined = capped.select(col("id"), col("cluster").as("_cc"))
           .join(uncapped.select(col("id"), col("cluster").as("_uc")), Seq("id"))
@@ -270,7 +272,6 @@ object ExtOps {
           s"q_dedup_capped: $spanning capped cluster(s) span multiple " +
             "uncapped clusters — refinement violated (capped candidates " +
             "must be a subset of uncapped candidates)")
-        val nCap = capped.count()
         val nUnc = uncapped.count()
         require(nCap * 100 >= nUnc * 95,
           s"q_dedup_capped: capped path clustered only $nCap of $nUnc " +

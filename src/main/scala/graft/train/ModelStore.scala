@@ -48,16 +48,6 @@ object ModelStore {
     if (hadOld) { f.delete(old, true); () }
   }
 
-  private def writeString(dir: String, name: String, content: String): Unit = {
-    val f = fs(dir)
-    f.mkdirs(new HPath(dir))
-    val out = f.create(new HPath(dir, name), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readString(dir: String, name: String): Option[String] =
-    readBytes(dir, name).map(new String(_, "UTF-8"))
-
   private def writeBytes(dir: String, name: String, content: Array[Byte]): Unit = {
     val f = fs(dir)
     f.mkdirs(new HPath(dir))
@@ -97,88 +87,100 @@ object ModelStore {
     CanonicalJson.dumps(root)
   }
 
+  private val MetadataFile = "metadata.json"
+
+  /** Stage a WHOLE artifact (whatever `writeBody` puts in the stage dir,
+    * plus `metadata`) in a side dir, then swap it in at `dir`. Writing
+    * the pieces in place would let a crash between the model save and
+    * the metadata write pair a NEW booster with yesterday's still-valid
+    * metadata — loads would then encode with the wrong feature/string
+    * mapping (and de-normalize with the wrong mean/std), silently. Every
+    * crash window of the swap leaves the old artifact or none (a missing
+    * checkpoint → retrain, which is always safe).
+    */
+  private def stageThenSwap(dir: String, metadata: String)(writeBody: String => Unit): Unit = {
+    val root = new HPath(dir)
+    val tmp = new HPath(root.getParent, s".${root.getName}.tmp-${java.util.UUID.randomUUID()}")
+    writeBody(tmp.toString)
+    writeBytes(tmp.toString, MetadataFile, metadata.getBytes("UTF-8"))
+    swapIn(fs(dir), tmp, root)
+  }
+
+  /** The metadata fields every artifact carries. */
+  private final case class Metadata(json: com.fasterxml.jackson.databind.JsonNode,
+      featureNames: Seq[String], stringTables: Map[String, Seq[Long]]) {
+    def long(field: String): Long = json.get(field).longValue()
+    def double(field: String): Double = json.get(field).doubleValue()
+  }
+
+  /** Read `dir`'s metadata.json and `load` the artifact from it: None
+    * when there is no metadata, or when it or the model fails to load.
+    * Filesystem resolution and the MLlib load go through the active
+    * session, so the caller's session is bound first — a caller passing
+    * a dedicated session must not silently get a different one.
+    */
+  private def loadArtifact[A](spark: SparkSession, dir: String)(
+      load: Metadata => Option[A]): Option[A] = {
+    SparkSession.setActiveSession(spark)
+    readBytes(dir, MetadataFile).flatMap { bytes =>
+      try {
+        val meta = CanonicalJson.parse(new String(bytes, "UTF-8"))
+        val names = (0 until meta.get("feature_names").size())
+          .map(meta.get("feature_names").get(_).textValue())
+        val tablesNode = meta.get("string_tables")
+        val tables = scala.jdk.CollectionConverters.IteratorHasAsScala(tablesNode.fieldNames())
+          .asScala.map { f =>
+            val arr = tablesNode.get(f)
+            f -> (0 until arr.size()).map(arr.get(_).longValue()).toSeq
+          }.toMap
+        load(Metadata(meta, names, tables))
+      } catch { case _: Exception => None }
+    }
+  }
+
   // ---- phase-1 checkpoint (M4) -------------------------------------------
 
-  def saveCheckpoint(pm: PropensityModel, dir: String): Unit = {
-    // stage the WHOLE checkpoint (model + metadata) in a side dir, then
-    // swap it in: writing the pieces in place would let a crash between
-    // the model save and the metadata write pair a NEW booster with
-    // yesterday's still-valid metadata — loadCheckpoint would then
-    // encode with the wrong feature/string mapping and silently poison
-    // phase-2 propensities. The crash windows of the swap leave either
-    // the old checkpoint or none (loadCheckpoint → None → retrain,
-    // which is always safe: the checkpoint is an optimization).
-    val root = new HPath(dir)
-    val f = fs(dir)
-    val tmp = new HPath(root.getParent, s".${root.getName}.tmp-${java.util.UUID.randomUUID()}")
-    pm.model.write.overwrite().save(s"$tmp/phase1_model")
-    writeString(tmp.toString, "metadata.json",
-      metadataJson(pm.featureNames, pm.stringTables, pm.modelSeed,
-        Map("mean_item_count" -> pm.meanItemCount)))
-    swapIn(f, tmp, root)
-  }
+  def saveCheckpoint(pm: PropensityModel, dir: String): Unit =
+    stageThenSwap(dir, metadataJson(pm.featureNames, pm.stringTables, pm.modelSeed,
+        Map("mean_item_count" -> pm.meanItemCount))) { tmp =>
+      pm.model.write.overwrite().save(s"$tmp/phase1_model")
+    }
 
   /** Reuse the phase-1 model when version matches and it is younger
     * than maxAgeSeconds (checkpoint.py:26-110).
     */
   def loadCheckpoint(spark: SparkSession, dir: String,
       maxAgeSeconds: Long = 24 * 3600,
-      now: java.time.Instant = java.time.Instant.now()): Option[PropensityModel] = {
-    // make the parameter REAL: filesystem resolution and the MLlib
-    // model load below go through the active session, so bind the
-    // caller's session first — a caller passing a dedicated session
-    // must not silently get a different one
-    SparkSession.setActiveSession(spark)
-    val metaText = readString(dir, "metadata.json").getOrElse(return None)
-    try {
-      val meta = CanonicalJson.parse(metaText)
-      if (meta.get("version").textValue() != Version) return None
-      val created = java.time.Instant.parse(meta.get("created_at").textValue())
-      if (java.time.Duration.between(created, now).getSeconds > maxAgeSeconds) return None
-      val names = (0 until meta.get("feature_names").size())
-        .map(meta.get("feature_names").get(_).textValue())
-      val tablesNode = meta.get("string_tables")
-      val tables = scala.jdk.CollectionConverters.IteratorHasAsScala(tablesNode.fieldNames())
-        .asScala.map { f =>
-          val arr = tablesNode.get(f)
-          f -> (0 until arr.size()).map(arr.get(_).longValue()).toSeq
-        }.toMap
-      val model = GBTClassificationModel.load(s"$dir/phase1_model")
-      Some(PropensityModel(model, names, tables,
-        meta.get("model_seed").longValue(), meta.get("mean_item_count").doubleValue()))
-    } catch { case _: Exception => None }
-  }
+      now: java.time.Instant = java.time.Instant.now()): Option[PropensityModel] =
+    loadArtifact(spark, dir) { meta =>
+      val created = java.time.Instant.parse(meta.json.get("created_at").textValue())
+      if (meta.json.get("version").textValue() != Version ||
+          java.time.Duration.between(created, now).getSeconds > maxAgeSeconds) None
+      else Some(PropensityModel(GBTClassificationModel.load(s"$dir/phase1_model"),
+        meta.featureNames, meta.stringTables, meta.long("model_seed"),
+        meta.double("mean_item_count")))
+    }
 
   // ---- final model publish (S9/S10 layout) -------------------------------
 
   def saveDecisionModel(dm: DecisionModel, dir: String): Unit = {
-    // same stage-then-swap as saveCheckpoint (move-aside via swapIn): writing model and
-    // metadata in place lets a crash between the two pair a NEW
-    // booster with stale metadata — loads would then encode with the
-    // wrong string tables and de-normalize with the wrong mean/std,
-    // silently. Every crash window of the swap leaves the old artifact
-    // or none.
-    val root = new HPath(dir)
-    val f = fs(dir)
-    val tmp = new HPath(root.getParent, s".${root.getName}.tmp-${java.util.UUID.randomUUID()}")
-    dm.model.write.overwrite().save(s"$tmp/model")
-    writeString(tmp.toString, "metadata.json",
-      metadataJson(dm.featureNames, dm.stringTables, dm.modelSeed,
-        Map("reward_mean" -> dm.rewardMean, "reward_std" -> dm.rewardStd)))
-    // native `.xgb` booster (XGBoost4J probe hit at train time): part
-    // of the artifact dir, so publish/unpack tar it automatically
-    dm.nativeBooster.foreach(b =>
-      writeBytes(tmp.toString, Boosters.NativeBoosterFile, b))
-    // CoreML `.mlmodel` (model_utils.py:275-321): the tree ensemble +
-    // the same metadata JSON in the userDefined dictionary, so Apple-
-    // device consumers get the artifact the reference publishes. See
-    // CoreMLExport for the (documented) offline validation boundary.
-    writeBytes(tmp.toString, CoreMLExport.MlModelFile,
-      CoreMLExport.toMlModelBytes(dm.model, dm.featureNames,
-        Map("graft.metadata.json" ->
-          metadataJson(dm.featureNames, dm.stringTables, dm.modelSeed,
-            Map("reward_mean" -> dm.rewardMean, "reward_std" -> dm.rewardStd)))))
-    swapIn(f, tmp, root)
+    // built ONCE: metadata.json and the copy inside the .mlmodel must
+    // agree byte for byte (same created_at)
+    val metadata = metadataJson(dm.featureNames, dm.stringTables, dm.modelSeed,
+      Map("reward_mean" -> dm.rewardMean, "reward_std" -> dm.rewardStd))
+    stageThenSwap(dir, metadata) { tmp =>
+      dm.model.write.overwrite().save(s"$tmp/model")
+      // native `.xgb` booster (XGBoost4J probe hit at train time): part
+      // of the artifact dir, so publish/unpack tar it automatically
+      dm.nativeBooster.foreach(b => writeBytes(tmp, Boosters.NativeBoosterFile, b))
+      // CoreML `.mlmodel` (model_utils.py:275-321): the tree ensemble +
+      // the same metadata JSON in the userDefined dictionary, so Apple-
+      // device consumers get the artifact the reference publishes. See
+      // CoreMLExport for the (documented) offline validation boundary.
+      writeBytes(tmp, CoreMLExport.MlModelFile,
+        CoreMLExport.toMlModelBytes(dm.model, dm.featureNames,
+          Map("graft.metadata.json" -> metadata)))
+    }
   }
 
   // ---- publish layout (unpack_models.py:62-97) ---------------------------
@@ -317,23 +319,11 @@ object ModelStore {
     true
   }
 
-  def loadDecisionModel(spark: SparkSession, dir: String): Option[DecisionModel] = {
-    val metaText = readString(dir, "metadata.json").getOrElse(return None)
-    try {
-      val meta = CanonicalJson.parse(metaText)
-      val names = (0 until meta.get("feature_names").size())
-        .map(meta.get("feature_names").get(_).textValue())
-      val tablesNode = meta.get("string_tables")
-      val tables = scala.jdk.CollectionConverters.IteratorHasAsScala(tablesNode.fieldNames())
-        .asScala.map { f =>
-          val arr = tablesNode.get(f)
-          f -> (0 until arr.size()).map(arr.get(_).longValue()).toSeq
-        }.toMap
+  def loadDecisionModel(spark: SparkSession, dir: String): Option[DecisionModel] =
+    loadArtifact(spark, dir) { meta =>
       Some(DecisionModel(
-        GBTRegressionModel.load(s"$dir/model"), names, tables,
-        meta.get("model_seed").longValue(),
-        meta.get("reward_mean").doubleValue(), meta.get("reward_std").doubleValue(),
+        GBTRegressionModel.load(s"$dir/model"), meta.featureNames, meta.stringTables,
+        meta.long("model_seed"), meta.double("reward_mean"), meta.double("reward_std"),
         readBytes(dir, Boosters.NativeBoosterFile)))
-    } catch { case _: Exception => None }
-  }
+    }
 }

@@ -412,6 +412,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val kept = Dedup.semDedup(vecs, "vec_id", "v", "cl", 0.99)
     kept.collect()
     kept.unpersist(blocking = true)
+    val signed = Dedup.withSignature(docs, "text")
+    val cands = Dedup.cappedCandidatePairs(signed, "doc_id", 2)
+    Dedup.exactVerify(signed, cands, "doc_id", 0.5).collect()
+    cands.unpersist(blocking = true)
     val leftover = spark.sparkContext.getPersistentRDDs
     assert(leftover.isEmpty, leftover.values.map(_.toString).toSeq)
   }

@@ -1,7 +1,10 @@
 #!/usr/bin/env bash
-# Run a graft main (graft.Verify, graft.Bench, graft.ScaleStress, ...)
-# directly on the compiled classes + /opt/spark/jars, outside sbt.
+# Run a graft main (graft.Verify, graft.Bench, graft.Profile,
+# graft.ScaleStress, ...) directly on the compiled classes +
+# /opt/spark/jars, outside sbt. Session settings (UI off, UTC) come
+# from graft.Sessions.
 # Usage: tools/run_main.sh graft.ScaleStress all
+#        tools/run_main.sh graft.Profile q_scan_filter --passes 2 --plans /tmp/plans
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -14,5 +17,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
