@@ -105,7 +105,7 @@ object Profile {
     * the jobs return: a sentinel job, submitted after every job of the
     * group, is seen to end only once all their events are in.
     */
-  private def counted(spark: SparkSession, group: String): (Int, Int, Int) = {
+  private[graft] def counted(spark: SparkSession, group: String): (Int, Int, Int) = {
     val sc = spark.sparkContext
     val tracker = sc.statusTracker
     val sentinel = s"$group-sentinel"

@@ -381,16 +381,14 @@ object ScaleStress {
     // still fans out. The stand-in lake table is the x-dir documents
     // rewritten as 2×cores files (a real table has many row groups; a
     // scan partition per file needs the small-file split floor too).
-    graft.core.ConfScope.withConf(spark, "spark.sql.files.maxPartitionBytes",
-      (1L << 20).toString) {
-    graft.core.ConfScope.withConf(spark, "spark.sql.files.openCostInBytes",
-      (1L << 20).toString) {
+    Sessions.isolated(spark, "spark.sql.files.maxPartitionBytes" -> (1L << 20).toString,
+        "spark.sql.files.openCostInBytes" -> (1L << 20).toString) { small =>
       val manyDir = s"$xDir/documents_manyfiles.parquet"
       if (!new java.io.File(manyDir).exists())
-        spark.read.parquet(s"$xDir/documents.parquet")
+        small.read.parquet(s"$xDir/documents.parquet")
           .repartition(2 * spark.sparkContext.defaultParallelism)
           .write.mode("overwrite").parquet(manyDir)
-      val multi = spark.read.parquet(manyDir)
+      val multi = small.read.parquet(manyDir)
       val parts = multi.rdd.getNumPartitions
       val want = spark.sparkContext.defaultParallelism
       require(parts >= want,
@@ -409,7 +407,7 @@ object ScaleStress {
         s"fanOut exchanges=$exchanges (must be 0) |")
       require(exchanges == 0,
         s"fanOut added $exchanges exchange(s) on a pre-parallel input")
-    }}
+    }
     // the single-file fixture table must STILL fan out
     val single = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val fannedSingle = graft.queries.Tables.fanOut(single)
@@ -599,36 +597,25 @@ object ScaleStress {
     graft.jobs.AnalyzeJob.run(spark, s"$work/dim", s"$work/dim_stats")
     val maxId = ev.agg(max("event_id")).head().getLong(0)
     val cut = maxId / 10
-    val prior = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prior ++ Seq(
-      graft.plans.ZoneSkipRule(spark), graft.plans.StatsBroadcastRule(spark))
-    val priorThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val totalFiles = ZoneMap.dataFiles(spark, s"$work/probe").length
-      val t0 = System.nanoTime()
-      val df = spark.read.parquet(s"$work/probe")
+      def census(r: SparkSession) = r.read.parquet(s"$work/probe")
         .filter(col("event_id") <= cut)
-        .join(spark.read.parquet(s"$work/dim"), Seq("event_type"))
+        .join(r.read.parquet(s"$work/dim"), Seq("event_type"))
         .agg(count(lit(1)).as("n"),
           sum("n_type").cast("long").as("weighted"))
-      val row = df.collect().head
-      val wall = (System.nanoTime() - t0) / 1e9
-      def walkScan(p: org.apache.spark.sql.execution.SparkPlan): (Int, Boolean) = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walkScan(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walkScan(q.plan)
-        case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-          val cs = b.children.map(walkScan)
-          (cs.map(_._1).sum, true)
-        case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-          (sc.relation.location.inputFiles.length, false)
-        case other =>
-          val cs = other.children.map(walkScan)
-          (cs.map(_._1).sum, cs.exists(_._2))
+      // both rules on, static broadcast off, on a clone of the session
+      val (row, wall, scanned, hasBroadcast) = Sessions.isolatedWithRules(spark,
+          r => Seq(graft.plans.ZoneSkipRule(r), graft.plans.StatsBroadcastRule(r)),
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") { r =>
+        val t0 = System.nanoTime()
+        val df = census(r)
+        val row = df.collect().head
+        val wall = (System.nanoTime() - t0) / 1e9
+        (row, wall, graft.plans.PlanWalk.scannedFiles(df),
+          graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan)
+            .exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]))
       }
-      val (scanned, hasBroadcast) = walkScan(df.queryExecution.executedPlan)
       println(f"| rules interplay @x$x | probe kept $scanned/$totalFiles files, " +
         f"broadcast=$hasBroadcast n=${row.getLong(0)} wall=$wall%.1fs |")
       require(hasBroadcast,
@@ -638,19 +625,10 @@ object ScaleStress {
         s"ZoneSkipRule kept $scanned of $totalFiles probe files on a 10% " +
           "id-range filter — zone pruning did not engage on the probe side")
       // ground truth with both rules off: identical answer
-      spark.experimental.extraOptimizations = prior
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorThresh)
-      val want = spark.read.parquet(s"$work/probe")
-        .filter(col("event_id") <= cut)
-        .join(spark.read.parquet(s"$work/dim"), Seq("event_type"))
-        .agg(count(lit(1)), sum("n_type").cast("long")).head()
+      val want = census(spark).head()
       require(row.getLong(0) == want.getLong(0) && row.getLong(1) == want.getLong(1),
         s"rules changed the answer: ($row) vs ($want)")
-    } finally {
-      spark.experimental.extraOptimizations = prior
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorThresh)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
 
     if (sel("bloom")) {
@@ -681,35 +659,22 @@ object ScaleStress {
     val probeIds = evB.filter(col("event_id") % 997 === 7)
       .orderBy("event_id").limit(3)
       .select("event_id").collect().map(_.getLong(0)).toSeq
-    val priorB = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = priorB :+ graft.plans.ZoneSkipRule(spark)
     try {
       val totalB = ZoneMap.dataFiles(spark, s"$workB/t").length
-      def scanFilesB(df: DataFrame): Int = {
-        def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-          case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-            sc.relation.location.inputFiles.length
-          case other => other.children.map(walk).sum
+      // the point lookup through ZoneSkipRule on a clone of the session,
+      // blooms on, then off: (hits, seconds, files scanned)
+      def probe(bloom: Boolean): (Long, Double, Int) =
+        Sessions.isolatedWithRules(spark, r => Seq(graft.plans.ZoneSkipRule(r)),
+            "spark.graft.zonemap.bloom" -> bloom.toString) { r =>
+          val t = System.nanoTime()
+          val q = r.read.parquet(s"$workB/t")
+            .filter(col("event_id").isin(probeIds.map(java.lang.Long.valueOf): _*))
+            .agg(count(lit(1)).as("n"))
+          val n = q.collect().head.getLong(0)
+          (n, (System.nanoTime() - t) / 1e9, graft.plans.PlanWalk.scannedFiles(q))
         }
-        walk(df.queryExecution.executedPlan)
-      }
-      val tB1 = System.nanoTime()
-      val q = spark.read.parquet(s"$workB/t")
-        .filter(col("event_id").isin(probeIds.map(java.lang.Long.valueOf): _*))
-        .agg(count(lit(1)).as("n"))
-      val nHit = q.collect().head.getLong(0)
-      val probeSec = (System.nanoTime() - tB1) / 1e9
-      val scannedB = scanFilesB(q)
-      spark.conf.set("spark.graft.zonemap.bloom", "false")
-      val qOff = spark.read.parquet(s"$workB/t")
-        .filter(col("event_id").isin(probeIds.map(java.lang.Long.valueOf): _*))
-        .agg(count(lit(1)).as("n"))
-      qOff.collect()
-      val scannedOff = scanFilesB(qOff)
-      spark.conf.unset("spark.graft.zonemap.bloom")
+      val (nHit, probeSec, scannedB) = probe(bloom = true)
+      val scannedOff = probe(bloom = false)._3
       println(f"| bloom skipping @x$x | rows=$rowsB files=$totalB " +
         f"blooms=$nBlooms(256KiB) build=$bloomBuildSec%.1fs " +
         f"probe: kept $scannedB/$totalB (ranges-only $scannedOff) " +
@@ -752,10 +717,7 @@ object ScaleStress {
       require(qc.values(0) >= edges.getDouble(0) && qc.values(0) <= edges.getDouble(1),
         s"KLL median ${qc.values(0)} outside the ±2ε window at x10")
       require(qc.n == rowsB, "KLL n must be the exact row count")
-    } finally {
-      spark.experimental.extraOptimizations = priorB
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workB))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workB))
     }
 
     if (sel("annrecall")) {

@@ -170,9 +170,10 @@ object Groom {
   private val peakCompactions = new java.util.concurrent.atomic.AtomicInteger(0)
   def resetConcurrencyProbe(): Unit = peakCompactions.set(0)
   def peakConcurrentCompactions: Int = peakCompactions.get()
-  // test seam: runs on entry to every compactGroup (e.g. a latch that
-  // only opens once all groups of an iteration have started)
-  private[ingest] var compactionStartHook: () => Unit = () => ()
+  // test seam: runs on entry to every compactGroup with the session it
+  // compacts on (e.g. a latch that only opens once all groups of an
+  // iteration have started)
+  private[ingest] var compactionStartHook: SparkSession => Unit = _ => ()
 
   def compactGroup(spark: SparkSession, baseDir: String, model: String,
       keys: Seq[String], maxRowsPerFile: Int = PartitionStore.MaxRowsPerFile): Seq[String] = {
@@ -180,7 +181,7 @@ object Groom {
     val active = activeCompactions.incrementAndGet()
     peakCompactions.getAndAccumulate(active, math.max)
     try {
-      compactionStartHook()
+      compactionStartHook(spark)
       compactGroupImpl(spark, baseDir, model, keys, maxRowsPerFile)
     } finally activeCompactions.decrementAndGet()
   }
@@ -251,20 +252,24 @@ object Groom {
       // tasks per stage × 3 jobs × every concurrent group, and the
       // scheduler convoy tripled each group's wall time (measured:
       // group write 1.85 s concurrent vs 0.6 s alone; see
-      // OPTIMIZATION_r14.md). The width is set once around the fan-out
-      // AND its drain (session conf is global and the group threads
-      // inherit it): a failed group must not restore the session width
-      // while its siblings are still planning stages.
-      graft.core.ConfScope.withShufflePartitions(spark,
-        math.max(2, 2 * maxRowsPerFile / PartitionStore.MaxRowsPerFile)) {
+      // OPTIMIZATION_r14.md). Every compaction of the fan-out runs on
+      // one clone of the caller's session at that width, so the
+      // caller's session never changes, not even while a failed
+      // group's siblings drain.
+      graft.Sessions.isolated(spark, "spark.sql.shuffle.partitions" ->
+          math.max(2, 2 * maxRowsPerFile / PartitionStore.MaxRowsPerFile).toString) { narrow =>
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.max(1, math.min(groups.size, maxConcurrentGroups)))
         try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
+          val onPool = scala.concurrent.ExecutionContext.fromExecutor(pool)
           val futures = groups.map(g => scala.concurrent.Future {
-            compactGroup(spark, baseDir, model, g, maxRowsPerFile)
-          })
+            compactGroup(narrow, baseDir, model, g, maxRowsPerFile)
+          }(onPool))
+          // the combinator's callbacks run on the completing thread: on
+          // a fail-fast exit the pool is shut down while siblings still
+          // complete, and a callback sent to it then would be rejected
+          implicit val ec: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.parasitic
           scala.concurrent.Await.result(
             scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
         } finally {

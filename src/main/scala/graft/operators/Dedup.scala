@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSession
 
 /** Near-duplicate detection at corpus scale.
   *
@@ -355,39 +356,35 @@ object Dedup {
     * none of the per-round fixed cost.
     */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 20): DataFrame = {
+      idB: String = "id_b", maxIter: Int = 20,
+      localEdgeCap: Long = 2000000L): DataFrame = {
     // SIZE-GATED LOCAL PATH: the iterative loop pays O(log diameter)
     // rounds of driver planning + 5 exchanges each — a fixed cost that
     // dwarfs the actual work when the pair graph is small (measured on
     // this box: 11.9 s for the 965k-edge fixture graph whose per-round
     // joins total < 2 s). A pair list that fits one process is the
-    // SAME size contract as a broadcast-join build side, so below the
-    // cap (default 2M edges ≈ 32 MB of ids, env
-    // SPARK_GRAFT_CC_LOCAL_EDGES, 0 disables) the components are
-    // union-found locally — bit-identical labels (min reachable id,
-    // verified by DedupSpec against the distributed path), one bounded
-    // collect via limit(cap+1) so an over-cap graph costs one aborted
-    // partial scan, never an unbounded driver pull. At lake scale the
-    // graph exceeds the cap and the distributed loop below runs
-    // unchanged.
-    val localCap = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.localEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES"))
-      .map(_.toLong).getOrElse(2000000L)
+    // SAME size contract as a broadcast-join build side, so below
+    // `localEdgeCap` (default 2M edges ≈ 32 MB of ids, 0 disables) the
+    // components are union-found locally — bit-identical labels (min
+    // reachable id, verified by DedupSpec against the distributed
+    // path), one bounded collect via limit(cap+1) so an over-cap graph
+    // costs one aborted partial scan, never an unbounded driver pull.
+    // At lake scale the graph exceeds the cap and the distributed loop
+    // below runs unchanged.
     // null-id pairs are dropped on BOTH paths: the distributed loop's
     // equi-joins never match them anyway, so filtering up front makes
     // the local path's semantics identical instead of hard-failing on
     // an edge the distributed path would silently ignore
     val cleanPairs = pairs.filter(col(idA).isNotNull && col(idB).isNotNull)
     val idType = pairs.schema(idA).dataType
-    val localable = localCap > 0 && idType == pairs.schema(idB).dataType &&
+    val localable = localEdgeCap > 0 && idType == pairs.schema(idB).dataType &&
       (idType == org.apache.spark.sql.types.LongType ||
         idType == org.apache.spark.sql.types.IntegerType ||
         idType == org.apache.spark.sql.types.StringType)
     // clamp before the Int conversion: a cap above Int.MaxValue-1 must
     // mean "collect up to the probe bound", not overflow into a
     // negative limit
-    val probe = math.min(localCap, Int.MaxValue - 1L).toInt + 1
+    val probe = math.min(localEdgeCap, Int.MaxValue - 1L).toInt + 1
     val localEdges = if (!localable) null
       else cleanPairs.select(col(idA), col(idB)).limit(probe).collect()
     if (localEdges != null && localEdges.length < probe)
@@ -461,9 +458,16 @@ object Dedup {
     // under AQE each round additionally pays stage-by-stage driver
     // re-optimization that buys nothing here (edges pre-partitioned,
     // labels' width fixed) — measured 20.2 s → 11.9 s on the 965k-pair
-    // fixture graph with identical labels. SPARK_GRAFT_KEEP_AQE=1
-    // restores AQE (ConfScope.withAqeOff doc).
-    graft.core.ConfScope.withAqeOff(pairs.sparkSession) {
+    // fixture graph with identical labels. So the loop runs on a clone
+    // of the caller's session with AQE off, and the labels it returns
+    // are handed back on the caller's session.
+    graft.Sessions.isolated(pairs.sparkSession, "spark.sql.adaptive.enabled" -> "false") { spark =>
+      val labels = propagateLabels(GraftSession.rebind(pairs, spark), idA, idB, maxIter)
+      GraftSession.rebind(labels, pairs.sparkSession)
+    }
+
+  private def propagateLabels(pairs: DataFrame, idA: String,
+      idB: String, maxIter: Int): DataFrame = {
     // Pre-partition AND pre-sort the (large) edge list on the join key
     // once: the cached plan's partitioning/ordering survive into every
     // round's join, so the edge side of the propagation join never

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSession
 
 import graft.core.Ksuid
 import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
@@ -163,13 +164,15 @@ object RdrPipeline {
   // the verify/bench harnesses clearCache() between queries.
   private val mergedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Fixture-scale shuffle width for the train gates — see
-    * [[graft.core.ConfScope.withShufflePartitions]] (one shared
-    * definition with the streaming replay gates). A production 8M-row
-    * run keeps whatever its session configures.
+  /** Run `body` on a clone of `s` at a fixture-scale shuffle width.
+    * Every aggregation exchange schedules one task per partition, and
+    * on gate-sized fixtures (10⁵ rows) a 32-wide session pays mostly
+    * scheduling overhead that a production run at real data volumes
+    * would amortize; results are exact at any width. A production
+    * 8M-row run keeps whatever its session configures.
     */
-  private def withGateShuffle[T](s: SparkSession)(body: => T): T =
-    graft.core.ConfScope.withShufflePartitions(s, 8)(body)
+  private def withGateShuffle[T](s: SparkSession)(body: SparkSession => T): T =
+    graft.Sessions.isolated(s, "spark.sql.shuffle.partitions" -> "8")(body)
 
   /** Bench setup hook: force the firehose generation + ingest merge
     * now so the shared fixed cost lands in the explicit `setup` entry
@@ -337,8 +340,8 @@ object RdrPipeline {
       // the gate runs the USER-FACING chain (trainFromStore): explore
       // bootstrap, scarce-data override, checkpoint save — with a tap
       // that dumps each phase's data-side frame for the oracle census
-      val chain = timed("train")(withGateShuffle(spark)(
-        trainFromStore(spark, s"$stage/store", "events", cfg,
+      val chain = timed("train")(withGateShuffle(spark)(gate =>
+        trainFromStore(gate, s"$stage/store", "events", cfg,
           ckptDir = Some(s"$stage/ckpt"),
           phaseTap = (phase, df) =>
             df.select(Schema.DecisionId, Schema.Reward, Schema.Count)
@@ -477,9 +480,10 @@ object RdrPipeline {
         val cfg = Trainer.TrainConfig(maxFeatures = 20, pruneMinStringCount = 0,
           maxTrees = 3, propensityTrees = 3, treeDepth = 3, seed = 7L,
           rowWeightCol = Some("_soft_w"))
-        val (pm, dm) = withGateShuffle(spark) {
-          val p = Trainer.trainPropensity(e, cfg)
-          (p, Trainer.trainDecision(e, p, cfg))
+        val (pm, dm) = withGateShuffle(spark) { gate =>
+          val ge = GraftSession.rebind(e, gate)
+          val p = Trainer.trainPropensity(ge, cfg)
+          (p, Trainer.trainDecision(ge, p, cfg))
         }
         require(pm.model.getNumTrees > 0 && dm.model.getNumTrees > 0,
           "q_train_soft: a phase trained zero trees")

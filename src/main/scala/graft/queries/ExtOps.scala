@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSession
 
 import graft.operators.{Ann, CountMin, Dedup, Frequency, IvfIndex, Kmv, Multimodal, SketchRollup}
 
@@ -66,24 +67,25 @@ object ExtOps {
       val signed = Dedup.withSignature(docs, "text").persist()
       // AQE's stage-by-stage re-optimization costs ~3× on this build's
       // ~9-exchange plan whose trees carry the 16-band signature
-      // expressions (measured 45.0 s → 14.5 s, identical output;
-      // ConfScope.withAqeOff doc) — scoped here, overridable with
-      // SPARK_GRAFT_KEEP_AQE=1 for lake-scale runs that want AQE's
-      // skew splitting on the verify joins.
-      try graft.core.ConfScope.withAqeOff(s) {
-        signed.write.mode("overwrite").parquet(s"$out/signed")
+      // expressions (measured 45.0 s → 14.5 s, identical output) — so
+      // the build runs on an AQE-off clone of the session. AQE's skew
+      // splitting of the verify joins is what a lake-scale run would
+      // give up here; at fixture scale it has nothing to split.
+      try graft.Sessions.isolated(s, "spark.sql.adaptive.enabled" -> "false") { r =>
+        val rSigned = GraftSession.rebind(signed, r)
+        rSigned.write.mode("overwrite").parquet(s"$out/signed")
         // est gate off (measured: setup 12.4 → 10.5 s — this corpus's
         // hashed word sets average ~23 longs, so direct intersection
         // beats the 64-slot estimate + two 512-byte sig joins;
         // Dedup.verifyStaged doc has the scale tradeoff)
-        val pairs = Dedup.verifiedPairsSigned(signed, "doc_id", 0.9,
+        val pairs = Dedup.verifiedPairsSigned(rSigned, "doc_id", 0.9,
           estimateGate = false)
         pairs.write.mode("overwrite").parquet(s"$out/pairs")
         pairs.unpersist(blocking = false)
         // the cluster-assignment table is ALSO a materialized lake
         // product (the dedup result downstream removal/audit jobs
         // consume) — label-propagate once, not once per consumer
-        Dedup.duplicateClusters(s.read.parquet(s"$out/pairs"))
+        Dedup.duplicateClusters(r.read.parquet(s"$out/pairs"))
           .write.mode("overwrite").parquet(s"$out/clusters")
       } finally signed.unpersist(blocking = false)
       sys.addShutdownHook(
@@ -238,54 +240,58 @@ object ExtOps {
     // truth, same SQL as q_dedup_clusters) plus the assertion flags.
     GateQuery(
       "q_dedup_capped",
-      // AQE-off scope (env-overridable, ConfScope.withAqeOff doc): this
-      // gate is a ~15-exchange diagnostic pipeline over cap-bounded
-      // relations; the capped candidate path structurally REMOVES the
-      // oversized-bucket skew (every bucket's pair volume ≤ cap², star/
-      // chain are O(fanin)), so AQE's skew splitting has nothing left
-      // to split and its stage-by-stage re-planning is pure fixed cost
-      // (measured: gate 19.0 s → see OPTIMIZATION_r13.md).
-      (s, d) => graft.core.ConfScope.withAqeOff(s) {
-        val signed = cachedSigned(s, d)
-        val census = Dedup.bandBucketCensus(signed, "doc_id")
-        val maxFanin = census.agg(max("fanin")).head().getLong(0)
-        val cap = math.max(8L, maxFanin / 2)
-        require(maxFanin > cap,
-          s"q_dedup_capped: no over-cap bucket (max fan-in $maxFanin, " +
-            s"cap $cap) — the star+chain path never engaged")
-        // handOff-persisted (Caching contract): released as soon as
-        // `capped` is materialized, which is all that reads it
-        val cands = Dedup.cappedCandidatePairs(signed, "doc_id", cap)
-        val verified = Dedup.exactVerify(signed, cands, "doc_id", 0.9,
-          // capped candidates are clique-precision with short hashed
-          // word sets — direct intersection measured 0.9 s vs 3.0 s
-          // for the est-gated path, identical pairs (Dedup doc)
-          estimateGate = false)
-        val capped = Dedup.duplicateClusters(verified).persist()
-        val nCap = try capped.count() finally cands.unpersist(blocking = false)
-        val uncapped = cachedClusters(s, d)
-        val joined = capped.select(col("id"), col("cluster").as("_cc"))
-          .join(uncapped.select(col("id"), col("cluster").as("_uc")), Seq("id"))
-        val spanning = joined.groupBy("_cc")
-          .agg(countDistinct("_uc").as("_k")).filter(col("_k") > 1).count()
-        require(spanning == 0L,
-          s"q_dedup_capped: $spanning capped cluster(s) span multiple " +
-            "uncapped clusters — refinement violated (capped candidates " +
-            "must be a subset of uncapped candidates)")
-        val nUnc = uncapped.count()
-        require(nCap * 100 >= nUnc * 95,
-          s"q_dedup_capped: capped path clustered only $nCap of $nUnc " +
-            "docs — recall floor (95%) breached")
-        capped.unpersist(blocking = false)
-        uncapped
-          .groupBy("cluster").agg(count(lit(1)).as("sz"))
-          .agg(
-            count(lit(1)).as("n_clusters"),
-            sum("sz").cast("long").as("n_docs_clustered"),
-            max("sz").cast("long").as("max_cluster"))
-          .withColumn("capped_refines", lit(true))
-          .withColumn("cap_engaged", lit(true))
-          .withColumn("recall_floor_held", lit(true))
+      // AQE-off clone: this gate is a ~15-exchange diagnostic
+      // pipeline over cap-bounded relations; the capped candidate path
+      // structurally REMOVES the oversized-bucket skew (every bucket's
+      // pair volume ≤ cap², star/chain are O(fanin)), so AQE's skew
+      // splitting has nothing left to split and its stage-by-stage
+      // re-planning is pure fixed cost (measured: gate 19.0 s → see
+      // OPTIMIZATION_r13.md). The census it returns runs on the gate's
+      // own session.
+      (s, d) => {
+        val result = graft.Sessions.isolated(s, "spark.sql.adaptive.enabled" -> "false") { r =>
+          val signed = cachedSigned(r, d)
+          val census = Dedup.bandBucketCensus(signed, "doc_id")
+          val maxFanin = census.agg(max("fanin")).head().getLong(0)
+          val cap = math.max(8L, maxFanin / 2)
+          require(maxFanin > cap,
+            s"q_dedup_capped: no over-cap bucket (max fan-in $maxFanin, " +
+              s"cap $cap) — the star+chain path never engaged")
+          // handOff-persisted (Caching contract): released as soon as
+          // `capped` is materialized, which is all that reads it
+          val cands = Dedup.cappedCandidatePairs(signed, "doc_id", cap)
+          val verified = Dedup.exactVerify(signed, cands, "doc_id", 0.9,
+            // capped candidates are clique-precision with short hashed
+            // word sets — direct intersection measured 0.9 s vs 3.0 s
+            // for the est-gated path, identical pairs (Dedup doc)
+            estimateGate = false)
+          val capped = Dedup.duplicateClusters(verified).persist()
+          val nCap = try capped.count() finally cands.unpersist(blocking = false)
+          val uncapped = cachedClusters(r, d)
+          val joined = capped.select(col("id"), col("cluster").as("_cc"))
+            .join(uncapped.select(col("id"), col("cluster").as("_uc")), Seq("id"))
+          val spanning = joined.groupBy("_cc")
+            .agg(countDistinct("_uc").as("_k")).filter(col("_k") > 1).count()
+          require(spanning == 0L,
+            s"q_dedup_capped: $spanning capped cluster(s) span multiple " +
+              "uncapped clusters — refinement violated (capped candidates " +
+              "must be a subset of uncapped candidates)")
+          val nUnc = uncapped.count()
+          require(nCap * 100 >= nUnc * 95,
+            s"q_dedup_capped: capped path clustered only $nCap of $nUnc " +
+              "docs — recall floor (95%) breached")
+          capped.unpersist(blocking = false)
+          uncapped
+            .groupBy("cluster").agg(count(lit(1)).as("sz"))
+            .agg(
+              count(lit(1)).as("n_clusters"),
+              sum("sz").cast("long").as("n_docs_clustered"),
+              max("sz").cast("long").as("max_cluster"))
+            .withColumn("capped_refines", lit(true))
+            .withColumn("cap_engaged", lit(true))
+            .withColumn("recall_floor_held", lit(true))
+        }
+        GraftSession.rebind(result, s)
       },
       Some(clusterCensusSql(
         ",\n       TRUE AS capped_refines,\n       TRUE AS cap_engaged" +

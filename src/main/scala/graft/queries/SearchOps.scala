@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Bloom, Compact, InvertedIndex, Layout, Search, ZoneMap}
+import graft.plans.PlanWalk
 
 /** Lexical + hybrid retrieval gates over `documents`/`embeddings`:
   * TF-IDF weighting, BM25 ranking, and reciprocal-rank fusion of a
@@ -89,23 +91,6 @@ object SearchOps {
       ZoneMap.buildKllSidecar(s, s"$out/table_id", Seq("o_totalprice"))
       out
     })
-  }
-
-  /** Executed-plan file census through the ADAPTIVE wrapper (an
-    * AdaptiveSparkPlanExec is a LEAF until executed — run the query
-    * first, then walk).
-    */
-  private def executedScanFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-        sc.relation.location.inputFiles.length
-      case other => other.children.map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
   }
 
   val queries: Seq[GateQuery] = Seq(
@@ -306,43 +291,28 @@ object SearchOps {
         val pr = ZoneMap.prunedRead(s, s"$root/table", mf, Seq(
           ZoneMap.NumRange("l_quantity", None, Some(5.0)),
           ZoneMap.NumRange("l_extendedprice", None, Some(20000.0))))
-        // SECOND census through the TRANSPARENT rule: install
-        // ZoneSkipRule for the duration (the extensions-session
-        // injection point, via the public ExperimentalMethods hook), run
-        // a PLAIN filtered read against the sidecar-carrying table, and
-        // assert in-plan that the scan's file list shrank. Its census
+        // SECOND census through the TRANSPARENT rule: ZoneSkipRule on
+        // a clone of the session (the extensions-session injection
+        // point, via the public ExperimentalMethods hook), a PLAIN
+        // filtered read against the sidecar-carrying table, and an
+        // in-plan assert that the scan's file list shrank. Its census
         // values become literal columns the oracle re-derives — the
         // rule path is hash-checked end-to-end, not just spec-checked.
-        val rule = graft.plans.ZoneSkipRule(s)
-        val prior = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = prior :+ rule
         val (ruleN, rulePriceSum, ruleScanned) =
-          try {
-            val df = s.read.parquet(s"$root/table")
+          graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
+            val df = r.read.parquet(s"$root/table")
               .filter(col("l_quantity") <= 5.0 && col("l_extendedprice") <= 20000.0)
               .agg(
                 count(lit(1)).as("n"),
                 sum(round(col("l_extendedprice") * 100).cast("long")).cast("long")
                   .as("p"))
-            // run FIRST: the aggregate's exchange makes this an AQE
-            // plan, and AdaptiveSparkPlanExec is a LEAF until executed
-            // — a plain collect{FileSourceScanExec} over it matches
-            // nothing and the guard below would pass vacuously
+            // run FIRST, so the walk sees the final adaptive plan
             val row = df.collect().head
-            def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-                scanFiles(a.executedPlan)
-              case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-                scanFiles(q.plan)
-              case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-                sc.relation.location.inputFiles.length
-              case other => other.children.map(scanFiles).sum
-            }
-            val scanned = scanFiles(df.queryExecution.executedPlan)
+            val scanned = PlanWalk.scannedFiles(df)
             require(scanned > 0,
               "q_zonemap_prune: found no file scan in the rule-census plan")
             (row.getLong(0), row.getLong(1), scanned)
-          } finally s.experimental.extraOptimizations = prior
+          }
         require(ruleScanned < pr.filesTotal,
           s"q_zonemap_prune: the transparent rule scanned all $ruleScanned files")
         pr.df
@@ -439,33 +409,18 @@ object SearchOps {
         val root = zonemapArtifacts(s, d)
         val table = s"$root/table_part"
         val total = ZoneMap.dataFiles(s, table).length
-        val rule = graft.plans.ZoneSkipRule(s)
-        val prior = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = prior :+ rule
-        try {
-          val df = s.read.parquet(table)
+        graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
+          val df = r.read.parquet(table)
             .filter(col("l_returnflag") === "R" && col("l_quantity") <= 5.0)
             .agg(
               count(lit(1)).as("n"),
               sum(round(col("l_extendedprice") * 100).cast("long")).cast("long")
                 .as("price_sum_x100"))
-          // run FIRST (AdaptiveSparkPlanExec is a leaf until executed —
-          // the q_zonemap_prune lesson)
+          // run FIRST, so the walk sees the final adaptive plan
           val row = df.collect().head
-          def walk(p: org.apache.spark.sql.execution.SparkPlan): (Int, Long) = p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              walk(a.executedPlan)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              walk(q.plan)
-            case sc: org.apache.spark.sql.execution.FileSourceScanExec =>
-              (sc.relation.location.inputFiles.length,
-                sc.metrics("numFiles").value)
-            case other =>
-              val cs = other.children.map(walk)
-              (cs.map(_._1).sum, cs.map(_._2).sum)
-          }
-          val (keptAcrossParts, executedFiles) =
-            walk(df.queryExecution.executedPlan)
+          val scans = PlanWalk.fileScans(df)
+          val keptAcrossParts = scans.map(_.relation.location.inputFiles.length).sum
+          val executedFiles = scans.map(_.metrics("numFiles").value).sum
           require(keptAcrossParts > 0,
             "q_zonemap_part: found no file scan in the plan")
           require(keptAcrossParts < total,
@@ -478,7 +433,7 @@ object SearchOps {
             lit(row.getLong(1)).as("price_sum_x100"),
             lit(true).as("zone_pruned"),
             lit(true).as("partition_pruned"))
-        } finally s.experimental.extraOptimizations = prior
+        }
       },
       Some("""SELECT count(*) AS n,
              |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
@@ -504,36 +459,33 @@ object SearchOps {
         val root = zonemapArtifacts(s, d)
         val table = s"$root/table_id"
         val total = ZoneMap.dataFiles(s, table).length
-        val rule = graft.plans.ZoneSkipRule(s)
-        val prior = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = prior :+ rule
-        try {
-          def inCensus() = s.read.parquet(table)
-            .filter(col("okey2").isin(14L, 422L, 2798L))
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("o_totalprice") * 100).cast("long")).cast("long").as("t"))
-          val inQ = inCensus()
+        val zoned = (r: SparkSession) => Seq(graft.plans.ZoneSkipRule(r))
+        def inCensus(r: SparkSession) = r.read.parquet(table)
+          .filter(col("okey2").isin(14L, 422L, 2798L))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("o_totalprice") * 100).cast("long")).cast("long").as("t"))
+        graft.Sessions.isolatedWithRules(s, zoned) { r =>
+          val inQ = inCensus(r)
           val inRow = inQ.collect().head
-          val inScanned = executedScanFiles(inQ)
-          val strQ = s.read.parquet(table)
+          val inScanned = PlanWalk.scannedFiles(inQ)
+          val strQ = r.read.parquet(table)
             .filter(col("okey_str") === "ord-0000211")
             .agg(sum(col("o_custkey")).cast("long").as("c"))
           val strRow = strQ.collect().head
-          val strScanned = executedScanFiles(strQ)
+          val strScanned = PlanWalk.scannedFiles(strQ)
           // interior miss: okey2 is even-only, 421 sits inside every
           // file's range — blooms prove absence before any IO
-          val missQ = s.read.parquet(table)
+          val missQ = r.read.parquet(table)
             .filter(col("okey2") === 421L).agg(count(lit(1)).as("n"))
           val missRow = missQ.collect().head
-          val missScanned = executedScanFiles(missQ)
+          val missScanned = PlanWalk.scannedFiles(missQ)
           // same census, blooms OFF: ranges keep every file — the
           // skipping above is attributable to the blooms alone
-          s.conf.set("spark.graft.zonemap.bloom", "false")
-          val (rangeRow, rangeScanned) =
-            try {
-              val q = inCensus()
-              (q.collect().head, executedScanFiles(q))
-            } finally s.conf.unset("spark.graft.zonemap.bloom")
+          val (rangeRow, rangeScanned) = graft.Sessions.isolatedWithRules(s, zoned,
+              "spark.graft.zonemap.bloom" -> "false") { off =>
+            val q = inCensus(off)
+            (q.collect().head, PlanWalk.scannedFiles(q))
+          }
           require(inScanned <= 4 && inScanned < total,
             s"q_bloom_skip: 3-key IN must keep ≤4 of $total files, scanned $inScanned")
           require(strScanned <= 2 && strScanned < total,
@@ -552,7 +504,7 @@ object SearchOps {
             lit(missRow.getLong(0)).as("n_miss"),
             lit(true).as("bloom_pruned"),
             lit(true).as("range_powerless"))
-        } finally s.experimental.extraOptimizations = prior
+        }
       },
       Some("""SELECT (SELECT count(*) FROM orders
              |        WHERE o_orderkey IN (7, 211, 1399)) AS n_in,
@@ -657,25 +609,22 @@ object SearchOps {
       (s, d) => {
         val root = zonemapArtifacts(s, d)
         val table = s"$root/table_id"
-        val rule = graft.plans.ManifestCountRule(s)
-        val prior = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = prior :+ rule
-        try {
-          val bare = s.read.parquet(table).agg(count(lit(1)).as("n"))
+        graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ManifestCountRule(r))) { r =>
+          val bare = r.read.parquet(table).agg(count(lit(1)).as("n"))
           val n = bare.collect().head.getLong(0)
-          require(executedScanFiles(bare) == 0,
+          require(PlanWalk.scannedFiles(bare) == 0,
             "q_count_star: a covered count(*) must plan ZERO file scans")
-          val filtered = s.read.parquet(table)
+          val filtered = r.read.parquet(table)
             .filter(col("o_orderkey") % 2 === 0)
             .agg(count(lit(1)).as("nf"))
           val nf = filtered.collect().head.getLong(0)
-          require(executedScanFiles(filtered) > 0,
+          require(PlanWalk.scannedFiles(filtered) > 0,
             "q_count_star: a filtered count must fall back to a scan")
           s.range(1).select(
             lit(n).as("n_rows"),
             lit(nf).as("n_even"),
             lit(true).as("zero_scan_count"))
-        } finally s.experimental.extraOptimizations = prior
+        }
       },
       Some("""SELECT (SELECT count(*) FROM orders) AS n_rows,
              |       (SELECT count(*) FROM orders WHERE o_orderkey % 2 = 0) AS n_even,
@@ -753,18 +702,15 @@ object SearchOps {
           .write.mode("overwrite").parquet(table)
         ZoneMap.writeSidecar(s, table, ZoneMap.build(s, table, Seq("o_orderkey")))
         ZoneMap.buildBloomSidecar(s, table, Seq("o_orderkey"))
-        val rule = graft.plans.ZoneSkipRule(s)
-        val prior = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = prior :+ rule
-        try {
-          def census() = s.read.parquet(table)
+        try graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
+          def census() = r.read.parquet(table)
             .filter(col("o_orderkey") < 375L)
             .agg(count(lit(1)).as("n"),
               sum(round(col("o_totalprice") * 100).cast("long")).cast("long").as("t"))
           val totalBefore = ZoneMap.dataFiles(s, table).length
           val q1 = census()
           val row1 = q1.collect().head
-          val kept1 = executedScanFiles(q1)
+          val kept1 = PlanWalk.scannedFiles(q1)
           require(kept1 < totalBefore,
             s"q_compact: pre-compact census must prune ($kept1/$totalBefore)")
           // pack ~4 neighbors per bin
@@ -774,7 +720,7 @@ object SearchOps {
             fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
               .map(_.getLen).sum
           }
-          val res = Compact.compact(s, table,
+          val res = Compact.compact(r, table,
             targetBytes = bytes * 4 / totalBefore + 1,
             sortCol = Some("o_orderkey"))
           val totalAfter = ZoneMap.dataFiles(s, table).length
@@ -783,17 +729,17 @@ object SearchOps {
               s"($totalBefore -> $totalAfter, $res)")
           val q2 = census()
           val row2 = q2.collect().head
-          val kept2 = executedScanFiles(q2)
+          val kept2 = PlanWalk.scannedFiles(q2)
           require(row2 == row1,
             "q_compact: census values must survive the rewrite bit-exactly")
           require(kept2 < totalAfter,
             s"q_compact: the REFRESHED sidecar must still prune ($kept2/$totalAfter)")
           // point lookup through fresh zones + re-attached blooms
-          val ptQ = s.read.parquet(table)
+          val ptQ = r.read.parquet(table)
             .filter(col("o_orderkey") === 375L)
             .agg(sum(col("o_custkey")).cast("long").as("c"))
           val ptRow = ptQ.collect().head
-          require(executedScanFiles(ptQ) == 1,
+          require(PlanWalk.scannedFiles(ptQ) == 1,
             "q_compact: a post-compact point lookup must scan exactly one file")
           s.range(1).select(
             lit(row1.getLong(0)).as("n_small"),
@@ -803,7 +749,6 @@ object SearchOps {
             lit(true).as("pruned_before"),
             lit(true).as("pruned_after"))
         } finally {
-          s.experimental.extraOptimizations = prior
           // every value is collected into literals above — the per-pass
           // table is dead weight; best-effort cleanup
           try {

@@ -11,7 +11,8 @@ import graft.streaming.{StreamingAggregates, StreamingDedup, StreamingJoin, Stre
   */
 object StreamingOps {
 
-  /** Run a gate's replay under a small shuffle-partition count. Every
+  /** Run a gate's replay on a clone of the gate's session with a small
+    * shuffle-partition count. Every
     * stateful micro-batch commits one state store PER shuffle
     * partition, so a 32-partition session pays 32 store commits per
     * batch for fixtures with a few hundred distinct keys — pure
@@ -20,8 +21,8 @@ object StreamingOps {
     * family dropped 70.3 s → 53.1 s same-box together with the 2-file
     * triggers below, all hashes unchanged) keeps the replay parallel
     * enough for the fixture sizes; the operators themselves take
-    * whatever the surrounding session configures (a production stream
-    * would size this to its key cardinality).
+    * whatever session they are given (a production stream would size
+    * this to its key cardinality).
     */
   /** Replay-parallelism note: a micro-batch's input partition count is
     * its FILE count (small files, one split each), so a 4-file fixture
@@ -35,14 +36,15 @@ object StreamingOps {
     * join) keep their ordered few-file fixtures — file order IS part
     * of their contract.
     */
-  private def withReplayConf[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    graft.core.ConfScope.withShufflePartitions(s, 4)(
+  private def withReplayConf[T](s: org.apache.spark.sql.SparkSession)(
+      body: org.apache.spark.sql.SparkSession => T): T =
+    graft.Sessions.isolated(s, "spark.sql.shuffle.partitions" -> "4",
       // the STREAM disables AQE itself, but every foreachBatch body is
       // a plain batch query that would still pay AQE's stage-by-stage
-      // re-planning per micro-batch — pure fixed cost at replay scale
-      // (ConfScope.withAqeOff doc; env-overridable). A production
-      // stream's batches are big enough to amortize it — and keep it.
-      graft.core.ConfScope.withAqeOff(s)(body))
+      // re-planning per micro-batch — pure fixed cost at replay scale.
+      // A production stream's batches are big enough to amortize it —
+      // and keep it.
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** Replay scratch space: RAM-backed when the host offers it. The
     * drop folder, checkpoint, state store, and sink are all
@@ -132,8 +134,8 @@ object StreamingOps {
           ev.unpersist(blocking = false)
         }
         val work = replayDir("sess_stream_run")
-        withReplayConf(s) {
-          StreamingSessions.sessionStream(s, s"$fx/drop", s"$work/out",
+        withReplayConf(s) { r =>
+          StreamingSessions.sessionStream(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", gapSeconds = gap,
             format = "parquet").awaitTermination()
         }
@@ -170,8 +172,8 @@ object StreamingOps {
           ev.unpersist(blocking = false)
         }
         val work = replayDir("aggw_stream_run")
-        withReplayConf(s) {
-          StreamingAggregates.windowedCounts(s, s"$fx/drop", s"$work/out",
+        withReplayConf(s) { r =>
+          StreamingAggregates.windowedCounts(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", windowLength = "1 hour", lateness = "30 minutes",
             format = "parquet").awaitTermination()
         }
@@ -206,8 +208,8 @@ object StreamingOps {
             .coalesce(2).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("dedup_stream_run")
-        withReplayConf(s) {
-          StreamingDedup.dedupStream(s, s"$fx/drop", s"$work/out",
+        withReplayConf(s) { r =>
+          StreamingDedup.dedupStream(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", horizon = "1 hour",
             format = "parquet").awaitTermination()
         }
@@ -261,8 +263,8 @@ object StreamingOps {
           ev.unpersist(blocking = false)
         }
         val work = replayDir("rjoin_stream_run")
-        withReplayConf(s) {
-          StreamingJoin.rewardJoinStream(s, s"$fx/decisions", s"$fx/rewards",
+        withReplayConf(s) { r =>
+          StreamingJoin.rewardJoinStream(r, s"$fx/decisions", s"$fx/rewards",
             s"$work/out", s"$work/ckpt",
             lateness = "1 hour", maxRewardDelay = "2 hours",
             format = "parquet").awaitTermination()
@@ -329,9 +331,9 @@ object StreamingOps {
           StructField("vec_id", LongType),
           StructField("label", IntegerType),
           StructField("v", ArrayType(DoubleType))))
-        withReplayConf(s) {
+        withReplayConf(s) { r =>
           graft.streaming.StreamingIndex.appendStream(
-            s, s"$fx/drop", s"$work/ckpt", idx, "v", schema,
+            r, s"$fx/drop", s"$work/ckpt", idx, "v", schema,
             maxFilesPerTrigger = 4, format = "parquet").awaitTermination()
         }
         graft.operators.IvfIndex.topK(s, idx, "v", "vec_id", query, 10, nprobe = 8)
@@ -359,9 +361,9 @@ object StreamingOps {
             .repartition(4).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("audit_stream_run")
-        withReplayConf(s) {
+        withReplayConf(s) { r =>
           graft.streaming.StreamingAudit.auditStream(
-            s, s"$fx/drop", s"$work/state", s"$work/ckpt",
+            r, s"$fx/drop", s"$work/state", s"$work/ckpt",
             StructType(Seq(
               StructField("doc_id", LongType),
               StructField("text", StringType),
@@ -399,9 +401,9 @@ object StreamingOps {
             .write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("neardup_stream_run")
-        withReplayConf(s) {
+        withReplayConf(s) { r =>
           graft.streaming.StreamingNearDup.flagStream(
-            s, s"$fx/drop", s"$work/nd", s"$work/ckpt",
+            r, s"$fx/drop", s"$work/nd", s"$work/ckpt",
             maxFilesPerTrigger = 2,
             format = "parquet").awaitTermination()
         }
@@ -456,8 +458,8 @@ object StreamingOps {
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("cms_stream_run")
-        withReplayConf(s) {
-          StreamingRollup.rollupStream(s, s"$fx/drop", s"$work/state",
+        withReplayConf(s) { r =>
+          StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
             StructType(Seq(StructField("l_partkey", LongType))),
             maxFilesPerTrigger = 8, format = "parquet")(
@@ -499,8 +501,8 @@ object StreamingOps {
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("bootstrap_stream_run")
-        withReplayConf(s) {
-          StreamingRollup.rollupStream(s, s"$fx/drop", s"$work/state",
+        withReplayConf(s) { r =>
+          StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
             StructType(Seq(StructField("event_id", LongType),
               StructField("cents", LongType))),
@@ -535,8 +537,8 @@ object StreamingOps {
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("cusum_stream_run")
-        withReplayConf(s) {
-          StreamingRollup.rollupStream(s, s"$fx/drop", s"$work/state",
+        withReplayConf(s) { r =>
+          StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
             StructType(Seq(StructField("event_type", StringType),
               StructField("tus", LongType), StructField("cents", LongType))),
@@ -573,8 +575,8 @@ object StreamingOps {
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("auc_stream_run")
-        withReplayConf(s) {
-          StreamingRollup.rollupStream(s, s"$fx/drop", s"$work/state",
+        withReplayConf(s) { r =>
+          StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
             StructType(Seq(StructField("y", IntegerType),
               StructField("score", DoubleType))),
@@ -615,8 +617,8 @@ object StreamingOps {
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
         val work = replayDir("drift_stream_run")
-        withReplayConf(s) {
-          StreamingRollup.rollupStream(s, s"$fx/drop", s"$work/state",
+        withReplayConf(s) { r =>
+          StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt", StructType(Seq(StructField("x", DoubleType))),
             maxFilesPerTrigger = 8, format = "parquet")(
             batch => Drift.binCounts(batch, "x",

@@ -61,14 +61,16 @@ object Tables {
     * input (multi-row-group lake table) already spreads the work, and
     * forcing a full-table round-robin exchange down to exactly
     * defaultParallelism partitions there would ADD a shuffle and CAP
-    * the width — so when the plan already yields at least
-    * defaultParallelism partitions this is the identity. The peek at
-    * `df.rdd` costs one extra physical planning of the subtree, never
-    * a job.
+    * the width — so when the file scans already yield at least
+    * defaultParallelism partitions (summed, as a union's would be) this
+    * is the identity. The count is read from the scans' input RDDs in
+    * the physical plan, which never runs a job — `df.rdd` would run the
+    * stages below an adaptive exchange to learn its coalesced width.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
+    val parts = graft.plans.PlanWalk.fileScans(df).map(_.inputRDD.getNumPartitions).sum
+    if (parts >= want) df else df.repartition(want)
   }
 }
 

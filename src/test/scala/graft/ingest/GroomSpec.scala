@@ -214,7 +214,7 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     // a serial pool would park the first task until the await times out
     val latch = new java.util.concurrent.CountDownLatch(groups.size)
     Groom.resetConcurrencyProbe()
-    Groom.compactionStartHook = () => {
+    Groom.compactionStartHook = _ => {
       latch.countDown()
       if (!latch.await(2, java.util.concurrent.TimeUnit.MINUTES))
         throw new AssertionError("compaction fan-out never overlapped")
@@ -222,7 +222,7 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     try {
       val iters = Groom.groom(spark, dir, "m", maxRowsPerFile = 4000)
       assert(iters > 0)
-    } finally Groom.compactionStartHook = () => ()
+    } finally Groom.compactionStartHook = _ => ()
     assert(Groom.peakConcurrentCompactions >= groups.size)
     Groom.assertNoOverlappingKeys(PartitionStore.listKeys(spark, dir, "m"))
   }
@@ -237,15 +237,16 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     val narrow = "2" // groom's width at maxRowsPerFile = 4000
     assume(wide != narrow, s"session width $wide must differ from groom's")
 
-    // the first group to pass the latch fails; the second reads the
-    // width once the groom thread has left the failed Await and sits
+    // the first group to pass the latch fails; the second reads both
+    // widths once the groom thread has left the failed Await and sits
     // in the pool drain (its only timed wait)
     val groomThread = Thread.currentThread()
     val entered = new java.util.concurrent.CountDownLatch(groups.size)
     val failed = new java.util.concurrent.CountDownLatch(1)
     val role = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen = new java.util.concurrent.atomic.AtomicReference[String]()
-    Groom.compactionStartHook = () => {
+    val siblingWidth = new java.util.concurrent.atomic.AtomicReference[String]()
+    val callerWidth = new java.util.concurrent.atomic.AtomicReference[String]()
+    Groom.compactionStartHook = session => {
       entered.countDown()
       entered.await(2, java.util.concurrent.TimeUnit.MINUTES)
       role.getAndIncrement() match {
@@ -257,15 +258,26 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
           val deadline = System.nanoTime() + 30L * 1000000000L
           while (groomThread.getState != Thread.State.TIMED_WAITING &&
               System.nanoTime() < deadline) Thread.sleep(10)
-          seen.set(spark.conf.get(key))
+          siblingWidth.set(session.conf.get(key))
+          callerWidth.set(spark.conf.get(key))
         case _ =>
       }
     }
+    // an ExecutionContext reports a task its executor rejects on stderr
+    val stderr = new java.io.ByteArrayOutputStream()
+    val realErr = System.err
+    System.setErr(new java.io.PrintStream(stderr, true))
     val err = try intercept[RuntimeException](Groom.groom(spark, dir, "m", maxRowsPerFile = 4000))
-    finally Groom.compactionStartHook = () => ()
+    finally {
+      Groom.compactionStartHook = _ => ()
+      System.setErr(realErr)
+    }
     assert(err.getMessage == "injected compaction failure")
-    assert(seen.get == narrow, "a sibling still running saw the restored session width")
-    assert(spark.conf.get(key) == wide, "the session width is restored after the drain")
+    assert(siblingWidth.get == narrow, "the sibling compaction ran at the session width")
+    assert(callerWidth.get == wide, "the caller's session width changed during the drain")
+    assert(spark.conf.get(key) == wide, "the caller's session width changed")
+    assert(!stderr.toString("UTF-8").contains("RejectedExecutionException"),
+      "a completion callback was sent to the shut-down compaction pool")
   }
 
   test("a firehose batch landing MID-groom is neither lost nor double-merged") {
@@ -292,7 +304,7 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
     // the caller's responsibility to serialize, as the reference's
     // Step-Function loop does.)
     val landed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Groom.compactionStartHook = () => {
+    Groom.compactionStartHook = _ => {
       if (landed.compareAndSet(false, true)) {
         val rows = (0 until 150).map { i =>
           val ts = base + ((i * 11) % 300)
@@ -307,7 +319,7 @@ class GroomSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     try Groom.groom(spark, dir, "m", maxRowsPerFile = 100)
-    finally Groom.compactionStartHook = () => ()
+    finally Groom.compactionStartHook = _ => ()
     assert(landed.get(), "setup: the mid-groom batch never landed")
 
     // the batch loop's NEXT tick (the reference re-enters groom from

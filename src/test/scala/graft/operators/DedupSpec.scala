@@ -99,12 +99,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val pairs = Seq((7L, 3L), (3L, 9L), (9L, 1L), (1L, 5L),
       (20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L))
       .toDF("id_a", "id_b")
-    def run(): Map[Long, Long] =
-      Dedup.duplicateClusters(pairs)
+    def run(cap: Long = 2000000L): Map[Long, Long] =
+      Dedup.duplicateClusters(pairs, localEdgeCap = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaLocal = run() // default cap >> 8 edges: local path
-    val viaDistributed =
-      graft.core.ConfScope.withConf(spark, "spark.graft.cc.localEdges", "0")(run())
+    val viaDistributed = run(cap = 0)
     assert(viaLocal == viaDistributed)
     assert(viaLocal(5L) == 1L && viaLocal(7L) == 1L && viaLocal(22L) == 20L
       && viaLocal(31L) == 30L)
@@ -112,15 +111,12 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val spairs = Seq(("b", "c"), ("c", "a"), ("x", "y")).toDF("id_a", "id_b")
     val sGot = Dedup.duplicateClusters(spairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val sWant = graft.core.ConfScope.withConf(
-      spark, "spark.graft.cc.localEdges", "0")(
-      Dedup.duplicateClusters(spairs)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    val sWant = Dedup.duplicateClusters(spairs, localEdgeCap = 0)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sGot == sWant && sGot == Map(
       "a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
     // an over-cap graph routes to the distributed loop (cap = 2 edges)
-    val big = graft.core.ConfScope.withConf(
-      spark, "spark.graft.cc.localEdges", "2")(run())
+    val big = run(cap = 2)
     assert(big == viaLocal)
   }
 
@@ -135,12 +131,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // the {emoji, U+FFFF} component has NO ASCII member, so its min
     // differs between the two orderings — the discriminating case
     val spairs = Seq((emoji, hi), ("aa", "ab")).toDF("id_a", "id_b")
-    def run(): Map[String, String] =
-      Dedup.duplicateClusters(spairs)
+    def run(cap: Long = 2000000L): Map[String, String] =
+      Dedup.duplicateClusters(spairs, localEdgeCap = cap)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val viaLocal = run()
-    val viaDistributed = graft.core.ConfScope.withConf(
-      spark, "spark.graft.cc.localEdges", "0")(run())
+    val viaDistributed = run(cap = 0)
     assert(viaLocal == viaDistributed)
     assert(viaLocal(emoji) == hi && viaLocal(hi) == hi && viaLocal("ab") == "aa")
   }
@@ -169,12 +164,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val pairs = Seq((Some(1L), Some(2L)), (None, Some(3L)), (Some(4L), None))
       .toDF("id_a", "id_b")
-    def run(): Map[Long, Long] =
-      Dedup.duplicateClusters(pairs)
+    def run(cap: Long = 2000000L): Map[Long, Long] =
+      Dedup.duplicateClusters(pairs, localEdgeCap = cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaLocal = run()
-    val viaDistributed = graft.core.ConfScope.withConf(
-      spark, "spark.graft.cc.localEdges", "0")(run())
+    val viaDistributed = run(cap = 0)
     assert(viaLocal == Map(1L -> 1L, 2L -> 1L))
     assert(viaDistributed == viaLocal)
   }

@@ -1,20 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.plans.PlanWalk
 
 class InvertedIndexSpec extends AnyFunSuite with SparkTestBase {
-
-  private def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
-    plan.collect {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case s: QueryStageExec        => fileScans(s.plan)
-      case f: FileSourceScanExec    => Seq(f)
-    }.flatten
 
   private def corpus() = {
     import spark.implicits._
@@ -69,7 +61,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkTestBase {
       .collect().head.getInt(0)
     val filesOnDisk = new java.io.File(s"$dir/postings/bucket=$bucket")
       .listFiles().count(_.getName.endsWith(".parquet"))
-    val scans = fileScans(result.queryExecution.executedPlan)
+    val scans = PlanWalk.fileScans(result)
       .filter(_.metadata("Location").contains("postings"))
     assert(scans.nonEmpty)
     scans.foreach { scan =>

@@ -1,23 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.plans.PlanWalk
 
 class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
-
-  // collect file scans through AQE wrappers — AdaptiveSparkPlanExec and
-  // the materialized QueryStageExec nodes are leaves from
-  // TreeNode.collect's point of view
-  private def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
-    plan.collect {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case s: QueryStageExec        => fileScans(s.plan)
-      case f: FileSourceScanExec    => Seq(f)
-    }.flatten
 
   // 4 well-separated clusters along the axes of R^8, 25 vectors each
   private def corpus() = {
@@ -114,7 +104,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       queries.collect().head.getSeq[Double](1), idx.centroids, 1).head
     val filesOnDisk = new java.io.File(s"$dir/cells/cell=$probedCell")
       .listFiles().count(_.getName.endsWith(".parquet"))
-    val scans = fileScans(near.queryExecution.executedPlan)
+    val scans = PlanWalk.fileScans(near)
       .filter(_.metadata("Location").contains("cells"))
     assert(scans.nonEmpty)
     scans.foreach { scan =>

@@ -3,7 +3,6 @@ package graft.plans
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,14 +17,7 @@ class ManifestCountRuleSpec extends AnyFunSuite {
 
   private def scanCount(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect()
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-      case _: FileSourceScanExec => 1
-      case other => other.children.map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
+    PlanWalk.fileScans(df).size
   }
 
   test("bare count(*) is metadata-only; disqualifiers scan; answers always agree") {

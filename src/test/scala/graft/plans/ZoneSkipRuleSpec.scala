@@ -235,15 +235,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
 
       def executedNumFiles(df: org.apache.spark.sql.DataFrame): Long = {
         df.collect()
-        def walk(p: org.apache.spark.sql.execution.SparkPlan): Long = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(q.plan)
-          case sc: FileSourceScanExec => sc.metrics("numFiles").value
-          case other => other.children.map(walk).sum
-        }
-        walk(df.queryExecution.executedPlan)
+        PlanWalk.fileScans(df).map(_.metrics("numFiles").value).sum
       }
 
       // data filter + partition filter: the zone index keeps 2 files
