@@ -59,6 +59,13 @@ object ScaleStress {
     spark.stop()
   }
 
+  /** Exchange nodes (shuffle and broadcast) in `df`'s physical plan. */
+  private def exchangeNodes(df: DataFrame): Int =
+    graft.plans.PlanWalk.nodes(df.queryExecution.executedPlan).count {
+      case _: org.apache.spark.sql.execution.exchange.Exchange => true
+      case _ => false
+    }
+
   // ---- data generation ----------------------------------------------------
 
   private def replicate(base: DataFrame, replicas: Int)(one: (DataFrame, Int) => DataFrame): DataFrame =
@@ -394,15 +401,7 @@ object ScaleStress {
       require(parts >= want,
         s"fanout invariant precondition: multi-file scan yields $parts < $want " +
           "partitions even at 1 MB splits — regenerate the stress dir")
-      val fanned = graft.queries.Tables.fanOut(multi)
-      val plan = fanned.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("plans/r14"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("plans/r14/fanout_guard_x10.txt"),
-        s"// fanOut(multi-file scan, $parts partitions >= $want cores)" +
-          s" -> identity, $exchanges Exchange nodes\n" + plan)
+      val exchanges = exchangeNodes(graft.queries.Tables.fanOut(multi))
       println(s"| fanOut guard @x$x | multi-file scan $parts partitions, " +
         s"fanOut exchanges=$exchanges (must be 0) |")
       require(exchanges == 0,
@@ -410,10 +409,7 @@ object ScaleStress {
     }
     // the single-file fixture table must STILL fan out
     val single = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    val fannedSingle = graft.queries.Tables.fanOut(single)
-    require(fannedSingle.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      .linesIterator.exists(_.contains("Exchange")),
+    require(exchangeNodes(graft.queries.Tables.fanOut(single)) > 0,
       "fanOut skipped the exchange on a single-file scan")
     }
 

@@ -258,34 +258,11 @@ object Groom {
       // group's siblings drain.
       graft.Sessions.isolated(spark, "spark.sql.shuffle.partitions" ->
           math.max(2, 2 * maxRowsPerFile / PartitionStore.MaxRowsPerFile).toString) { narrow =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(groups.size, maxConcurrentGroups)))
-        try {
-          val onPool = scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val futures = groups.map(g => scala.concurrent.Future {
-            compactGroup(narrow, baseDir, model, g, maxRowsPerFile)
-          }(onPool))
-          // the combinator's callbacks run on the completing thread: on
-          // a fail-fast exit the pool is shut down while siblings still
-          // complete, and a callback sent to it then would be rejected
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.parasitic
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
-        } finally {
-          pool.shutdown()
-          // a fail-fast Await may leave sibling compactions mid-flight;
-          // returning while they still write/delete store files would
-          // race the caller's next listKeys/groom pass — and if even the
-          // drain WINDOW expires, the caller must not proceed as if the
-          // store were quiet
-          if (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) {
-            pool.shutdownNow()
-            throw new IllegalStateException(
-              "groom: sibling compactions still running after the 1h drain " +
-                "window — store may be mid-mutation; do not trust the listing")
-          }
-        }
+        // a fail-fast exit still drains sibling compactions: returning
+        // while they write/delete store files would race the caller's
+        // next listKeys/groom pass
+        graft.core.FanOut.run("groom", maxConcurrentGroups)(groups.map(g => () =>
+          compactGroup(narrow, baseDir, model, g, maxRowsPerFile)))
       }
     }
     // iteration cap reached: the listing may still contain groomable

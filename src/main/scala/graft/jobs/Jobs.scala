@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
-import graft.train.{Loader, ModelStore, Trainer}
+import graft.train.{ModelStore, Trainer}
 
 /** User-facing job entry points — the engine's equivalents of the
   * reference's serverless handlers (ingest lambda, groom state
@@ -66,32 +66,17 @@ object TrainJob {
     val Array(storeDir, model, outDir) = args.take(3)
     val maxRows = args.lift(3).map(_.toLong).getOrElse(8000000L)
     val spark = Jobs.session("graft-train")
-    import org.apache.spark.sql.functions.lit
 
     val keys = PartitionStore.listKeys(spark, storeDir, model)
     require(keys.nonEmpty,
       s"no partitions for model '$model' under $storeDir/rewarded_decisions/$model/parquet — " +
         "check the model name and store path")
 
-    val cfg = Trainer.TrainConfig()
-    val sample = if (cfg.explore) graft.encoding.Encoding.NonZeroPoissonProbability else 1.0
     // artifacts are scoped per model so a shared outDir can never
     // cross-contaminate checkpoints between models
     val modelOut = s"$outDir/$model"
-
-    val pm = ModelStore.loadCheckpoint(spark, s"$modelOut/checkpoint").getOrElse {
-      val phase1 = Loader.load(spark, storeDir, model,
-        maxRows = maxRows, minRows = maxRows, sample = sample, seed = cfg.seed)
-        .withColumn(graft.schema.Schema.Model, lit(model))
-      val trained = Trainer.trainPropensity(phase1, cfg)
-      ModelStore.saveCheckpoint(trained, s"$modelOut/checkpoint")
-      trained
-    }
-
-    val phase2 = Loader.load(spark, storeDir, model,
-      maxRows = maxRows, sample = sample, seed = cfg.seed + 1)
-      .withColumn(graft.schema.Schema.Model, lit(model))
-    val dm = Trainer.trainDecision(phase2, pm, cfg)
+    val dm = graft.pipeline.RdrPipeline.trainFromStore(spark, storeDir, model,
+      Trainer.TrainConfig(), ckptDir = Some(s"$modelOut/checkpoint"), maxRows = maxRows).decision
     ModelStore.saveDecisionModel(dm, s"$modelOut/latest")
     // publish the consumer-facing artifact: gzipped bundle under
     // models/archive/... with a models/latest/{model}.tar.gz copy

@@ -85,14 +85,15 @@ object Cbo {
     root.put("bytes", stats.bytes)
     val nd = root.putObject("ndv")
     stats.ndv.toSeq.sortBy(_._1).foreach { case (k, v) => nd.put(k, v) }
-    val p = new org.apache.hadoop.fs.Path(dir, StatsFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
+    // replaced whole, never truncated in place: the optimizer rule
+    // reads this file mid-planning and must never see a torn one
+    graft.core.Commit.replaceFile(new org.apache.hadoop.fs.Path(dir, StatsFile).toString)(
+      _.write(m.writeValueAsBytes(root)))
     // best-effort cleanup of the legacy UNPREFIXED sidecar name: left
     // in a table directory it gets listed as table data and fails
     // every read of the table (the reason StatsFile is now _-prefixed)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "table_stats.json"), false)
+    val legacy = new org.apache.hadoop.fs.Path(dir, "table_stats.json")
+    legacy.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(legacy, false)
   }
 
   def readStats(spark: SparkSession, dir: String): Option[TableStats] =
@@ -103,22 +104,17 @@ object Cbo {
     * (which has no DataFrame reader available mid-plan).
     */
   def readStatsPath(p: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Option[TableStats] = {
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      val nd = root.get("ndv")
-      val ndv = scala.jdk.CollectionConverters
-        .IteratorHasAsScala(nd.fieldNames()).asScala
-        .map(f => f -> nd.get(f).asLong()).toMap
-      Some(TableStats(root.get("rows").asLong(), root.get("bytes").asLong(), ndv))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+      conf: org.apache.hadoop.conf.Configuration): Option[TableStats] =
+    graft.core.Commit.readBytes(p.toString, conf).flatMap { bytes =>
+      try {
+        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+        val nd = root.get("ndv")
+        val ndv = scala.jdk.CollectionConverters
+          .IteratorHasAsScala(nd.fieldNames()).asScala
+          .map(f => f -> nd.get(f).asLong()).toMap
+        Some(TableStats(root.get("rows").asLong(), root.get("bytes").asLong(), ndv))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
 
   /** Default broadcast budget: MEASURED bytes, so it can sit well
     * above Spark's conservative 10 MB scan-size default — a measured

@@ -1,8 +1,5 @@
 package graft.operators
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -129,19 +126,11 @@ object Compact {
       // documented in the scaladoc)
       bin.foreach { case (p, _) => fs.delete(p, false) }
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(bins.size, maxConcurrentBins)))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(
-        Future.sequence(bins.zipWithIndex.map { case ((dir, bin), i) =>
-          Future(rewriteBin(dir, bin, i))
-        }),
-        Duration.Inf)
-    } finally {
-      pool.shutdown()
-      fs.delete(tmpRoot, true)
-    }
+    // a failing bin is rethrown only after its siblings drain: none is
+    // still renaming into the table or writing under tmpRoot by then
+    try graft.core.FanOut.run("compact", maxConcurrentBins)(
+      bins.zipWithIndex.map { case ((dir, bin), i) => () => rewriteBin(dir, bin, i) })
+    finally fs.delete(tmpRoot, true)
 
     // sidecar co-maintenance: new files harvest, dead entries drop,
     // tracked blooms re-attach — all incremental (O(changed files)).

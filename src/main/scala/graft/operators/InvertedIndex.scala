@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import graft.core.Commit
 
 /** Materialized inverted index: the posting-list relation persisted as
   * a term-hash-bucket-PARTITIONED parquet table, the lexical analogue
@@ -26,15 +26,7 @@ object InvertedIndex {
 
   final case class Index(dir: String, numBuckets: Int, nDocs: Long, avgdl: Double)
 
-  // shared with IvfIndex via SidecarIndex — one copy of the atomic
-  // build-and-swap protocol: a failed rebuild must never pair new
-  // postings with an old meta sidecar (stale N/avgdl silently skew
-  // every BM25 score)
-  private def fs(dir: String) = SidecarIndex.fs(dir)
-  private def writeSidecar(dir: String, name: String, content: String): Unit =
-    SidecarIndex.writeSidecar(dir, name, content)
-  private def buildAtomically(dir: String)(writeTo: String => Unit): Unit =
-    SidecarIndex.buildAtomically(dir)(writeTo)
+  private val MetaFile = "meta.json"
 
   /** term → partition bucket (internal — nothing needs to reproduce it
     * outside the JVM, so plain xxhash64 is fine).
@@ -61,25 +53,27 @@ object InvertedIndex {
       val dfByTerm = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val Array(n, avgdl) = lens.agg(count(lit(1)).cast("double"), avg("dl"))
         .collect().head.toSeq.map(_.asInstanceOf[Double]).toArray
-      buildAtomically(dir) { tmp =>
+      // the whole build swaps in through Commit: a failed rebuild must
+      // never pair new postings with an old meta sidecar (stale
+      // N/avgdl silently skew every BM25 score)
+      Commit.replaceDir(dir) { tmp =>
         tf.join(dfByTerm, "term")
           .join(lens, "id")
           .withColumn("bucket", bucketOf(col("term"), numBuckets))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$tmp/postings")
-        writeSidecar(tmp, "meta.json",
-          s"""{"numBuckets":$numBuckets,"nDocs":${n.toLong},"avgdl":$avgdl}""")
+        Commit.writeBytes(s"$tmp/$MetaFile",
+          s"""{"numBuckets":$numBuckets,"nDocs":${n.toLong},"avgdl":$avgdl}"""
+            .getBytes("UTF-8"))
       }
       Index(dir, numBuckets, n.toLong, avgdl)
     } finally { words.unpersist(blocking = false); () }
   }
 
   def load(spark: SparkSession, dir: String): Index = {
-    val in = fs(dir).open(new HPath(dir, "meta.json"))
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val meta = Commit.readBytes(s"$dir/$MetaFile").getOrElse(
+      throw new java.io.FileNotFoundException(s"no inverted index at $dir"))
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
     Index(dir, node.get("numBuckets").intValue(),
       node.get("nDocs").longValue(), node.get("avgdl").doubleValue())
   }

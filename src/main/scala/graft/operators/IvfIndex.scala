@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
+
 import org.apache.hadoop.fs.{Path => HPath}
 
 /** Materialized IVF index: the cell assignment from `Ann` persisted as
@@ -20,16 +22,15 @@ object IvfIndex {
 
   final case class Index(dir: String, centroids: Array[Seq[Double]])
 
-  // the swap protocol and sidecar I/O live in SidecarIndex — one
-  // crash-safety-critical implementation shared with InvertedIndex
-  // (a failed rebuild must never pair NEW cell assignments with an
-  // OLD centroids sidecar: probes would prune the wrong partitions
-  // and silently return wrong neighbors)
-  private def fs(dir: String) = SidecarIndex.fs(dir)
+  // every build (cells + sidecars) swaps in whole through Commit: a
+  // failed rebuild must never pair NEW cell assignments with an OLD
+  // centroids sidecar (probes would prune the wrong partitions and
+  // silently return wrong neighbors)
   private def writeSidecar(dir: String, name: String, content: String): Unit =
-    SidecarIndex.writeSidecar(dir, name, content)
-  private def buildAtomically(dir: String)(writeTo: String => Unit): Unit =
-    SidecarIndex.buildAtomically(dir)(writeTo)
+    Commit.writeBytes(s"$dir/$name", content.getBytes("UTF-8"))
+
+  private def readSidecar(dir: String, name: String): Option[String] =
+    Commit.readBytes(s"$dir/$name").map(new String(_, "UTF-8"))
 
   private def centroidsJson(cents: Array[Seq[Double]]): String =
     cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
@@ -60,7 +61,7 @@ object IvfIndex {
         .otherwise(raise_error(concat(
           lit(s"ivf build: vector dimension must be $dim, got "),
           size(col(vecCol)).cast("string"))).cast("array<double>")))
-    buildAtomically(dir) { tmp =>
+    Commit.replaceDir(dir) { tmp =>
       Ann.withCell(checked, vecCol, cents)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/cells")
       writeSidecar(tmp, "centroids.json", centroidsJson(cents))
@@ -97,7 +98,7 @@ object IvfIndex {
   def append(index: Index, df: DataFrame, vecCol: String): Index = {
     // a PQ cells table carries code/vnorm columns a raw batch lacks —
     // appending un-encoded rows would silently corrupt ADC scoring
-    require(!fs(index.dir).exists(new HPath(index.dir, "codebook.json")),
+    require(!Commit.fs(index.dir).exists(new HPath(index.dir, "codebook.json")),
       s"${index.dir} is an IVF-PQ index; append supports plain IVF only — " +
         "rebuild with buildPq (or PQ-encode the batch) instead")
     val dim = index.centroids.headOption.map(_.length).getOrElse(0)
@@ -131,9 +132,9 @@ object IvfIndex {
       // into the appended side of the stats sidecar. Best-effort
       // monitoring, not correctness: a crash between the parquet
       // append and this write undercounts the appended side (drift is
-      // then under-reported until the next append), a crash MID-write
-      // leaves a sidecar loadStats rejects (index becomes untracked,
-      // never corrupted), and a pre-stats index is simply not tracked.
+      // then under-reported until the next append), the sidecar is
+      // replaced whole (never torn mid-write), and a pre-stats index is
+      // simply not tracked.
       // The read-modify-write is serialized per JVM; concurrent
       // appenders in SEPARATE processes must serialize externally or
       // accept lost census updates (the parquet data itself is safe).
@@ -144,8 +145,8 @@ object IvfIndex {
         try
           loadStats(index.dir).foreach { st =>
             val batch = assignmentCensus(proj, vecCol, index.centroids)
-            writeSidecar(index.dir, StatsSidecar,
-              statsJson(st.copy(appended = mergeSides(st.appended, batch))))
+            Commit.replaceFile(s"${index.dir}/$StatsSidecar")(_.write(
+              statsJson(st.copy(appended = mergeSides(st.appended, batch))).getBytes("UTF-8")))
           }
         catch { case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -250,10 +251,8 @@ object IvfIndex {
     * truncated histograms would yield a plausible-but-wrong PSI.
     */
   def loadStats(dir: String): Option[AppendStats] =
-    try {
-      if (!fs(dir).exists(new HPath(dir, StatsSidecar))) return None
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(SidecarIndex.readSidecar(dir, StatsSidecar))
+    try readSidecar(dir, StatsSidecar).flatMap { text =>
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
       def side(n: com.fasterxml.jackson.databind.JsonNode): DriftSide = DriftSide(
         n.get("n").longValue(),
         (0 until n.get("cells").size()).map { i =>
@@ -322,11 +321,9 @@ object IvfIndex {
     * stays on disk until probed).
     */
   def load(spark: SparkSession, dir: String): Index = {
-    val in = fs(dir).open(new HPath(dir, "centroids.json"))
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(readSidecar(dir, "centroids.json").getOrElse(
+        throw new java.io.FileNotFoundException(s"no IVF index at $dir")))
     val cents = (0 until node.size()).map { i =>
       val row = node.get(i)
       (0 until row.size()).map(row.get(_).doubleValue()): Seq[Double]
@@ -404,7 +401,7 @@ object IvfIndex {
     // over the full corpus.
     val cents = Ann.kmeansCentroids(df, vecCol, numCells, seed, trainSampleFraction)
     val cb = Pq.train(df, vecCol, dim, m, k, seed, trainSampleFraction)
-    buildAtomically(dir) { tmp =>
+    Commit.replaceDir(dir) { tmp =>
       Pq.encode(Ann.withCell(df, vecCol, cents), vecCol, cb)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/cells")
       writeSidecar(tmp, "centroids.json", centroidsJson(cents))
@@ -418,11 +415,9 @@ object IvfIndex {
   /** Reopen an IVF-PQ index (centroids + codebook sidecars). */
   def loadPq(spark: SparkSession, dir: String): (Index, Pq.Codebook) = {
     val idx = load(spark, dir)
-    val in = fs(dir).open(new HPath(dir, "codebook.json"))
-    val json =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(readSidecar(dir, "codebook.json").getOrElse(
+        throw new java.io.FileNotFoundException(s"no IVF-PQ codebook at $dir")))
     val cb = Array.tabulate(node.size()) { i =>
       val sub = node.get(i)
       Array.tabulate(sub.size()) { c =>

@@ -554,8 +554,8 @@ object ZoneMap {
     }
     // snapshot-isolated write order (single-maintainer contract, like
     // any lake-format commit without a lock service): uuid-versioned
-    // shards first, then the index that names them swapped in via
-    // temp-file + rename (an in-place truncate-write could expose a
+    // shards first, then the index that names them swapped in through
+    // Commit.replaceFile (an in-place truncate-write could expose a
     // PARTIAL index to a concurrent reader, whose parse-fail would
     // cache as no-sidecar under that mtime), then GC of unreferenced
     // old shards. A reader holding either index sees a complete
@@ -565,38 +565,17 @@ object ZoneMap {
     val byCol = entries.groupBy(_.col)
     val shardOf = byCol.keys.toSeq.sorted.map(c => c -> shardName(c, uuid)).toMap
     shardOf.foreach { case (c, name) =>
-      SidecarIndex.writeSidecar(tableDir, name, entryArray(byCol(c)))
+      graft.core.Commit.writeBytes(new Path(tableDir, name).toString,
+        entryArray(byCol(c)).getBytes("UTF-8"))
     }
     val idx = m.createObjectNode()
     idx.put("v", 2)
     val sh = idx.putObject("shards")
     shardOf.toSeq.sortBy(_._1).foreach { case (c, name) => sh.put(c, name) }
-    val tmpName = s".$SidecarFile.tmp-$uuid"
-    SidecarIndex.writeSidecar(tableDir, tmpName, m.writeValueAsString(idx))
-    val fsx = SidecarIndex.fs(tableDir)
-    val dst = new Path(tableDir, SidecarFile)
-    val src = new Path(tableDir, tmpName)
-    // prefer an ATOMIC rename-overwrite (FileContext supports it on
-    // HDFS and local): a delete-then-rename opens a window where a
-    // crash — or a concurrent reader — sees NO index at all and
-    // pruning/manifest-agg silently disable until the next write.
-    // Filesystems without the overwrite semantic fall back to the old
-    // two-step (whose worst crash window is still fail-safe: no index).
-    val overwrote =
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          fsx.getUri, fsx.getConf)
-        fc.rename(fc.makeQualified(src), fc.makeQualified(dst),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch { case scala.util.control.NonFatal(_) => false }
-    if (!overwrote) {
-      fsx.delete(dst, false) // rename-over-existing fails on some FSs
-      if (!fsx.rename(src, dst))
-        throw new java.io.IOException(s"sidecar index swap failed at $dst")
-    }
+    graft.core.Commit.replaceFile(new Path(tableDir, SidecarFile).toString)(
+      _.write(m.writeValueAsBytes(idx)))
     // best-effort GC: shard files from superseded snapshots
-    val fs = SidecarIndex.fs(tableDir)
+    val fs = graft.core.Commit.fs(tableDir)
     val liveNames = shardOf.values.toSet + SidecarFile
     try fs.listStatus(new Path(tableDir)).foreach { st =>
       val n = st.getPath.getName

@@ -86,15 +86,14 @@ object GateArtifacts {
     java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(scratchRoot), prefix).toString
 
-  /** Build a named artifact slot ATOMICALLY: `build` writes into a
-    * staging directory, and only a fully-built staging tree is swapped
-    * into the published slot path (delete old + same-filesystem atomic
-    * rename). Each gate owns one slot and rebuilds it per invocation,
-    * so a repeated run (bench repeats, local iteration) never censuses
-    * stale files — and a crash mid-build leaves the PREVIOUS slot
-    * intact, while a crash mid-swap leaves no slot at all (the census
-    * then fails loudly on a missing path). Never a torn half-written
-    * slot silently censused as complete. Returns the published path.
+  /** Build a named artifact slot: `build` writes into a staging
+    * directory, and only a fully-built staging tree is swapped into the
+    * published slot path through [[graft.core.Commit.replaceDir]]. Each
+    * gate owns one slot and rebuilds it per invocation, so a repeated
+    * run (bench repeats, local iteration) never censuses stale files —
+    * and a failed build or swap leaves the PREVIOUS slot intact. Never a
+    * torn half-written slot silently censused as complete.
+    * Returns the published path.
     */
   def buildSlot(sfDir: String, name: String)(build: String => Unit): String = {
     val slot = s"${dir(sfDir)}/$name"
@@ -102,7 +101,7 @@ object GateArtifacts {
     // not write into each other's staging tree — last rename wins the
     // slot, which is the same winner-takes-all a concurrent freshSlot
     // rewrite had, minus the torn-interleaving. Orphans from CRASHED
-    // builds (which never reach their own deleteTree) are reaped here
+    // builds (which never reach their own cleanup) are reaped here
     // so retries start clean and /tmp stays flat — but ONLY staging
     // dirs older than `StagingReapAgeMs`: a young staging sibling may
     // belong to a LIVE concurrent builder, and deleting it would crash
@@ -112,20 +111,13 @@ object GateArtifacts {
       val now = System.currentTimeMillis()
       val siblings = java.nio.file.Files.list(parent)
       try siblings.filter { p =>
-        p.getFileName.toString.startsWith(s"$name.staging-") &&
+        p.getFileName.toString.startsWith(graft.core.Commit.stagingPrefix(name)) &&
           (try now - java.nio.file.Files.getLastModifiedTime(p).toMillis > StagingReapAgeMs
            catch { case _: java.io.IOException => false }) // vanished concurrently
       }.forEach(deleteTree(_))
       finally siblings.close()
     }
-    val staging = java.nio.file.Paths.get(
-      s"$slot.staging-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.createDirectories(staging)
-    try build(staging.toString)
-    catch { case e: Throwable => deleteTree(staging); throw e }
-    deleteTree(java.nio.file.Paths.get(slot))
-    java.nio.file.Files.move(staging, java.nio.file.Paths.get(slot),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.core.Commit.replaceDir(slot)(build)
     slot
   }
 

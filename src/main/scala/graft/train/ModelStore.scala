@@ -5,7 +5,7 @@ import org.apache.spark.ml.regression.GBTRegressionModel
 import org.apache.spark.sql.SparkSession
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.core.{CanonicalJson, Tar}
+import graft.core.{CanonicalJson, Commit, Tar}
 import graft.train.Trainer.{DecisionModel, PropensityModel}
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -16,55 +16,15 @@ import org.apache.hadoop.fs.{Path => HPath}
   * reference's in-booster attributes become a metadata.json sidecar
   * (string tables, feature names, seed, created_at, version).
   *
-  * All IO goes through the Hadoop FileSystem API so artifact dirs may
-  * live on any supported filesystem (local, HDFS, object stores) —
-  * the same place the MLlib model itself is written.
+  * Every artifact is written WHOLE (model + metadata) and swapped in
+  * through [[Commit]]: writing the pieces in place would let a crash
+  * between the model save and the metadata write pair a NEW booster
+  * with yesterday's still-valid metadata — loads would then encode with
+  * the wrong feature/string mapping (and de-normalize with the wrong
+  * mean/std), silently. A failed save leaves the old artifact or none
+  * (a missing checkpoint → retrain, which is always safe).
   */
 object ModelStore {
-
-  private def fs(dir: String) = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    new HPath(dir).getFileSystem(conf)
-  }
-
-  /** Swap a fully-written `tmp` directory into place at `root` with
-    * move-aside semantics (the same pattern as the index builds in
-    * InvertedIndex/IvfIndex): never delete-then-rename — every crash
-    * window leaves either the old or the new artifact live at `root`,
-    * and a failed swap restores the old instead of destroying it.
-    */
-  private def swapIn(f: org.apache.hadoop.fs.FileSystem, tmp: HPath, root: HPath): Unit = {
-    f.mkdirs(root.getParent)
-    val old = new HPath(root.getParent,
-      s".${root.getName}.old-${java.util.UUID.randomUUID()}")
-    val hadOld = f.exists(root)
-    if (hadOld && !f.rename(root, old))
-      throw new java.io.IOException(s"swap: move-aside of $root failed")
-    if (!f.rename(tmp, root)) {
-      if (hadOld) f.rename(old, root)
-      f.delete(tmp, true)
-      throw new java.io.IOException(s"swap $tmp -> $root failed")
-    }
-    if (hadOld) { f.delete(old, true); () }
-  }
-
-  private def writeBytes(dir: String, name: String, content: Array[Byte]): Unit = {
-    val f = fs(dir)
-    f.mkdirs(new HPath(dir))
-    val out = f.create(new HPath(dir, name), true)
-    try out.write(content) finally out.close()
-  }
-
-  private def readBytes(dir: String, name: String): Option[Array[Byte]] = {
-    val f = fs(dir)
-    val p = new HPath(dir, name)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in))
-      finally in.close()
-    }
-  }
 
   val Version = "1.0"
 
@@ -89,23 +49,6 @@ object ModelStore {
 
   private val MetadataFile = "metadata.json"
 
-  /** Stage a WHOLE artifact (whatever `writeBody` puts in the stage dir,
-    * plus `metadata`) in a side dir, then swap it in at `dir`. Writing
-    * the pieces in place would let a crash between the model save and
-    * the metadata write pair a NEW booster with yesterday's still-valid
-    * metadata — loads would then encode with the wrong feature/string
-    * mapping (and de-normalize with the wrong mean/std), silently. Every
-    * crash window of the swap leaves the old artifact or none (a missing
-    * checkpoint → retrain, which is always safe).
-    */
-  private def stageThenSwap(dir: String, metadata: String)(writeBody: String => Unit): Unit = {
-    val root = new HPath(dir)
-    val tmp = new HPath(root.getParent, s".${root.getName}.tmp-${java.util.UUID.randomUUID()}")
-    writeBody(tmp.toString)
-    writeBytes(tmp.toString, MetadataFile, metadata.getBytes("UTF-8"))
-    swapIn(fs(dir), tmp, root)
-  }
-
   /** The metadata fields every artifact carries. */
   private final case class Metadata(json: com.fasterxml.jackson.databind.JsonNode,
       featureNames: Seq[String], stringTables: Map[String, Seq[Long]]) {
@@ -122,7 +65,7 @@ object ModelStore {
   private def loadArtifact[A](spark: SparkSession, dir: String)(
       load: Metadata => Option[A]): Option[A] = {
     SparkSession.setActiveSession(spark)
-    readBytes(dir, MetadataFile).flatMap { bytes =>
+    Commit.readBytes(s"$dir/$MetadataFile").flatMap { bytes =>
       try {
         val meta = CanonicalJson.parse(new String(bytes, "UTF-8"))
         val names = (0 until meta.get("feature_names").size())
@@ -141,9 +84,11 @@ object ModelStore {
   // ---- phase-1 checkpoint (M4) -------------------------------------------
 
   def saveCheckpoint(pm: PropensityModel, dir: String): Unit =
-    stageThenSwap(dir, metadataJson(pm.featureNames, pm.stringTables, pm.modelSeed,
-        Map("mean_item_count" -> pm.meanItemCount))) { tmp =>
+    Commit.replaceDir(dir) { tmp =>
       pm.model.write.overwrite().save(s"$tmp/phase1_model")
+      Commit.writeBytes(s"$tmp/$MetadataFile", metadataJson(pm.featureNames,
+        pm.stringTables, pm.modelSeed, Map("mean_item_count" -> pm.meanItemCount))
+        .getBytes("UTF-8"))
     }
 
   /** Reuse the phase-1 model when version matches and it is younger
@@ -168,18 +113,19 @@ object ModelStore {
     // agree byte for byte (same created_at)
     val metadata = metadataJson(dm.featureNames, dm.stringTables, dm.modelSeed,
       Map("reward_mean" -> dm.rewardMean, "reward_std" -> dm.rewardStd))
-    stageThenSwap(dir, metadata) { tmp =>
+    Commit.replaceDir(dir) { tmp =>
       dm.model.write.overwrite().save(s"$tmp/model")
       // native `.xgb` booster (XGBoost4J probe hit at train time): part
       // of the artifact dir, so publish/unpack tar it automatically
-      dm.nativeBooster.foreach(b => writeBytes(tmp, Boosters.NativeBoosterFile, b))
+      dm.nativeBooster.foreach(b => Commit.writeBytes(s"$tmp/${Boosters.NativeBoosterFile}", b))
       // CoreML `.mlmodel` (model_utils.py:275-321): the tree ensemble +
       // the same metadata JSON in the userDefined dictionary, so Apple-
       // device consumers get the artifact the reference publishes. See
       // CoreMLExport for the (documented) offline validation boundary.
-      writeBytes(tmp, CoreMLExport.MlModelFile,
+      Commit.writeBytes(s"$tmp/${CoreMLExport.MlModelFile}",
         CoreMLExport.toMlModelBytes(dm.model, dm.featureNames,
           Map("graft.metadata.json" -> metadata)))
+      Commit.writeBytes(s"$tmp/$MetadataFile", metadata.getBytes("UTF-8"))
     }
   }
 
@@ -234,19 +180,15 @@ object ModelStore {
     */
   def publish(modelDir: String, modelsRoot: String, modelName: String,
       now: java.time.Instant = java.time.Instant.now()): (String, String) = {
-    val f = fs(modelDir)
-    val outFs = fs(modelsRoot)
+    val f = Commit.fs(modelDir)
     val arcKey = archiveKey(modelName, now)
     val arcPath = new HPath(modelsRoot, arcKey)
-    outFs.mkdirs(arcPath.getParent)
-    // stream into a tmp key and rename in only after a COMPLETE
-    // archive: a failure mid-walk would otherwise leave a valid gzip
-    // of a truncated tar at the published key (the finally-close
-    // writes a clean gzip trailer no matter what), which consumers
-    // would unpack as a silently partial model
-    val arcTmp = new HPath(arcPath.getParent, s".${arcPath.getName}.tmp")
-    try {
-      val gz = new java.util.zip.GZIPOutputStream(outFs.create(arcTmp, true))
+    // the archive lands only COMPLETE: a failure mid-walk would
+    // otherwise leave a valid gzip of a truncated tar at the published
+    // key (the close writes a clean gzip trailer no matter what), which
+    // consumers would unpack as a silently partial model
+    Commit.replaceFile(arcPath.toString) { out =>
+      val gz = new java.util.zip.GZIPOutputStream(out)
       try {
         walk(f, new HPath(modelDir)).foreach { case (rel, p, size) =>
           val in = f.open(p)
@@ -255,67 +197,46 @@ object ModelStore {
         }
         Tar.finish(gz)
       } finally gz.close()
-      if (!outFs.rename(arcTmp, arcPath))
-        throw new java.io.IOException(s"archive publish rename $arcTmp -> $arcPath failed")
-    } catch {
-      case e: Throwable => outFs.delete(arcTmp, false); throw e
     }
-    // copy archive → latest via tmp + OVERWRITE rename: `latest` is the
-    // key consumers poll, so it must never be absent or partial. A
-    // truncate-then-stream overwrite exposes a partial artifact during
-    // the copy; a delete-then-rename leaves a missing-key window and —
-    // if the rename then fails — no artifact AT ALL. FileContext.rename
-    // with Options.Rename.OVERWRITE replaces the destination atomically
-    // on HDFS/local. (On an object store a publisher would instead PUT
-    // the latest key directly — the PUT itself is atomic there.)
-    val latest = new HPath(modelsRoot, latestKey(modelName))
-    outFs.mkdirs(latest.getParent)
-    val tmp = new HPath(latest.getParent, s".${latest.getName}.tmp")
-    val in = outFs.open(arcPath)
-    val out = outFs.create(tmp, true)
-    try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 64 * 1024, true)
-    catch { case e: Exception => in.close(); out.close(); throw e }
-    org.apache.hadoop.fs.FileContext.getFileContext(latest.toUri, outFs.getConf)
-      .rename(tmp, latest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // `latest` is the key consumers poll, so it must never be absent or
+    // partial: the archive is copied over it through the same commit.
+    // (On an object store a publisher would instead PUT the latest key
+    // directly — the PUT itself is atomic there.)
+    Commit.replaceFile(new HPath(modelsRoot, latestKey(modelName)).toString) { out =>
+      val in = Commit.fs(modelsRoot).open(arcPath)
+      try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 64 * 1024, false)
+      finally in.close()
+    }
     (arcKey, latestKey(modelName))
   }
 
   /** Extract `models/latest/{name}.tar.gz` into destDir (the inverse
     * of publish); returns false when no published artifact exists.
-    * destDir is CLEARED first — consumers re-unpack each new artifact
+    * destDir is REPLACED whole — consumers re-unpack each new artifact
     * into the same directory, and leftover part-files from a previous
     * artifact would otherwise mix into the MLlib directory-load (which
-    * reads every parquet file present) as a silently wrong model.
+    * reads every parquet file present) as a silently wrong model. The
+    * swap happens only after the whole archive reads cleanly: a
+    * truncated or corrupt artifact leaves the working model in place
+    * (the one failure a model-refresh path must survive).
     */
   def unpackLatest(modelsRoot: String, modelName: String, destDir: String): Boolean = {
-    val f = fs(modelsRoot)
+    val f = Commit.fs(modelsRoot)
     val latest = new HPath(modelsRoot, latestKey(modelName))
     if (!f.exists(latest)) return false
-    val destFs = fs(destDir)
-    // extract into a side dir and swap AFTER the whole archive reads
-    // cleanly — deleting the working model first would leave the
-    // consumer with nothing if the artifact turns out truncated or
-    // corrupt (the one failure a model-refresh path must survive)
-    val dest = new HPath(destDir)
-    val tmp = new HPath(dest.getParent,
-      s".${dest.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val in = new java.util.zip.GZIPInputStream(f.open(latest))
-    try {
-      Tar.read(in, (name, _, data) => {
+    Commit.replaceDir(destDir) { tmp =>
+      val destFs = Commit.fs(tmp)
+      val in = new java.util.zip.GZIPInputStream(f.open(latest))
+      try Tar.read(in, (name, _, data) => {
         // tar entry names come from the (possibly hostile) archive:
         // reject anything that could escape the destination (zip-slip)
         require(!name.startsWith("/") && !name.split('/').contains(".."),
           s"unsafe tar entry name: $name")
-        val p = new HPath(tmp, name)
-        destFs.mkdirs(p.getParent)
-        val out = destFs.create(p, true)
+        val out = destFs.create(new HPath(tmp, name), true)
         try org.apache.hadoop.io.IOUtils.copyBytes(data, out, 64 * 1024, false)
         finally out.close()
-      })
-    } catch {
-      case e: Throwable => destFs.delete(tmp, true); throw e
-    } finally in.close()
-    swapIn(destFs, tmp, dest)
+      }) finally in.close()
+    }
     true
   }
 
@@ -324,6 +245,6 @@ object ModelStore {
       Some(DecisionModel(
         GBTRegressionModel.load(s"$dir/model"), meta.featureNames, meta.stringTables,
         meta.long("model_seed"), meta.double("reward_mean"), meta.double("reward_std"),
-        readBytes(dir, Boosters.NativeBoosterFile)))
+        Commit.readBytes(s"$dir/${Boosters.NativeBoosterFile}")))
     }
 }

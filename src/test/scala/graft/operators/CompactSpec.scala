@@ -99,4 +99,45 @@ class CompactSpec extends AnyFunSuite with SparkTestBase {
     assert(res2.bins === 0)
     assert(ZoneMap.dataFiles(spark, dir).toSet === before)
   }
+
+  test("a failing bin is rethrown only after its sibling bins drain") {
+    val work = Files.createTempDirectory("compact3").toString
+    val dir = s"$work/t"
+    // 8 partition dirs of 3 tiny files each: one bin per dir
+    (0 until 3).foreach { i =>
+      (0 until 8 * 20).map(j => (i * 1000L + j, s"p${j % 8}")).toDF("id", "p")
+        .repartition(col("p")).write.mode("append").partitionBy("p").parquet(dir)
+    }
+    // one bin carries a corrupt input and fails
+    Files.write(java.nio.file.Paths.get(dir, "p=p3", "part-zz-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    def listing(): Seq[String] = {
+      val w = Files.walk(java.nio.file.Paths.get(dir))
+      try { import scala.jdk.CollectionConverters._; w.iterator().asScala.map(_.toString).toSeq.sorted }
+      finally w.close()
+    }
+
+    val err = new java.io.ByteArrayOutputStream()
+    val origErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val (thrown, atReturn, settled) =
+      try {
+        val t = intercept[Exception](Compact.compact(spark, dir,
+          targetBytes = 512L * 1024 * 1024, maxConcurrentBins = 2))
+        val atReturn = listing()
+        Thread.sleep(3000) // long enough for any straggling bin to land
+        (t, atReturn, listing())
+      } finally System.setErr(origErr)
+
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(thrown).exists(_.contains("part-zz-corrupt.parquet")),
+      s"the failing bin's error, got: ${messages(thrown)}")
+    assert(!err.toString.contains("RejectedExecutionException"), err.toString)
+    assert(settled == atReturn, "a sibling bin still changed the table after compact returned")
+    assert(!atReturn.exists(_.contains("_compact_tmp_")), "compaction staging left behind")
+    // the failed bin's inputs are untouched; every other bin compacted
+    assert(ZoneMap.dataFiles(spark, dir).count(_.contains("p=p3")) === 4)
+    assert(ZoneMap.dataFiles(spark, dir).length === 4 + 7)
+  }
 }

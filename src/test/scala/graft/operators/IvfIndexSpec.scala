@@ -256,7 +256,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(grown.needsRecluster && grown.appendedFraction > 0.5, grown.toString)
 
     // a pre-stats index (no sidecar) is simply untracked
-    SidecarIndex.fs(dir).delete(
+    graft.core.Commit.fs(dir).delete(
       new org.apache.hadoop.fs.Path(dir, "append_stats.json"), false)
     assert(IvfIndex.driftReport(idx).isEmpty)
   }
@@ -319,7 +319,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(messages(e).exists(_.contains("vector dimension must be 4")),
       s"got: ${messages(e)}")
     // the failed build must not leave a live index behind
-    assert(!SidecarIndex.fs(dir).exists(
+    assert(!graft.core.Commit.fs(dir).exists(
       new org.apache.hadoop.fs.Path(dir, "centroids.json")))
   }
 }

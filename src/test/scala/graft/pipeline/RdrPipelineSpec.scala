@@ -95,7 +95,7 @@ class RdrPipelineSpec extends AnyFunSuite with SparkTestBase {
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("probe.staging-")).toSeq
+          .filter(_.startsWith(".probe.tmp-")).toSeq
       } finally s.close()
     }
     assert(stagingOrphans().isEmpty, "crashed staging dir is cleaned up")
@@ -103,16 +103,18 @@ class RdrPipelineSpec extends AnyFunSuite with SparkTestBase {
     // a staging orphan from a KILLED build (crash before its own
     // cleanup ran) is reaped by the next buildSlot once it is OLD —
     // backdate its mtime past the reap threshold
-    Files.createDirectories(Paths.get(s"$slot.staging-deadbeef"))
-    Files.writeString(Paths.get(s"$slot.staging-deadbeef", "junk.txt"), "x")
-    Files.setLastModifiedTime(Paths.get(s"$slot.staging-deadbeef"),
+    val dead = Paths.get(slot).resolveSibling(".probe.tmp-deadbeef")
+    Files.createDirectories(dead)
+    Files.writeString(dead.resolve("junk.txt"), "x")
+    Files.setLastModifiedTime(dead,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 2 * 60 * 60 * 1000L))
 
     // …while a FRESH staging sibling (a LIVE concurrent builder's
     // in-progress tree) must SURVIVE another builder's run untouched
-    Files.createDirectories(Paths.get(s"$slot.staging-live"))
-    Files.writeString(Paths.get(s"$slot.staging-live", "wip.txt"), "live")
+    val live = Paths.get(slot).resolveSibling(".probe.tmp-live")
+    Files.createDirectories(live)
+    Files.writeString(live.resolve("wip.txt"), "live")
 
     // a successful rebuild replaces v1 wholesale (no stale files):
     // v2 drops data.txt and ships other.txt only
@@ -122,9 +124,9 @@ class RdrPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(!Files.exists(Paths.get(slot, "data.txt")),
       "stale v1 file must not survive into the v2 slot")
     assert(Files.readString(Paths.get(slot, "other.txt")) == "v2")
-    assert(stagingOrphans() == Seq("probe.staging-live"),
+    assert(stagingOrphans() == Seq(".probe.tmp-live"),
       "old killed-build orphan reaped; live concurrent staging tree untouched")
-    assert(Files.readString(Paths.get(s"$slot.staging-live", "wip.txt")) == "live")
+    assert(Files.readString(live.resolve("wip.txt")) == "live")
     GateArtifacts.deleteTree(Paths.get(GateArtifacts.dir(sfTag)))
   }
 }

@@ -117,6 +117,36 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
     assert(loaded.model.predict(v) === dm.model.predict(v) +- 1e-12)
   }
 
+  test("a save that fails mid-write leaves the previous decision model loadable and no staging dir") {
+    import spark.implicits._
+    val df = syntheticDecisions(100).toDF()
+    val pm = Trainer.trainPropensity(df, cfg)
+    val dm = Trainer.trainDecision(df, pm, cfg)
+    val parent = java.nio.file.Files.createTempDirectory("model_fail")
+    val dir = parent.resolve("latest").toString
+    ModelStore.saveDecisionModel(dm, dir)
+
+    // one feature name too many: the booster is already written to
+    // staging when the CoreML export's feature-count check throws
+    intercept[IllegalArgumentException](
+      ModelStore.saveDecisionModel(dm.copy(featureNames = dm.featureNames :+ "x"), dir))
+
+    val loaded = ModelStore.loadDecisionModel(spark, dir).get
+    assert(loaded.featureNames == dm.featureNames)
+    val enc = Encoding.makeVectorEncoder(dm.featureNames, dm.stringTables, dm.modelSeed)
+    for (item <- Seq("\"a\"", "\"b\"", "\"c\""); device <- Seq("d0", "d1", "d2")) {
+      val (nums, strs) = Encoding.flattenPair(item, s"""{"device":"$device"}""")
+      val v = enc(nums, strs, 0.0)
+      assert(loaded.model.predict(v) == dm.model.predict(v))
+    }
+    val siblings = {
+      val s = java.nio.file.Files.list(parent)
+      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.map(_.getFileName.toString).toSeq }
+      finally s.close()
+    }
+    assert(siblings == Seq("latest"), s"staging debris left next to the artifact: $siblings")
+  }
+
   test("raw-reward training stores identity de-normalization (scores stay in reward units)") {
     import spark.implicits._
     val df = syntheticDecisions(100).toDF()
