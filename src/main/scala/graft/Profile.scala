@@ -2,15 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.JobExecutionStatus
+import scala.collection.immutable.ListMap
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.core.GateContext
+import graft.obs.Spans
 
-/** Measures gates and bench setup tasks pass by pass: wall time plus
-  * the jobs, stages and tasks Spark's status tracker recorded for each
-  * pass, and on demand the FormattedMode plan of each gate.
+/** Measures gates and bench setup tasks pass by pass: each pass runs in
+  * a span ([[graft.obs.Spans]]) and prints its wall and driver time,
+  * jobs, stages, tasks, executor CPU, GC, shuffle-write and spill bytes;
+  * on demand it writes the FormattedMode plan of each gate.
   *
   * Usage: runMain graft.Profile <name[,name...]> [--passes N] [--plans DIR]
   *   name     a gate (a key of SparkEntry.queries) or a bench setup
@@ -22,14 +26,16 @@ import graft.core.GateContext
   */
 object Profile {
 
-  /** One measured pass. `stages` and `tasks` count what ran: stages a
-    * job skipped because their shuffle output already existed are out.
+  /** One measured pass: the span totals of its gate or setup task (see
+    * [[graft.obs.Spans.Totals]]).
     */
   final case class Pass(name: String, pass: Int, wallS: Double,
-      jobs: Int, stages: Int, tasks: Int) {
+      jobs: Int, stages: Int, tasks: Int, driverS: Double, execCpuS: Double,
+      gcS: Double, shuffleWriteBytes: Long, spillBytes: Long) {
     override def toString: String = String.format(java.util.Locale.ROOT,
-      "[profile] %-28s pass %d  wall %8.3f s  jobs %4d  stages %4d  tasks %6d",
-      name, Int.box(pass), Double.box(wallS), Int.box(jobs), Int.box(stages), Int.box(tasks))
+      "[profile] %-28s pass %d  %s", name, Int.box(pass),
+      Spans.Totals(1, wallS, driverS, jobs, stages, tasks, execCpuS, gcS,
+        shuffleWriteBytes, spillBytes).fields)
   }
 
   private val Usage = "usage: graft.Profile <name[,name...]> [--passes N] [--plans DIR]"
@@ -59,67 +65,62 @@ object Profile {
         .getOrElse(throw new IllegalArgumentException(s"unknown gate or setup task: $name"))
     }
     plansDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    // a gate builds its frame (and runs its in-gate actions) under its
-    // own name, as in Bench
-    def build(name: String, fn: (SparkSession, String) => DataFrame): DataFrame =
-      GateContext.runningGate(name)(fn(spark, sfDir))
     def writePlan(name: String, df: DataFrame): Unit = plansDir.foreach(d =>
       Files.writeString(Paths.get(d, s"$name.txt"),
         df.queryExecution.explainString(FormattedMode)))
-    val sc = spark.sparkContext
     targets.flatMap { case (name, target) =>
       if (passes == 0) {
-        target.foreach(fn => writePlan(name, build(name, fn)))
+        target.foreach(fn => writePlan(name, GateContext.runningGate(name)(fn(spark, sfDir))))
         spark.catalog.clearCache()
         Nil
       } else (1 to passes).map { pass =>
-        val group = s"graft-profile-$name-$pass-${java.util.UUID.randomUUID()}"
-        sc.setJobGroup(group, s"$name pass $pass")
-        val t0 = System.nanoTime()
-        val df =
-          try target match {
-            case Right(fn) =>
-              val df = build(name, fn)
-              GateContext.runningGate(name)(df.count())
-              Some(df)
-            // a setup task runs under no gate name: its accessors refuse
-            // every gate outside their consumer set
-            case Left(task) => task.warm(spark, sfDir); None
-          } finally sc.clearJobGroup()
-        val wallS = (System.nanoTime() - t0) / 1e9
-        if (pass == 1) df.foreach(writePlan(name, _))
-        val (jobs, stages, tasks) = counted(spark, group)
-        val row = Pass(name, pass, wallS, jobs, stages, tasks)
+        val (df, spans) = target match {
+          case Right(fn) =>
+            val (df, spans) = gatePass(spark, sfDir, name, fn)
+            (df.map(Option(_)), spans)
+          // a setup task runs under no gate name: its accessors refuse
+          // every gate outside their consumer set
+          case Left(task) => measure(spark, name) { task.warm(spark, sfDir); None }
+        }
+        val t = spans(name)
+        val row = Pass(name, pass, t.wallS, t.jobs, t.stages, t.tasks, t.driverS,
+          t.execCpuS, t.gcS, t.shuffleWriteBytes, t.spillBytes)
         println(row)
-        // isolate passes as Bench does: drop leftover caches, and GC so
-        // the ContextCleaner reclaims shuffle and broadcast state
-        spark.catalog.clearCache()
-        System.gc()
+        val frame = df.get // a failed pass is printed, then rethrown
+        if (pass == 1) frame.foreach(writePlan(name, _))
         row
       }
     }
   }
 
-  /** The (jobs, stages, tasks) that ran in job group `group`.
-    * The status tracker is fed by listener events, which arrive after
-    * the jobs return: a sentinel job, submitted after every job of the
-    * group, is seen to end only once all their events are in.
+  /** One pass of gate `name`, as Bench and Profile run it, in span
+    * `name`: the gate builds its frame (and runs its in-gate actions)
+    * under its own gate name, then the frame is counted.
     */
-  private[graft] def counted(spark: SparkSession, group: String): (Int, Int, Int) = {
-    val sc = spark.sparkContext
-    val tracker = sc.statusTracker
-    val sentinel = s"$group-sentinel"
-    sc.setJobGroup(sentinel, "profile sentinel")
-    try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (!tracker.getJobIdsForGroup(sentinel).exists(id =>
-        tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.SUCCEEDED))) {
-      require(System.nanoTime() < deadline, s"listener events for $group never arrived")
-      Thread.sleep(5)
-    }
-    val jobs = tracker.getJobIdsForGroup(group)
-    val ran = jobs.flatMap(id => tracker.getJobInfo(id).toSeq.flatMap(_.stageIds)).distinct
-      .flatMap(tracker.getStageInfo).filter(_.numCompletedTasks > 0)
-    (jobs.length, ran.length, ran.map(_.numCompletedTasks).sum)
+  private[graft] def gatePass(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame)
+      : (Try[DataFrame], ListMap[String, Spans.Totals]) =
+    measure(spark, name)(GateContext.runningGate(name) {
+      val df = fn(spark, sfDir)
+      df.count()
+      df
+    })
+
+  /** Runs `body` as span `name` and returns its outcome with the
+    * report of the span and its children, then isolates passes: drops
+    * leftover caches, and GCs so the ContextCleaner reclaims shuffle
+    * and broadcast state. Any throwable is an outcome: a failed pass is
+    * still measured, and the caller rethrows it (Profile) or marks it
+    * (Bench).
+    */
+  private[graft] def measure[A](spark: SparkSession, name: String)(
+      body: => A): (Try[A], ListMap[String, Spans.Totals]) = {
+    val result =
+      try Success(Spans.span(spark, name)(body))
+      catch { case e: Throwable => Failure(e) }
+    val spans = Spans.report(spark, name)
+    spark.catalog.clearCache()
+    System.gc()
+    (result, spans)
   }
 }

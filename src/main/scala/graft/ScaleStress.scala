@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: replicates the driver testdata N× with
-  * deterministic perturbations, replays the heaviest gate families at
-  * that scale, and asserts the operators' bound invariants (LSH bucket
-  * fan-in, SemDeDup Σcluster², IVF cell balance + probe pruning, store
-  * file caps) with MEASURED numbers instead of design claims.
+  * deterministic perturbations and asserts the operators' bound
+  * invariants at that scale (LSH bucket fan-in, SemDeDup Σcluster², IVF
+  * cell balance + probe pruning, store file caps) with MEASURED numbers
+  * instead of design claims. To time gates at scale, profile them over
+  * a replica dir: `SPARK_GRAFT_SF_DIR=target/scalestress/x10 graft.Profile
+  * q_a,q_b` (and over the base dir for the x1 leg).
   *
   * Replica design (all offsets/perturbations are pure column
   * expressions — deterministic, no RNG state):
@@ -26,8 +28,8 @@ import org.apache.spark.sql.functions._
   *     everything else verbatim — a 10× event rate over the same
   *     wall-clock window, which is exactly how this table grows.
   *
-  * Commands: gen | run | inv | all (default all). Scales via env:
-  * SPARK_GRAFT_STRESS_X (gate replay, default 10) and
+  * Commands: gen | inv | all (default all: gen, then inv). Scales via env:
+  * SPARK_GRAFT_STRESS_X (all-tables replica dir, default 10) and
   * SPARK_GRAFT_STRESS_XL (documents/embeddings-only invariant corpus,
   * default 100).
   */
@@ -54,8 +56,7 @@ object ScaleStress {
       gen(spark, baseDir, xDir, x, allTables = true)
       gen(spark, baseDir, xlDir, xl, allTables = false)
     }
-    if (cmd == "run" || cmd == "all") run(spark, baseDir, xDir, x)
-    if (cmd == "inv" || cmd == "all") invariants(spark, xDir, xlDir, x, xl)
+    if (cmd == "inv" || cmd == "all") invariants(spark, baseDir, xDir, xlDir, x, xl)
     spark.stop()
   }
 
@@ -174,147 +175,14 @@ object ScaleStress {
     System.err.println(s"[stress] generated $outDir (x$replicas)")
   }
 
-  // ---- gate replay --------------------------------------------------------
-
-  /** The families VERDICT r8 asked to stress: the dedup ladder, ANN,
-    * and the full reference dataflow. Order matters — q_dedup_minhash
-    * pays the shared signed/pairs/clusters derivation that
-    * q_dedup_delta then reuses (identical order at both scales keeps
-    * the ratios honest).
-    */
-  private val Heavy = Seq(
-    "q_dedup_minhash", "q_dedup_delta", "q_dedup_substring",
-    "q_dedup_semantic", "q_ann_ivf_index", "q_knn_join", "q_rdr_train",
-    // r9 additions: line-level boilerplate (corpus-token-sized line
-    // relation), event-log PageRank (window extraction dominates),
-    // bucketed join (write cost IS the query here — cache is per-dir)
-    "q_boilerplate_strip", "q_pagerank_events", "q_bucketed_join",
-    // exact set-similarity join: output is data-quadratic in TRUE
-    // pairs (this corpus is clique-heavy by design) — the stress run
-    // measures the exact path's cost envelope vs the LSH-capped one
-    "q_set_join_exact", "q_ann_ivf_stream",
-    "q_snapshot_diff", "q_drift_categorical", "q_vocab_growth",
-    "q_curriculum",
-    // r9 mining family: the deletion-neighborhood join (signature
-    // relation is corpus-characters-sized), the wedge-bounded triangle
-    // census (fan-in O(sqrt m) per node by orientation), the two-scan
-    // PMI counts, and the anchor-broadcast hard-negative rank
-    "q_fuzzy_join_edit", "q_triangle_count", "q_pmi_bigrams",
-    "q_hard_negatives",
-    // r9 audit family: the histogram-median claim is only interesting
-    // under data — the windows must stay value-domain-sized while the
-    // row count grows 10×
-    "q_length_outliers", "q_cohen_kappa",
-    // single-pass expectations (constant exchanges), class rebalance
-    // (class-wide rank window), split leakage (reads the materialized
-    // pair table; replayed solo it pays the one-off pair derivation,
-    // the LSH pipeline already measured above). q_label_noise is NOT here:
-    // its gate mode is nprobe = C (exact k-NN — quadratic by design,
-    // like q_set_join_exact's envelope); its scale mode is nprobe < C
-    "q_expectations", "q_class_rebalance", "q_split_leakage",
-    // ER funnel: FastSS signature join + min-label rounds (rounds =
-    // cluster diameter) — the propagation join is the scale question
-    "q_entity_resolution",
-    // privacy census: class relation is distinct-QI-bounded, so 10×
-    // rows should grow class SIZES, not the second agg's input
-    "q_k_anonymity",
-    // privacy enforcement: suppress = one class-key window (partition
-    // ≤ largest class); generalize = census windows + broadcast join
-    "q_k_suppress", "q_k_generalize",
-    // directed shingle containment: one-sided prefix join — B indexes
-    // its FULL shingle set, so the candidate volume (Σ df over
-    // A-prefixes) is the scale question; x10 plants exact-duplicate
-    // replicas, so true pair volume grows with the duplication
-    "q_containment_join",
-    // winnowing: the fingerprint relation is ~grams/w-sized; join
-    // fan-in per fp = its df (LSH-band shape on a smaller relation)
-    "q_winnow_pairs",
-    // r9 session-3 eval family: AUC + PR curve exercise the NEW
-    // range-partitioned prefix scan on a continuous score (distinct
-    // scores = corpus-sized — the exact case the single-partition
-    // window would have choked on); token-F1 is a token-sized
-    // equi-join; nDCG rides a 30-query absolute bound × corpus scan;
-    // CMS is one map-side-combined agg to 1024 cells
-    "q_auc", "q_pr_curve", "q_token_f1", "q_ndcg_mrr", "q_cms_counts",
-    // r10 stats family: the three PrefixSum rank-selection consumers
-    // (value histograms stay NDV-bounded while counts grow 10× — the
-    // claim under test), the 20-replicate map-side bootstrap explode,
-    // per-user attribution/rolling windows over 10×-longer timelines,
-    // the skyline's histogram prefix-max + join-back, the 6-way
-    // count-distinct Expand, and the positional postings self-join
-    "q_weighted_median", "q_conformal", "q_equidepth_hist",
-    "q_bootstrap_ci", "q_attribution", "q_rolling_median", "q_pareto",
-    "q_table_stats", "q_phrase_search", "q_pareto_grouped",
-    "q_trimmed_mean", "q_spearman", "q_gini_value", "q_interval_join",
-    "q_cusum_drift", "q_forecast_baseline", "q_reco_diversity",
-    "q_budget_select", "q_percentile_filter", "q_multimodal_frames",
-    // r11 additions: KMV rollup (bounded-buffer bottom-k agg — unit
-    // count grows with days×types, per-unit work with rows), exact-OLS
-    // moments (pure map-side-combined agg), and the zone-map chain
-    // (z-order range shuffle + footer harvest + pruned scan: the
-    // x10 cost is the one-off layout write, the query itself must
-    // stay sublinear BECAUSE pruning drops data-proportional files)
-    "q_quantile_rollup", "q_trend_fit", "q_zonemap_prune")
-
-  def run(spark: SparkSession, baseDir: String, xDir: String, x: Int): Unit = {
-    // SPARK_GRAFT_STRESS_ONLY=q_a,q_b replays a subset (iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(',').toSet)
-    val selected = Heavy.filter(q => only.forall(_.contains(q)))
-    spark.range(0, 100000).selectExpr("sum(id * 2)").collect() // JVM warmup
-    // SPARK_GRAFT_STRESS_FULL=1 materializes EVERY output column via
-    // the noop sink instead of count() — count() lets Catalyst prune
-    // unused projections (a checksum aggregate can be timed out of
-    // existence, which once masked an ANSI overflow); full mode is the
-    // honest measurement, count() stays the default for comparability
-    // with the recorded tables
-    val fullEval = sys.env.get("SPARK_GRAFT_STRESS_FULL").contains("1")
-    def time(name: String, d: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val df = fn(spark, d)
-      val n = if (fullEval) {
-        df.write.mode("overwrite").format("noop").save(); -1L
-      } else df.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc()
-      System.err.println(f"[stress] $name @ $d: $dt%.1fs ($n rows)")
-      dt
-    }
-    println(s"| query | x1 (s) | x$x (s) | ratio | verdict |")
-    println("|---|---|---|---|---|")
-    for (q <- selected) {
-      // run x1 TWICE: the first pass pays the query's codegen/classload
-      // warmup (and, for gates with per-sfDir materialized products —
-      // cached pair tables, bucketed layouts — the one-off derivation);
-      // the second is the warm steady state. The honest denominator:
-      // when the two passes differ by >2× a REAL materialization
-      // happened, and the x10 leg pays that same derivation fresh, so
-      // compare against the FIRST pass; otherwise the gap is JIT noise
-      // and the WARM pass is the meaningful linear bar (r9's cold-x1
-      // made cheap gates report unfalsifiable sub-1× ratios; r10's
-      // first warm-only attempt made cache-materializing gates report
-      // nonsense 3000× ratios — this rule handles both).
-      val t1cold = time(q, baseDir)
-      val t1warm = time(q, baseDir)
-      val t1 = if (t1cold > 2 * t1warm) t1cold else t1warm
-      val tx = time(q, xDir)
-      val ratio = tx / t1
-      // fixed per-query overhead (JVM, planning, index I/O floors) makes
-      // sub-x ratios common; anything well past the replica factor is
-      // super-linear and needs a diagnosis in PLANS.md
-      val verdict = if (ratio <= x * 1.3) "≤ linear" else "SUPER-LINEAR"
-      println(f"| $q | $t1%.1f (cold $t1cold%.1f/warm $t1warm%.1f) | $tx%.1f | ${ratio}%.1f× | $verdict |")
-    }
-  }
-
   // ---- invariants ---------------------------------------------------------
 
-  def invariants(spark: SparkSession, xDir: String, xlDir: String,
+  def invariants(spark: SparkSession, baseDir: String, xDir: String, xlDir: String,
       x: Int, xl: Int): Unit = {
     import graft.operators.{Ann, Dedup, IvfIndex}
 
     // SPARK_GRAFT_INV_ONLY=lsh,xl,neardup,store,prefix replays a subset
-    // (iteration aid, same contract as SPARK_GRAFT_STRESS_ONLY)
+    // (iteration aid)
     val invOnly = sys.env.get("SPARK_GRAFT_INV_ONLY").map(_.split(',').toSet)
     def sel(name: String): Boolean = invOnly.forall(_.contains(name))
     if (sel("lsh")) {
@@ -332,8 +200,8 @@ object ScaleStress {
     // drive it to ~0 because candidates explode while verified pairs
     // don't), and (b) max bucket fan-in is bounded by the largest
     // VERIFIED duplicate cluster (a bucket can't be much bigger than
-    // the clique that fills it). Reuses the run phase's materialized
-    // derivation (same JVM) instead of re-running the LSH join.
+    // the clique that fills it). Reuses a gate's materialized
+    // derivation when one ran in this JVM.
     val docs = spark.read.parquet(s"$xDir/documents.parquet")
     val nDocs = docs.count()
     val census = Dedup.bandBucketCensus(
@@ -408,7 +276,7 @@ object ScaleStress {
         s"fanOut added $exchanges exchange(s) on a pre-parallel input")
     }
     // the single-file fixture table must STILL fan out
-    val single = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val single = spark.read.parquet(s"$baseDir/documents.parquet")
     require(exchangeNodes(graft.queries.Tables.fanOut(single)) > 0,
       "fanOut skipped the exchange on a single-file scan")
     }
@@ -505,9 +373,10 @@ object ScaleStress {
     }
 
     if (sel("store")) {
-    // 4. Store file caps at x (needs the q_rdr_train replay's artifacts).
-    // the run phase's q_rdr_train replay writes its store inside the
-    // 'train' gate slot (trainSummary stages everything under one slot)
+    // 4. Store file caps at x (needs the artifacts of a q_rdr_train run
+    // over the x dir, e.g. `graft.Profile q_rdr_train`): the gate writes
+    // its store inside the 'train' gate slot (trainSummary stages
+    // everything under one slot)
     val store = s"${graft.pipeline.GateArtifacts.dir(xDir)}/train/store/rewarded_decisions/events/parquet"
     if (new java.io.File(store).exists()) {
       // the store nests chunks under yyyy/mm/dd DATA directories (not
@@ -522,7 +391,7 @@ object ScaleStress {
       println(s"| store caps @x$x | max_rows_per_file=${perFile.getLong(0)} " +
         s"files=${perFile.getLong(1)} (cap $cap) |")
       require(perFile.getLong(0) <= cap, "store file cap violated at scale")
-    } else println(s"| store caps @x$x | SKIPPED (run phase not executed) |")
+    } else println(s"| store caps @x$x | SKIPPED (q_rdr_train not run at x$x) |")
     }
 
     if (sel("prefix")) {

@@ -6,17 +6,19 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 /** Bounded fan-out of independent tasks that write shared files (groom's
-  * group compactions, Compact's bins). Fail-fast: the first failure is
-  * rethrown — but only once every task already handed to the pool has
-  * finished, so the caller never returns while a sibling still writes or
-  * deletes files that the caller is about to list.
+  * group compactions, Compact's bins, the store's footer reads and
+  * renames). Fail-fast: the first failure is rethrown — but only once
+  * every task already handed to the pool has finished, so the caller
+  * never returns while a sibling still writes or deletes files that the
+  * caller is about to list or delete.
   */
 object FanOut {
 
-  /** Run `tasks` at most `maxConcurrent` at a time. `what` names the
-    * fan-out in the drain-timeout error.
+  /** Run `tasks` at most `maxConcurrent` at a time; returns their
+    * results in input order. `what` names the fan-out in the
+    * drain-timeout error.
     */
-  def run(what: String, maxConcurrent: Int)(tasks: Seq[() => Any]): Unit = {
+  def run[A](what: String, maxConcurrent: Int)(tasks: Seq[() => A]): Seq[A] = {
     val pool = Executors.newFixedThreadPool(math.max(1, math.min(tasks.size, maxConcurrent)))
     try {
       val onPool = ExecutionContext.fromExecutor(pool)
@@ -26,7 +28,6 @@ object FanOut {
       // complete, and a callback sent to it then would be rejected
       implicit val ec: ExecutionContext = ExecutionContext.parasitic
       Await.result(Future.sequence(futures), Duration.Inf)
-      ()
     } finally {
       pool.shutdown()
       // if even the drain WINDOW expires, the caller must not proceed as

@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FanOut
 import graft.schema.{PartitionFilename, Schema}
 
 import scala.jdk.CollectionConverters._
@@ -151,38 +152,31 @@ object PartitionStore {
       // pooled pass keeps the driver tail O(files / pool) instead of
       // O(files) — at backfill scale one batch can emit ~10⁵ chunks, and
       // against object stores each footer read + rename is a round trip.
-      // Hadoop FileSystem instances are thread-safe for these calls.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(written.size, RenamePoolSize)))
+      // Hadoop FileSystem instances are thread-safe for these calls. A
+      // failure is rethrown only once every sibling has finished, so
+      // tmpDir is never deleted under a running read or rename.
       def pooled[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-        xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
-          override def call(): B = f(x)
-        })).map { fut =>
-          try fut.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      try {
-        val stats = pooled(written) { case (m, file) => (m, file, footerStats(conf, file)) }
-        // the determinism check: the chunk pass must have written
-        // exactly the rows the census counted, or the prefix choice
-        // (and the caller's data) cannot be trusted — fail before
-        // anything reaches the store
-        val writtenRows = stats.groupMapReduce(_._1)(_._3._3)(_ + _)
-        (expectedRows.keySet ++ writtenRows.keySet).foreach { m =>
-          val (want, got) = (expectedRows.getOrElse(m, 0L), writtenRows.getOrElse(m, 0L))
-          if (want != got) throw new IllegalStateException(
-            s"PartitionStore.write: model '$m' census counted $want rows but the " +
-              s"chunk pass wrote $got — the input is not deterministic across passes")
-        }
-        pooled(stats) { case (m, file, (minId, maxId, rows)) =>
-          val key = PartitionFilename.key(m, minId, maxId, rows)
-          val dest = new Path(baseDir, key)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(file, dest))
-            throw new java.io.IOException(s"rename $file -> $dest failed")
-          m -> key
-        }.groupMap(_._1)(_._2)
-      } finally pool.shutdownNow()
+        FanOut.run("store write", RenamePoolSize)(xs.map(x => () => f(x)))
+      val stats = pooled(written) { case (m, file) => (m, file, footerStats(conf, file)) }
+      // the determinism check: the chunk pass must have written
+      // exactly the rows the census counted, or the prefix choice
+      // (and the caller's data) cannot be trusted — fail before
+      // anything reaches the store
+      val writtenRows = stats.groupMapReduce(_._1)(_._3._3)(_ + _)
+      (expectedRows.keySet ++ writtenRows.keySet).foreach { m =>
+        val (want, got) = (expectedRows.getOrElse(m, 0L), writtenRows.getOrElse(m, 0L))
+        if (want != got) throw new IllegalStateException(
+          s"PartitionStore.write: model '$m' census counted $want rows but the " +
+            s"chunk pass wrote $got — the input is not deterministic across passes")
+      }
+      pooled(stats) { case (m, file, (minId, maxId, rows)) =>
+        val key = PartitionFilename.key(m, minId, maxId, rows)
+        val dest = new Path(baseDir, key)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(file, dest))
+          throw new java.io.IOException(s"rename $file -> $dest failed")
+        m -> key
+      }.groupMap(_._1)(_._2)
     } finally fs.delete(new Path(tmpDir), true)
   }
 

@@ -3,6 +3,8 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 
 import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
+import graft.obs.Spans
+import graft.pipeline.RdrPipeline
 import graft.train.{ModelStore, Trainer}
 
 /** User-facing job entry points — the engine's equivalents of the
@@ -14,6 +16,18 @@ object Jobs {
   private[jobs] def session(app: String): SparkSession =
     graft.Sessions.local(app,
       sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(32))
+
+  /** A job's `main`: runs `body` on a new session, then writes one
+    * `[span]` line per span it opened to stderr. */
+  private[jobs] def runMain(app: String)(body: SparkSession => Unit): Unit = {
+    val spark = session(app)
+    try {
+      body(spark)
+      Spans.report(spark).foreach { case (path, t) =>
+        System.err.println(String.format(java.util.Locale.ROOT, "[span] %-28s  %s", path, t.fields))
+      }
+    } finally spark.stop()
+  }
 }
 
 /** IngestJob <storeDir> <jsonl-or-gz-file...> — parse, validate,
@@ -23,19 +37,26 @@ object Jobs {
 object IngestJob {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: IngestJob <storeDir> <file...>")
-    val storeDir = args.head
-    val spark = Jobs.session("graft-ingest")
+    Jobs.runMain("graft-ingest")(run(_, args.head, args.drop(1).toSeq))
+  }
+
+  /** The job body, session-in, in spans `ingest.parse` and
+    * `ingest.merge_write`; returns the partition keys written per model. */
+  def run(spark: SparkSession, storeDir: String, files: Seq[String]): Map[String, Seq[String]] = {
     import spark.implicits._
-
-    val parsed = FirehoseRecords.parse(spark, args.drop(1).toSeq).persist()
-    val census = FirehoseRecords.invalidCensus(parsed)
-    if (census.nonEmpty) println(s"invalid records: $census")
-
-    val merged = Merge.merge(parsed.flatMap(_.row).toDF())
-    Merge.writePerModel(merged, storeDir).foreach { case (model, keys) =>
-      println(s"model $model: wrote ${keys.length} partition(s)")
+    val (parsed, census) = Spans.span(spark, "ingest.parse") {
+      val parsed = FirehoseRecords.parse(spark, files).persist()
+      (parsed, FirehoseRecords.invalidCensus(parsed))
     }
-    spark.stop()
+    try {
+      if (census.nonEmpty) println(s"invalid records: $census")
+      val written = Spans.span(spark, "ingest.merge_write")(
+        Merge.writePerModel(Merge.merge(parsed.flatMap(_.row).toDF()), storeDir))
+      written.foreach { case (model, keys) =>
+        println(s"model $model: wrote ${keys.length} partition(s)")
+      }
+      written
+    } finally { parsed.unpersist(); () }
   }
 }
 
@@ -43,16 +64,22 @@ object IngestJob {
 object GroomJob {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: GroomJob <storeDir> <model>")
-    val spark = Jobs.session("graft-groom")
-    val iters = Groom.groom(spark, args(0), args(1))
-    val keys = PartitionStore.listKeys(spark, args(0), args(1))
-    val overlaps = Groom.findOverlaps(keys)
+    Jobs.runMain("graft-groom")(run(_, args(0), args(1)))
+  }
+
+  /** The job body, session-in, in span `groom`; returns its iterations. */
+  def run(spark: SparkSession, storeDir: String, model: String): Int = {
+    val (iters, keys, overlaps) = Spans.span(spark, "groom") {
+      val iters = Groom.groom(spark, storeDir, model)
+      val keys = PartitionStore.listKeys(spark, storeDir, model)
+      (iters, keys, Groom.findOverlaps(keys))
+    }
     if (overlaps.isEmpty)
       println(s"groomed in $iters iteration(s); ${keys.length} partition(s), no overlaps")
     else
       println(s"groom stopped after $iters iteration(s) with ${overlaps.length} " +
         s"overlapping range(s) remaining across ${keys.length} partition(s) — rerun to continue")
-    spark.stop()
+    iters
   }
 }
 
@@ -65,8 +92,14 @@ object TrainJob {
     require(args.length >= 3, "usage: TrainJob <storeDir> <model> <modelOutDir> [maxRows]")
     val Array(storeDir, model, outDir) = args.take(3)
     val maxRows = args.lift(3).map(_.toLong).getOrElse(8000000L)
-    val spark = Jobs.session("graft-train")
+    Jobs.runMain("graft-train")(run(_, storeDir, model, outDir, maxRows = maxRows))
+  }
 
+  /** The job body, session-in, in the spans of [[RdrPipeline.trainFromStore]]
+    * and `train.publish`; returns the published decision model. */
+  def run(spark: SparkSession, storeDir: String, model: String, outDir: String,
+      cfg: Trainer.TrainConfig = Trainer.TrainConfig(),
+      maxRows: Long = 8000000L): Trainer.DecisionModel = {
     val keys = PartitionStore.listKeys(spark, storeDir, model)
     require(keys.nonEmpty,
       s"no partitions for model '$model' under $storeDir/rewarded_decisions/$model/parquet — " +
@@ -75,16 +108,18 @@ object TrainJob {
     // artifacts are scoped per model so a shared outDir can never
     // cross-contaminate checkpoints between models
     val modelOut = s"$outDir/$model"
-    val dm = graft.pipeline.RdrPipeline.trainFromStore(spark, storeDir, model,
-      Trainer.TrainConfig(), ckptDir = Some(s"$modelOut/checkpoint"), maxRows = maxRows).decision
-    ModelStore.saveDecisionModel(dm, s"$modelOut/latest")
-    // publish the consumer-facing artifact: gzipped bundle under
-    // models/archive/... with a models/latest/{model}.tar.gz copy
-    // (reference: unpack_models.py:62-97)
-    val (arc, latest) = ModelStore.publish(s"$modelOut/latest", outDir, model)
+    val dm = RdrPipeline.trainFromStore(spark, storeDir, model,
+      cfg, ckptDir = Some(s"$modelOut/checkpoint"), maxRows = maxRows).decision
+    val (arc, latest) = Spans.span(spark, "train.publish") {
+      ModelStore.saveDecisionModel(dm, s"$modelOut/latest")
+      // publish the consumer-facing artifact: gzipped bundle under
+      // models/archive/... with a models/latest/{model}.tar.gz copy
+      // (reference: unpack_models.py:62-97)
+      ModelStore.publish(s"$modelOut/latest", outDir, model)
+    }
     println(s"trained ${dm.model.getNumTrees} trees over ${dm.featureNames.length} features -> " +
       s"$modelOut/latest; published $outDir/$arc -> $outDir/$latest")
-    spark.stop()
+    dm
   }
 }
 
@@ -99,9 +134,8 @@ object AnalyzeJob {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: AnalyzeJob <parquetPath> <outDir> [decileCol [buckets]]")
-    val spark = Jobs.session("graft-analyze")
-    run(spark, args(0), args(1), args.lift(2), args.lift(3).map(_.toInt).getOrElse(10))
-    spark.stop()
+    Jobs.runMain("graft-analyze")(
+      run(_, args(0), args(1), args.lift(2), args.lift(3).map(_.toInt).getOrElse(10)))
   }
 
   /** The job body, session-in — what `main` wraps and what specs call

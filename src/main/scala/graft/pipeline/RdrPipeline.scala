@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSession
 
-import graft.core.Ksuid
-import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
+import graft.ingest.{Groom, Merge, PartitionStore}
+import graft.obs.Spans
 import graft.queries.Tables
 import graft.schema.Schema
 
@@ -236,12 +236,6 @@ object RdrPipeline {
       .toDF("n_decisions", "n_rewarded", "total_reward_cents")
   }
 
-  /** Per-JVM accumulator of q_rdr_train pass timings (JSON object
-    * strings) — see the timings.json write in [[trainSummary]].
-    */
-  private val trainPasses =
-    new java.util.concurrent.CopyOnWriteArrayList[String]()
-
   /** A trained two-phase chain: both models plus whether phase 1 was
     * served from a warm checkpoint instead of retrained.
     */
@@ -261,6 +255,10 @@ object RdrPipeline {
     * cold run saves one for the next invocation. `phaseTap` is called
     * with each loaded phase frame before training (census dumps,
     * debugging); the default does nothing.
+    *
+    * Opens the spans `train.ckpt_load` (with `ckptDir`), `train.load`
+    * (once per loaded phase), `train.p1`, `train.ckpt_save` (a cold
+    * phase 1 only) and `train.p2`; see [[graft.obs.Spans]].
     */
   def trainFromStore(spark: SparkSession, storeDir: String, model: String,
       cfg: graft.train.Trainer.TrainConfig,
@@ -269,28 +267,29 @@ object RdrPipeline {
       checkpointMaxAgeSeconds: Long = 24 * 3600,
       phaseTap: (Int, DataFrame) => Unit = (_, _) => ()): TrainedChain = {
     import graft.train.{Loader, ModelStore, Trainer}
+    def span[A](name: String)(body: => A): A = Spans.span(spark, name)(body)
     val sample = if (cfg.explore) graft.encoding.Encoding.NonZeroPoissonProbability else 1.0
-    val warm = ckptDir.flatMap(d =>
-      ModelStore.loadCheckpoint(spark, d, checkpointMaxAgeSeconds))
+    val warm = ckptDir.flatMap(d => span("train.ckpt_load")(
+      ModelStore.loadCheckpoint(spark, d, checkpointMaxAgeSeconds)))
     val pm = warm.getOrElse {
       // phase 1: minRows = maxRows realizes the scarce-data override
       // (the explore sample only thins data the cap would drop anyway)
-      val phase1 = Loader.load(spark, storeDir, model,
+      val phase1 = span("train.load")(Loader.load(spark, storeDir, model,
         maxRows = maxRows, minRows = maxRows, sample = sample, seed = cfg.seed)
-        .withColumn(Schema.Model, lit(model)).persist()
+        .withColumn(Schema.Model, lit(model)).persist())
       try {
         phaseTap(1, phase1)
-        val trained = Trainer.trainPropensity(phase1, cfg)
-        ckptDir.foreach(d => ModelStore.saveCheckpoint(trained, d))
+        val trained = span("train.p1")(Trainer.trainPropensity(phase1, cfg))
+        ckptDir.foreach(d => span("train.ckpt_save")(ModelStore.saveCheckpoint(trained, d)))
         trained
       } finally { phase1.unpersist(); () }
     }
-    val phase2 = Loader.load(spark, storeDir, model,
+    val phase2 = span("train.load")(Loader.load(spark, storeDir, model,
       maxRows = maxRows, sample = sample, seed = cfg.seed + 1)
-      .withColumn(Schema.Model, lit(model)).persist()
+      .withColumn(Schema.Model, lit(model)).persist())
     try {
       phaseTap(2, phase2)
-      TrainedChain(pm, Trainer.trainDecision(phase2, pm, cfg), warm.isDefined)
+      TrainedChain(pm, span("train.p2")(Trainer.trainDecision(phase2, pm, cfg)), warm.isDefined)
     } finally { phase2.unpersist(); () }
   }
 
@@ -315,24 +314,18 @@ object RdrPipeline {
     // the whole chain builds in a STAGING dir; only a fully-built tree
     // is swapped into the slot the oracle SQL reads (see buildSlot)
     val slot = GateArtifacts.buildSlot(sfDir, "train") { stage =>
-      // sub-step wall-times: printed to stderr AND published with the
-      // slot, so a bench-time growth in this (heaviest) gate decomposes
-      // into merge / store-write / train as measured fact, not
-      // data-shape guesswork
-      val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
-      def timed[A](step: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        try body finally timings(step) = (System.nanoTime() - t0) / 1e9
-      }
-      val ingested = timed("merge")(cachedMerged(spark, sfDir))
-      timed("store_write")(PartitionStore.write(ingested, s"$stage/store", "events"))
+      // sub-step spans, so a bench-time growth in this (heaviest) gate
+      // decomposes into merge / store-write / train as measured fact,
+      // not data-shape guesswork
+      val ingested = Spans.span(spark, "merge")(cachedMerged(spark, sfDir))
+      Spans.span(spark, "store_write")(PartitionStore.write(ingested, s"$stage/store", "events"))
       val cfg = Trainer.TrainConfig(
         maxFeatures = 20, pruneMinStringCount = 0, maxTrees = 5,
         propensityTrees = 5, treeDepth = 4, seed = 42L)
       // the gate runs the USER-FACING chain (trainFromStore): explore
       // bootstrap, scarce-data override, checkpoint save — with a tap
       // that dumps each phase's data-side frame for the oracle census
-      val chain = timed("train")(withGateShuffle(spark)(gate =>
+      val chain = Spans.span(spark, "train")(withGateShuffle(spark)(gate =>
         trainFromStore(gate, s"$stage/store", "events", cfg,
           ckptDir = Some(s"$stage/ckpt"),
           phaseTap = (phase, df) =>
@@ -362,25 +355,6 @@ object RdrPipeline {
         .rank(spark, dm, Seq("""{"k":50}"""), """{"t":"click"}""").head._2
       require(!probeScore.isNaN && !probeScore.isInfinite,
         s"q_rdr_train: non-finite probe score $probeScore")
-      val line = timings.map { case (k, v) => f"$k=$v%.1fs" }.mkString(" ")
-      System.err.println(s"[timing] q_rdr_train $line")
-      // Locale.ROOT: the f interpolator renders %.3f with the JVM
-      // default locale — a comma decimal separator would make this
-      // invalid JSON that Bench splices verbatim into its output
-      val passJson = timings.map { case (k, v) =>
-        s""""$k": ${String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))}""" }
-        .mkString("{", ", ", "}")
-      // EVERY pass this JVM ran, keyed by pass index — the bench's
-      // heaviest-gate decomposition previously recorded whichever pass
-      // wrote the slot last, which could pair a cold outlier's steps
-      // with a median headline. The in-JVM buffer resets per process,
-      // so a stale prior JVM's passes never leak in.
-      trainPasses.add(passJson)
-      val all = (0 until trainPasses.size())
-        .map(i => s""""pass$i": ${trainPasses.get(i)}""")
-        .mkString("{", ", ", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(stage, "timings.json"), all)
     }
     // census from the READ-BACK, PUBLISHED dumps — byte-identical
     // input to what the DuckDB oracle reads

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.obs.Spans
 import graft.plans.PlanWalk
 
 /** [[Tables.fanOut]] reads its guard from the physical plan: it never
@@ -26,14 +27,11 @@ class FanOutSpec extends AnyFunSuite with SparkTestBase {
     }.collect { case p: RoundRobinPartitioning => p.numPartitions }
 
   test("fanOut over a frame with an exchange starts no job") {
-    val sc = spark.sparkContext
     val df = spark.read.parquet(oneFile).groupBy("g").count()
-    val group = s"fanout-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "fanOut guard")
-    val fanned = try Tables.fanOut(df) finally sc.clearJobGroup()
-    assert(graft.Profile.counted(spark, group)._1 == 0)
+    val fanned = Spans.span(spark, "fanout-guard")(Tables.fanOut(df))
+    assert(Spans.report(spark, "fanout-guard")("fanout-guard").jobs == 0)
     // the one-file scan under the exchange is what the guard reads
-    assert(roundRobinWidths(fanned) == Seq(sc.defaultParallelism))
+    assert(roundRobinWidths(fanned) == Seq(spark.sparkContext.defaultParallelism))
   }
 
   test("the one-file scan is repartitioned to defaultParallelism") {

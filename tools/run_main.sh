@@ -5,6 +5,7 @@
 # from graft.Sessions.
 # Usage: tools/run_main.sh graft.ScaleStress all
 #        tools/run_main.sh graft.Profile q_scan_filter --passes 2 --plans /tmp/plans
+#        SPARK_GRAFT_SF_DIR=target/scalestress/x10 tools/run_main.sh graft.Profile q_a,q_b
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
