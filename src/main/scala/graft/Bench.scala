@@ -126,9 +126,9 @@ object Bench {
     // line must be SHORT and self-contained: total, failure list, and
     // the slowest queries. The complete per-query map (plus repeat
     // counts, train-step decomposition, per-gate spans and the span
-    // listener's own busy time) goes to BENCH_DETAIL.json in the repo
-    // root — the driver commits uncommitted files, so the full artifact
-    // survives the round even though stdout can't carry it.
+    // listener's own busy time) goes to BENCH_DETAIL.json in the working
+    // directory (`sbt run` starts in the checkout root), the file the
+    // line's "detail" field names.
     val calibration =
       s"""{"cpu_sec":${r3(calCpu)},"io_sec":${r3(calIo)}}"""
     val setupJson = obj(setup.map { case (k, v) => k -> r3(v) })
@@ -136,7 +136,7 @@ object Bench {
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","calibration":$calibration,"setup":$setupJson,"setup_sec":$setupTotal,"queries":$qs,"repeats":$reps,"train_steps":$trainSteps,"spans":$spansJson,"listener_s":${r3(Spans.listenerBusyS(spark))},"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_DETAIL.json"), fullJson + "\n")
+      java.nio.file.Paths.get("BENCH_DETAIL.json"), fullJson + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
     val failed = results.collect { case (n, v, _) if v < 0 => "\"" + n + "\"" }
       .mkString("[", ",", "]")

@@ -112,9 +112,9 @@ object TrainJob {
       cfg, ckptDir = Some(s"$modelOut/checkpoint"), maxRows = maxRows).decision
     val (arc, latest) = Spans.span(spark, "train.publish") {
       ModelStore.saveDecisionModel(dm, s"$modelOut/latest")
-      // publish the consumer-facing artifact: gzipped bundle under
-      // models/archive/... with a models/latest/{model}.tar.gz copy
-      // (reference: unpack_models.py:62-97)
+      // publish the consumer-facing artifact: each file gzipped under
+      // models/archive/... with a models/latest/{model}.{gbt|mlmodel}.gz
+      // copy (reference: unpack_models.py:62-97)
       ModelStore.publish(s"$modelOut/latest", outDir, model)
     }
     println(s"trained ${dm.model.getNumTrees} trees over ${dm.featureNames.length} features -> " +

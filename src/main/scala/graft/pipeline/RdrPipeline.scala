@@ -334,15 +334,22 @@ object RdrPipeline {
       val pm = chain.propensity
       val dm = chain.decision
       require(!chain.phase1Warm, "q_rdr_train: fresh slot must cold-start phase 1")
+      // MLlib's own dump of every tree weight, split (feature, threshold)
+      // and leaf prediction, node by node; a double prints round-trip
+      // exact, and the first line (the model's uid) is dropped
+      def trees(m: org.apache.spark.ml.classification.GBTClassificationModel) =
+        m.toDebugString.linesIterator.drop(1).toSeq
       // checkpoint round-trip: the cold run saved phase 1 at ckpt — a
-      // silent feature/table drift through save/load fails loudly here
-      // (checkpoint.py:26-110 is the reference's warm-start branch;
+      // silent feature/table/tree drift through save/load fails loudly
+      // here (checkpoint.py:26-110 is the reference's warm-start branch;
       // RdrPipelineSpec covers the actual warm reuse across invocations)
       val reloaded = graft.train.ModelStore.loadCheckpoint(spark, s"$stage/ckpt")
         .getOrElse(sys.error("q_rdr_train: checkpoint failed to reload"))
       require(reloaded.featureNames == pm.featureNames &&
         reloaded.stringTables == pm.stringTables &&
-        reloaded.modelSeed == pm.modelSeed,
+        reloaded.modelSeed == pm.modelSeed &&
+        reloaded.meanItemCount == pm.meanItemCount &&
+        trees(reloaded.model) == trees(pm.model),
         "q_rdr_train: reloaded checkpoint differs from the trained phase-1 model")
       pm.featureNames.toDF("feature").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/features_p1")

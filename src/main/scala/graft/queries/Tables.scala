@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.GraftSession
 
 /** Loaders for the driver-provided synthetic tables (see TESTDATA.md).
   * One parquet file per table under the scale-factor directory.
@@ -21,13 +22,16 @@ object Tables {
     * plain timestamp[us] (TIMESTAMP_NTZ to Spark). Adapt on the actual
     * dtype so both generations load as session-TZ TimestampType: the
     * Verify/Bench sessions pin UTC, so NTZ→timestamp is a wall-clock
-    * no-op and DuckDB hashing stays aligned.
+    * no-op and DuckDB hashing stays aligned. The nanos-as-long read
+    * option is set on a clone of `s`, never on `s`: the frame is read
+    * there and rebound to `s`, and its relation keeps the clone's conf
+    * for its scan.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val raw = graft.Sessions.isolated(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      clone => GraftSession.rebind(load(clone, d, "events"), s))
     raw.schema("ts").dataType match {
       case LongType => // legacy TIMESTAMP(NANOS) surfaced as long nanos
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

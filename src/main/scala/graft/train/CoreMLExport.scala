@@ -200,4 +200,8 @@ object CoreMLExport {
 
   /** Artifact filename inside the decision-model directory. */
   val MlModelFile = "model.mlmodel"
+
+  /** The userDefined key of the artifact's metadata JSON (the same JSON
+    * its model.gbt holds). */
+  val MetadataKey = "graft.metadata"
 }

@@ -14,10 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionSettingsGuardSpec extends AnyFunSuite {
 
   private val allowedFiles = Set("Sessions.scala", "SessionShim.scala")
-  // read-compat for TIMESTAMP(NANOS) testdata: a read option every
-  // session loading `events` needs, not a scoped setting
-  private val allowedLines = Set(
-    """s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")""")
   private val mutation = """conf\.set\(|conf\.unset\(|extraOptimizations\s*(\+\+|:\+)?=(?!=)""".r
 
   test("no session setting changes outside Sessions and its shim") {
@@ -29,7 +25,7 @@ class SessionSettingsGuardSpec extends AnyFunSuite {
     val offending = for {
       f: Path <- files if !allowedFiles(f.getFileName.toString)
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if mutation.findFirstIn(line).isDefined && !allowedLines(line.trim)
+      if mutation.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n", "\n", ""))
   }

@@ -86,6 +86,31 @@ class TestdataSchemaCanarySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Tables.events reads TIMESTAMP(NANOS) without changing the caller's session") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // the legacy events dtype; Spark cannot write it, parquet's example writer can
+    val sf = java.nio.file.Files.createTempDirectory("events_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$sf/events.parquet/part-0.parquet"))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1577836800123456789L))
+    finally writer.close()
+
+    val s = org.apache.spark.sql.graftshim.GraftSession.cloneSession(spark)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val before = s.conf.getAll
+    val events = Tables.events(s, sf)
+    assert(s.conf.getAll == before)
+    assert(events.sparkSession eq s)
+    // the scan runs on `s` and still reads the nanos as longs
+    assert(events.selectExpr("unix_micros(ts)").head().getLong(0) == 1577836800123456L)
+  }
+
   test("canary catches a dtype flip (synthetic nanos-vs-us fixture)") {
     // the negative control: a table whose ts dtype is NOT in the
     // adapter-accepted set must fail the membership check the first

@@ -153,7 +153,7 @@ class CoreMLExportSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("saveDecisionModel embeds metadata.json in the .mlmodel byte for byte") {
+  test("saveDecisionModel embeds the model.gbt metadata in the .mlmodel") {
     val dir = java.nio.file.Files.createTempDirectory("coreml_meta").toString + "/latest"
     ModelStore.saveDecisionModel(Trainer.DecisionModel(model, featureNames,
       Map("fa" -> Seq(1L, 2L)), 5L, 0.25, 1.5), dir)
@@ -161,9 +161,11 @@ class CoreMLExportSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Paths.get(dir, CoreMLExport.MlModelFile))), 2)
     val embedded = sub(one(desc, 100), 100)
       .map(kv => str(kv, 1) -> str(kv, 2)).toMap
-      .apply("graft.metadata.json")
-    val sidecar = java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "metadata.json"))
-    assert(embedded == sidecar)
+      .apply("graft.metadata")
+    val inGbt = GbtFile.decode(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, GbtFile.Name))).get.metadata
+    assert(embedded == inGbt)
+    assert(inGbt.contains("\"reward_std\":1.5"))
   }
 
   test("export rejects a feature-name/arity mismatch loudly") {

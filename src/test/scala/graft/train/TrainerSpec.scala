@@ -91,7 +91,17 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
     val loaded = ModelStore.loadCheckpoint(spark, dir).get
     assert(loaded.featureNames == pm.featureNames)
     assert(loaded.stringTables == pm.stringTables)
-    assert(loaded.meanItemCount === pm.meanItemCount +- 1e-12)
+    assert(loaded.meanItemCount == pm.meanItemCount)
+    // the reloaded model scores the training frame bit for bit
+    val training = Encoding.withFeatureVector(
+      Encoding.withFlatFeatures(Encoding.expandForPropensity(df))
+        .withColumn("nums", map_concat(col("nums"), map(lit(Encoding.TimestampFeature), col("_t")))),
+      pm.featureNames, pm.stringTables, pm.modelSeed)
+    def probabilities(m: Trainer.PropensityModel) =
+      m.model.transform(training).select("probability").collect().map(_.get(0)).toSeq
+    val trained = probabilities(pm)
+    assert(trained.size == 200)
+    assert(probabilities(loaded) == trained)
 
     // stale checkpoint rejected
     val future = java.time.Instant.now().plusSeconds(25 * 3600)
@@ -109,12 +119,39 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
     ModelStore.saveDecisionModel(dm, dir)
     val loaded = ModelStore.loadDecisionModel(spark, dir).get
     assert(loaded.featureNames == dm.featureNames)
-    assert(loaded.rewardMean === dm.rewardMean +- 1e-12)
+    assert(loaded.rewardMean == dm.rewardMean)
     // same predictions after round-trip
     val enc = Encoding.makeVectorEncoder(dm.featureNames, dm.stringTables, dm.modelSeed)
-    val (nums, strs) = Encoding.flattenPair("\"a\"", """{"device":"d1"}""")
-    val v = enc(nums, strs, 0.0)
-    assert(loaded.model.predict(v) === dm.model.predict(v) +- 1e-12)
+    for (item <- Seq("\"a\"", "\"b\"", "\"c\""); device <- Seq("d0", "d1", "d2")) {
+      val (nums, strs) = Encoding.flattenPair(item, s"""{"device":"$device"}""")
+      val v = enc(nums, strs, 0.0)
+      assert(loaded.model.predict(v) == dm.model.predict(v))
+    }
+  }
+
+  /** Drop a file's last 100 bytes, and the local filesystem's checksum
+    * sibling with them, so the cut bytes reach the reader (as on a
+    * store that keeps no checksums). */
+  private def cutShort(file: java.nio.file.Path): Unit = {
+    val bytes = java.nio.file.Files.readAllBytes(file)
+    java.nio.file.Files.write(file, bytes.take(bytes.length - 100))
+    java.nio.file.Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+  }
+
+  test("a model.gbt cut short loads as None, not an exception") {
+    import spark.implicits._
+    val df = syntheticDecisions(100).toDF()
+    val pm = Trainer.trainPropensity(df, cfg)
+    val dm = Trainer.trainDecision(df, pm, cfg)
+    val base = java.nio.file.Files.createTempDirectory("gbt_cut")
+    ModelStore.saveCheckpoint(pm, s"$base/ckpt")
+    assert(ModelStore.loadCheckpoint(spark, s"$base/ckpt").isDefined)
+    cutShort(base.resolve("ckpt/model.gbt"))
+    assert(ModelStore.loadCheckpoint(spark, s"$base/ckpt").isEmpty)
+    ModelStore.saveDecisionModel(dm, s"$base/model")
+    assert(ModelStore.loadDecisionModel(spark, s"$base/model").isDefined)
+    cutShort(base.resolve("model/model.gbt"))
+    assert(ModelStore.loadDecisionModel(spark, s"$base/model").isEmpty)
   }
 
   test("a save that fails mid-write leaves the previous decision model loadable and no staging dir") {
@@ -207,10 +244,12 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
 
     val root = java.nio.file.Files.createTempDirectory("pubroot").toString
     val (arcKey, latestKey) = ModelStore.publish(s"$dir/saved", root, "messages-2.0")
-    assert(latestKey == "models/latest/messages-2.0.tar.gz")
+    assert(latestKey == "models/latest/messages-2.0.gbt.gz")
     assert(arcKey.startsWith("models/archive/messages-2.0/messages-2.0-"))
+    assert(arcKey.endsWith(".gbt.gz"))
     assert(new java.io.File(s"$root/$latestKey").isFile)
     assert(new java.io.File(s"$root/$arcKey").isFile)
+    assert(new java.io.File(s"$root/models/latest/messages-2.0.mlmodel.gz").isFile)
     // latest is a byte-for-byte copy of the archive object
     assert(java.util.Arrays.equals(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$root/$latestKey")),
@@ -223,11 +262,32 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
     val enc = Encoding.makeVectorEncoder(dm.featureNames, dm.stringTables, dm.modelSeed)
     val (nums, strs) = Encoding.flattenPair("\"a\"", """{"device":"d1"}""")
     val v = enc(nums, strs, 0.0)
-    assert(loaded.model.predict(v) === dm.model.predict(v) +- 1e-12)
+    assert(loaded.model.predict(v) == dm.model.predict(v))
     assert(loaded.stringTables == dm.stringTables)
 
     // no artifact → false, not an exception
     assert(!ModelStore.unpackLatest(root, "absent-model", dest + "2"))
+  }
+
+  test("a truncated published key fails unpack; the unpacked model stays") {
+    import spark.implicits._
+    val df = syntheticDecisions(100).toDF()
+    val pm = Trainer.trainPropensity(df, cfg)
+    val dm = Trainer.trainDecision(df, pm, cfg)
+    val dir = java.nio.file.Files.createTempDirectory("cutpub").toString
+    ModelStore.saveDecisionModel(dm, s"$dir/saved")
+    val (_, latestKey) = ModelStore.publish(s"$dir/saved", s"$dir/root", "m")
+    val dest = s"$dir/dest"
+    assert(ModelStore.unpackLatest(s"$dir/root", "m", dest))
+
+    cutShort(java.nio.file.Paths.get(s"$dir/root/$latestKey"))
+    intercept[java.io.IOException](ModelStore.unpackLatest(s"$dir/root", "m", dest))
+
+    val loaded = ModelStore.loadDecisionModel(spark, dest).get
+    val enc = Encoding.makeVectorEncoder(dm.featureNames, dm.stringTables, dm.modelSeed)
+    val (nums, strs) = Encoding.flattenPair("\"a\"", """{"device":"d1"}""")
+    val v = enc(nums, strs, 0.0)
+    assert(loaded.model.predict(v) == dm.model.predict(v))
   }
 
   test("poisson weights are zero-rejected with mean ≈ e/(e−1)") {
