@@ -49,7 +49,7 @@ object Bench {
       spark.range(0, 50000000L)
         .selectExpr("sum(xxhash64(id) & 1048575)").collect()
     }
-    val calDir = java.nio.file.Files.createTempDirectory("bench_cal").toString
+    val calDir = graft.pipeline.GateArtifacts.fresh("bench_cal")
     val calIo = wallS("calibration_io") {
       spark.range(0, 8000000L)
         .selectExpr("id", "xxhash64(id) AS h", "CAST(id % 97 AS DOUBLE) AS v")
@@ -66,10 +66,8 @@ object Bench {
     // swung 2-4× round to round from exactly this). A setup task only
     // runs when one of its consumer gates is selected.
     val selectedNames = selected.map(_._1).toSet
-    val setup = SparkEntry.setupTasks.collect {
-      case SparkEntry.SetupTask(name, consumers, warm) if consumers.exists(selectedNames) =>
-        name -> wallS(name)(warm(spark, sfDir))
-    }
+    val setup = SparkEntry.setupTasks.filter(_.consumers.exists(selectedNames))
+      .map(t => t.name -> wallS(t.name)(t.dir(spark, sfDir)))
     // shared-box load can inflate a single pass by >10× (a 5.9 s query
     // once recorded 9.9 s inside a busy suite), so expensive queries
     // report a MEDIAN of several passes instead of one sample. Cheap

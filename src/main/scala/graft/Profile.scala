@@ -80,7 +80,7 @@ object Profile {
             (df.map(Option(_)), spans)
           // a setup task runs under no gate name: its accessors refuse
           // every gate outside their consumer set
-          case Left(task) => measure(spark, name) { task.warm(spark, sfDir); None }
+          case Left(task) => measure(spark, name) { task.dir(spark, sfDir); None }
         }
         val t = spans(name)
         val row = Pass(name, pass, t.wallS, t.jobs, t.stages, t.tasks, t.driverS,

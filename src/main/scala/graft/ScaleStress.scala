@@ -346,9 +346,7 @@ object ScaleStress {
       .withColumn("_b", pmod(col("doc_id"), lit(10)))
       .persist()
     ndDocs.count()
-    val ndWork = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(if (new java.io.File("/dev/shm").canWrite)
-        "/dev/shm" else System.getProperty("java.io.tmpdir")), "nd_stress").toString
+    val ndWork = graft.pipeline.GateArtifacts.fresh("nd_stress")
     val walls = (0 until 10).map { b =>
       val batch = ndDocs.filter(col("_b") === b).drop("_b")
       val t0 = System.nanoTime()
@@ -359,8 +357,8 @@ object ScaleStress {
     ndDocs.unpersist(blocking = false)
     val flagged = spark.read.parquet(s"$ndWork/flags")
       .select("doc_id").distinct().count()
-    // the store is RAM-backed (/dev/shm) and x10-corpus-sized: delete
-    // it or repeated runs accumulate until tmpfs ENOSPC
+    // the store is x10-corpus-sized and the scratch root may be RAM:
+    // free it now rather than at JVM exit
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ndWork))
     val earlyMedian = walls.slice(1, 4).sorted.apply(1)
     println(f"| streaming near-dup flat-cost @x$x | 10 batches, walls=" +
@@ -448,7 +446,7 @@ object ScaleStress {
     // replay scale with the static broadcast DISABLED so only the
     // rule can produce the broadcast.
     import graft.operators.ZoneMap
-    val work = java.nio.file.Files.createTempDirectory("rules_stress").toString
+    val work = graft.pipeline.GateArtifacts.fresh("rules_stress")
     val ev = spark.read.parquet(s"$xDir/events.parquet")
     // probe: event_id-range-clustered files → tight footer zones
     ev.select("event_id", "event_type", "value")
@@ -508,7 +506,7 @@ object ScaleStress {
     // (256 KiB/file) restores the envelope. The require() below fails
     // loudly if the sizing rule regresses.
     import graft.operators.ZoneMap
-    val workB = java.nio.file.Files.createTempDirectory("bloom_stress").toString
+    val workB = graft.pipeline.GateArtifacts.fresh("bloom_stress")
     val evB = spark.read.parquet(s"$xDir/events.parquet")
     evB.select("event_id", "user_id", "value")
       .repartitionByRange(24, col("user_id"))

@@ -29,19 +29,25 @@ object SparkEntry {
     all.map(q => q.name -> q.run).toMap
 
   /** A one-time per-(JVM, sfDir) derivation that several gates share:
-    * `warm` forces it, `consumers` are the gates that read it.
+    * `build(spark, sfDir, dir)` writes it into a scratch dir, and
+    * `consumers` are the gates that read it.
     */
   final case class SetupTask(name: String, consumers: Set[String],
-      warm: (SparkSession, String) => Unit)
+      build: (SparkSession, String, String) => Unit) {
+    /** The derivation's dir for `sfDir`, built on the first call in this
+      * JVM. A running gate outside `consumers` fails loudly (GateContext).
+      */
+    def dir(spark: SparkSession, sfDir: String): String = {
+      graft.core.GateContext.assertDeclared(name, consumers)
+      graft.pipeline.GateArtifacts.once(s"$name|$sfDir")(build(spark, sfDir, _))
+    }
+  }
 
   /** The shared derivations, in the order the bench forces them (see
     * GateContext for why their cost is billed apart from the gates).
     */
-  val setupTasks: Seq[SetupTask] = Seq(
-    SetupTask("setup_dedup_pairs", ExtOps.derivedConsumers, ExtOps.warmDerived),
-    SetupTask("setup_rdr_merged", graft.pipeline.RdrPipeline.derivedConsumers,
-      graft.pipeline.RdrPipeline.warmDerived),
-    SetupTask("setup_zonemap_table", SearchOps.derivedConsumers, SearchOps.warmDerived))
+  lazy val setupTasks: Seq[SetupTask] = Seq(
+    ExtOps.pairsSetup, graft.pipeline.RdrPipeline.mergedSetup, SearchOps.zonemapSetup)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

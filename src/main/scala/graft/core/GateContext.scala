@@ -6,14 +6,14 @@ package graft.core
   * Purpose: the bench bills one-time shared derivations (the dedup
   * pair graph, the rdr merged table, the zone-map artifacts) to an
   * explicit `setup` phase gated on hand-declared consumer sets
-  * ([[graft.queries.ExtOps.derivedConsumers]] etc.). A NEW gate that
+  * ([[graft.SparkEntry.SetupTask]]`.consumers`). A NEW gate that
   * starts reading a cached derivation without being added to its
   * consumer set would silently re-charge the shared setup cost to
   * itself — recreating the round-to-round accounting swings the setup
   * phase exists to fix. [[assertDeclared]] turns that silent drift
-  * into a loud failure AT THE ACCESS SITE: every cached-derivation
-  * accessor names its consumer set, and an undeclared gate calling it
-  * throws. Calls outside a harness-run gate (specs, ad-hoc use) have
+  * into a loud failure AT THE ACCESS SITE: `SetupTask.dir`, the one
+  * accessor of a shared derivation, checks its consumer set, and an
+  * undeclared gate calling it throws. Calls outside a harness-run gate (specs, ad-hoc use) have
   * no current gate and are never checked.
   */
 object GateContext {

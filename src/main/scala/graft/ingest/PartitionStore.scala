@@ -83,21 +83,18 @@ object PartitionStore {
     val withTs = df.withColumn("_ts",
       graft.functions.KsuidExpressions.ksuidBasicIso(col(Schema.DecisionId)))
 
-    // Census: per-second counts — one row per (model, distinct second)
-    // — roll up over all candidate lengths in one distributed agg, so
-    // exactly (MaxPrefix−MinPrefix+1) rows per model reach the driver.
-    // Every level partitions the same rows, so any level's Σ is the
-    // model's row total.
+    // Census: every row counts once at each candidate length, in one
+    // (model, len, pfx) aggregation (its map-side partial agg folds the
+    // exploded rows before the shuffle); a second agg keeps each
+    // length's largest group, so exactly (MaxPrefix−MinPrefix+1) rows
+    // per model reach the driver. Every level partitions the same rows, so any level's Σ is
+    // the model's row total.
     val census = withTs
-      .select(col(Schema.Model), substring(col("_ts"), 1, MaxPrefix).as("_p"))
-      .groupBy(Schema.Model, "_p").count()
       .select(col(Schema.Model),
         explode(array((MinPrefix to MaxPrefix).map(i =>
-          struct(lit(i).as("len"), substring(col("_p"), 1, i).as("pfx"))): _*)).as("lp"),
-        col("count"))
-      .groupBy(col(Schema.Model), col("lp.len").as("len"), col("lp.pfx"))
-      .agg(sum("count").as("n"))
-      .groupBy(Schema.Model, "len").agg(max("n").as("maxN"), sum("n").as("rows"))
+          struct(lit(i).as("len"), substring(col("_ts"), 1, i).as("pfx"))): _*)).as("lp"))
+      .groupBy(col(Schema.Model), col("lp.len").as("len"), col("lp.pfx")).count()
+      .groupBy(Schema.Model, "len").agg(max("count").as("maxN"), sum("count").as("rows"))
       .collect()
       .groupBy(_.getString(0))
     // loud guard: a null/unvalidated model value would become a

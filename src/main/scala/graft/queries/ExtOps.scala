@@ -13,42 +13,20 @@ import graft.operators.{Ann, CountMin, Dedup, Frequency, IvfIndex, Kmv, Multimod
   * SQL bit-for-bit).
   */
 
-/** Per-process scratch root for gate-built index artifacts: unique per
-  * JVM (two concurrent processes on one box must not rebuild/delete
-  * each other's live index mid-query — delete/rename races turn into
-  * missing-file failures or silently wrong scores), removed on
-  * shutdown. A hard kill leaks one dir, same exposure as every
-  * createTempDirectory user here.
-  */
-private[queries] object GateScratch {
-  lazy val root: String = {
-    val dir = java.nio.file.Paths.get(graft.pipeline.GateArtifacts.scratchTempDir("graft_gate_idx"))
-    sys.addShutdownHook(graft.pipeline.GateArtifacts.deleteTree(dir))
-    dir.toString
-  }
-  def dir(name: String): String = s"$root/$name"
-}
-
 object ExtOps {
   import Tables._
 
   // The verified near-dup pair graph at threshold 0.9 is the single
-  // heaviest derivation in the suite AND the input to two gates
-  // (q_dedup_minhash, q_dedup_clusters). Materialize it to parquet once
-  // per (JVM, sfDir) — the production shape (the pair list IS a table
-  // downstream jobs consume) — so the clusters gate reads the pair
-  // relation instead of re-running the whole LSH pipeline. Parquet, not
-  // persist(): the verify/bench harnesses clearCache() between queries,
-  // which would silently turn a cached plan back into a recompute.
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def cachedDeriv(s: SparkSession, d: String): String = {
-    // a gate reading this shared derivation MUST be declared in
-    // derivedConsumers, or the bench's setup accounting silently
-    // re-charges the pair-graph build to that gate (GateContext doc)
-    graft.core.GateContext.assertDeclared("setup_dedup_pairs", derivedConsumers)
-    pairsCache.computeIfAbsent(d, { _ =>
-      val out = graft.pipeline.GateArtifacts.scratchTempDir("graft_pairs")
+  // heaviest derivation in the suite AND the input to nine gates.
+  // Materialize it to parquet once per (JVM, sfDir) — the production
+  // shape (the pair list IS a table downstream jobs consume) — so the
+  // clusters gate reads the pair relation instead of re-running the
+  // whole LSH pipeline.
+  private[graft] val pairsSetup = graft.SparkEntry.SetupTask("setup_dedup_pairs",
+    Set("q_dedup_minhash", "q_dedup_clusters", "q_dedup_capped", "q_dedup_soft",
+      "q_dedup_remove", "q_dedup_keep_best", "q_split_leakage", "q_dedup_delta",
+      "q_jaccard_pairs"),
+    (s, d, out) => {
       // The source table is ONE small parquet file (one row group), so
       // every scan gets exactly ONE input partition and the whole
       // signature computation + LSH band join + pair distinct would run
@@ -88,39 +66,16 @@ object ExtOps {
         Dedup.duplicateClusters(r.read.parquet(s"$out/pairs"))
           .write.mode("overwrite").parquet(s"$out/clusters")
       } finally signed.unpersist(blocking = false)
-      sys.addShutdownHook(
-        graft.pipeline.GateArtifacts.deleteTree(java.nio.file.Paths.get(out)))
-      out
     })
-  }
-
-  /** Bench setup hook: force the one-time per-(JVM, sfDir) signature/
-    * pair/cluster materialization NOW so its cost lands in the bench's
-    * explicit `setup` entry instead of whichever consumer gate runs
-    * first (round-over-round per-query compare was unreliable for the
-    * whole dedup family — the same work was charged to different gates
-    * run to run).
-    */
-  private[graft] def warmDerived(s: SparkSession, d: String): Unit = {
-    cachedDeriv(s, d); ()
-  }
-
-  /** The gates that read the [[cachedDeriv]] artifacts — the bench
-    * only pays the setup when one of these is selected.
-    */
-  private[graft] val derivedConsumers: Set[String] = Set(
-    "q_dedup_minhash", "q_dedup_clusters", "q_dedup_capped", "q_dedup_soft",
-    "q_dedup_remove", "q_dedup_keep_best", "q_split_leakage", "q_dedup_delta",
-    "q_jaccard_pairs")
 
   private[graft] def cachedVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${cachedDeriv(s, d)}/pairs")
+    s.read.parquet(s"${pairsSetup.dir(s, d)}/pairs")
 
   private[graft] def cachedClusters(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${cachedDeriv(s, d)}/clusters")
+    s.read.parquet(s"${pairsSetup.dir(s, d)}/clusters")
 
   private[queries] def cachedSigned(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${cachedDeriv(s, d)}/signed")
+    s.read.parquet(s"${pairsSetup.dir(s, d)}/signed")
 
   /** The duplicate-cluster census ground truth, shared by the
     * uncapped (q_dedup_clusters) and capped (q_dedup_capped) gates:
@@ -819,10 +774,9 @@ object ExtOps {
         val query = emb.filter(col("vec_id") === 0)
           .select("v").collect().head.getSeq[Double](0)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        // per-process scratch (see GateScratch): stable within the
-        // JVM so repeated rounds overwrite via the atomic swap, unique
-        // across processes so concurrent runs can't race each other
-        val dir = GateScratch.dir("ivf_gate")
+        // per-JVM scratch (GateArtifacts.fresh): emptied each pass,
+        // unique across processes so concurrent runs can't race each other
+        val dir = graft.pipeline.GateArtifacts.fresh("ivf_gate")
         val idx = IvfIndex.build(corpus, "v", "vec_id", dir, numCells = 8, seed = 5L)
         IvfIndex.topK(s, idx, "v", "vec_id", query, 10, nprobe = 8)
           .select("vec_id", "label", "cos")
@@ -843,7 +797,7 @@ object ExtOps {
         val query = emb.filter(col("vec_id") === 0)
           .select("v").collect().head.getSeq[Double](0)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val dir = GateScratch.dir("ivf_append_gate")
+        val dir = graft.pipeline.GateArtifacts.fresh("ivf_append_gate")
         val idx = IvfIndex.build(corpus.filter(col("vec_id") % 2 === 1),
           "v", "vec_id", dir, numCells = 8, seed = 5L)
         IvfIndex.append(idx, corpus.filter(col("vec_id") % 2 === 0), "v")
@@ -863,7 +817,7 @@ object ExtOps {
           .withColumn("v", transform(col("embedding"), x => x.cast("double")))
         val queries = emb.filter(col("vec_id") < 5)
         val corpus = emb.filter(col("vec_id") >= 5)
-        val dir = GateScratch.dir("ivf_knn_gate")
+        val dir = graft.pipeline.GateArtifacts.fresh("ivf_knn_gate")
         val idx = IvfIndex.build(corpus, "v", "vec_id", dir, numCells = 8, seed = 5L)
         IvfIndex.topKJoin(s, idx, queries, "v", "vec_id", "vec_id", 3, nprobe = 8)
           .orderBy("query_id", "rank")

@@ -55,25 +55,18 @@ object MiningOps {
 
   /** The lev<=1 match relation over the linkage corpus is derived by
     * TWO gates (q_fuzzy_join_edit censuses it; q_entity_resolution
-    * clusters it) — materialize it to parquet once per (JVM, sfDir),
-    * the ExtOps pairsCache pattern: the match table IS the lake
-    * product downstream linkage jobs consume, and the second consumer
-    * reads it instead of re-running the FastSS join.
+    * clusters it) — materialize it to parquet once per (JVM, sfDir): the
+    * match table IS the lake product downstream linkage jobs consume,
+    * and the second consumer reads it instead of re-running the FastSS
+    * join.
     */
-  private val fuzzyMatchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedMatches(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val out = fuzzyMatchCache.computeIfAbsent(d, { _ =>
-      val dir = graft.pipeline.GateArtifacts.scratchTempDir("graft_fuzzy")
+    val out = graft.pipeline.GateArtifacts.once(s"fuzzy_matches|$d") { dir =>
       val (base, dirty) = fuzzyCorpus(s, d)
       Fuzzy.editJoin(dirty, "id", "str", base, "id", "str", k = 1)
         .write.mode("overwrite").parquet(s"$dir/matches")
-      sys.addShutdownHook(
-        graft.pipeline.GateArtifacts.deleteTree(java.nio.file.Paths.get(dir)))
-      dir
-    })
+    }
     s.read.parquet(s"$out/matches")
   }
 

@@ -56,24 +56,21 @@ object ScaleOps {
   // Bucketed copies of lineitem/orders, written ONCE per (JVM, sfDir)
   // — the production shape: the bucketed LAYOUT is a table property
   // paid at write time, amortized over every later co-located join.
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def bucketedTables(s: SparkSession, d: String): (String, String) =
-    bucketCache.computeIfAbsent(d, { _ =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      val root = GateScratch.dir(s"bucketed_$hex")
-      val li = s"graft_bkt_lineitem_$hex"
-      val ord = s"graft_bkt_orders_$hex"
+  private def bucketedTables(s: SparkSession, d: String): (String, String) = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val li = s"graft_bkt_lineitem_$hex"
+    val ord = s"graft_bkt_orders_$hex"
+    graft.pipeline.GateArtifacts.once(s"bucketed|$d") { root =>
       Bucketed.writeBucketed(
         Tables.lineitem(s, d).select(col("l_orderkey").as("okey"),
           col("l_extendedprice")), s"$root/li", li, "okey", 8)
       Bucketed.writeBucketed(
         Tables.orders(s, d).select(col("o_orderkey").as("okey"),
           col("o_orderpriority")), s"$root/ord", ord, "okey", 8)
-      (li, ord)
-    })
+    }
+    (li, ord)
+  }
 
   val queries: Seq[GateQuery] = Seq(
 

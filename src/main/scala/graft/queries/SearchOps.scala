@@ -29,20 +29,10 @@ object SearchOps {
   // z-ordered lineitem + its footer zone map, materialized once per
   // (JVM, sfDir) — the lake products a table format keeps (the laid-
   // out files plus the stats manifest its commit log carries)
-  private val zmCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Bench setup hook + its consumer set: see ExtOps.warmDerived. */
-  private[graft] def warmDerived(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    zonemapArtifacts(s, d); ()
-  }
-  private[graft] val derivedConsumers: Set[String] =
+  private[graft] val zonemapSetup = graft.SparkEntry.SetupTask("setup_zonemap_table",
     Set("q_zonemap_prune", "q_zonemap_agg", "q_zonemap_part", "q_bloom_skip",
-      "q_dyn_prune", "q_ndv_census", "q_quantile_census", "q_count_star")
-
-  private def zonemapArtifacts(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    // undeclared consumers fail loudly — see GateContext
-    graft.core.GateContext.assertDeclared("setup_zonemap_table", derivedConsumers)
-    zmCache.computeIfAbsent(d, { _ =>
-      val out = graft.pipeline.GateArtifacts.scratchTempDir("graft_zonemap")
+      "q_dyn_prune", "q_ndv_census", "q_quantile_census", "q_count_star"),
+    (s, d, out) => {
       Layout.zOrder(
           lineitem(s, d).select("l_orderkey", "l_quantity", "l_extendedprice"),
           "l_quantity", "l_extendedprice", 24,
@@ -89,9 +79,7 @@ object SearchOps {
       ZoneMap.buildHllSidecar(s, s"$out/table_id", Seq("okey2", "o_orderstatus"))
       // KLL shards for the metadata quantile census (q_quantile_census)
       ZoneMap.buildKllSidecar(s, s"$out/table_id", Seq("o_totalprice"))
-      out
     })
-  }
 
   val queries: Seq[GateQuery] = Seq(
 
@@ -214,9 +202,9 @@ object SearchOps {
     GateQuery(
       "q_inverted_bm25",
       (s, d) => {
-        // per-process scratch (GateScratch): stable within the JVM,
-        // unique across processes — no cross-process rebuild races
-        val dir = GateScratch.dir("inv_idx_gate")
+        // per-JVM scratch (GateArtifacts.fresh): unique across
+        // processes — no cross-process rebuild races
+        val dir = graft.pipeline.GateArtifacts.fresh("inv_idx_gate")
         val idx = InvertedIndex.build(documents(s, d), "doc_id", "text", dir)
         InvertedIndex.bm25(s, idx, QueryTerms)
           .select(col("id").as("doc_id"),
@@ -286,7 +274,7 @@ object SearchOps {
     GateQuery(
       "q_zonemap_prune",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val mf = s.read.parquet(s"$root/zone_map")
         val pr = ZoneMap.prunedRead(s, s"$root/table", mf, Seq(
           ZoneMap.NumRange("l_quantity", None, Some(5.0)),
@@ -351,7 +339,7 @@ object SearchOps {
     GateQuery(
       "q_zonemap_agg",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         // MULTI-column census: one sidecar slice + one listing answer
         // all three columns (the batch shape a catalog endpoint serves)
         val census = ZoneMap.aggFromManifestMulti(s, s"$root/table",
@@ -406,7 +394,7 @@ object SearchOps {
     GateQuery(
       "q_zonemap_part",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_part"
         val total = ZoneMap.dataFiles(s, table).length
         graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
@@ -456,7 +444,7 @@ object SearchOps {
     GateQuery(
       "q_bloom_skip",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_id"
         val total = ZoneMap.dataFiles(s, table).length
         val zoned = (r: SparkSession) => Seq(graft.plans.ZoneSkipRule(r))
@@ -530,7 +518,7 @@ object SearchOps {
     GateQuery(
       "q_dyn_prune",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_id"
         val buildKeys = orders(s, d)
           .filter(col("o_orderkey") % 50000 === 7)
@@ -571,7 +559,7 @@ object SearchOps {
     GateQuery(
       "q_ndv_census",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_id"
         val ndvKey = graft.operators.ZoneMap.ndvFromManifest(s, table, "okey2")
           .getOrElse(sys.error("q_ndv_census: fresh table must answer okey2"))
@@ -607,7 +595,7 @@ object SearchOps {
     GateQuery(
       "q_count_star",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_id"
         graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ManifestCountRule(r))) { r =>
           val bare = r.read.parquet(table).agg(count(lit(1)).as("n"))
@@ -640,7 +628,7 @@ object SearchOps {
     GateQuery(
       "q_quantile_census",
       (s, d) => {
-        val root = zonemapArtifacts(s, d)
+        val root = zonemapSetup.dir(s, d)
         val table = s"$root/table_id"
         val qc = graft.operators.ZoneMap.quantilesFromManifest(
           s, table, "o_totalprice", Seq(0.5, 0.9))
@@ -694,7 +682,7 @@ object SearchOps {
     GateQuery(
       "q_compact",
       (s, d) => {
-        val work = graft.pipeline.GateArtifacts.scratchTempDir("graft_compact")
+        val work = graft.pipeline.GateArtifacts.fresh("compact_gate")
         val table = s"$work/t"
         orders(s, d)
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -702,7 +690,7 @@ object SearchOps {
           .write.mode("overwrite").parquet(table)
         ZoneMap.writeSidecar(s, table, ZoneMap.build(s, table, Seq("o_orderkey")))
         ZoneMap.buildBloomSidecar(s, table, Seq("o_orderkey"))
-        try graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
+        graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
           def census() = r.read.parquet(table)
             .filter(col("o_orderkey") < 375L)
             .agg(count(lit(1)).as("n"),
@@ -748,13 +736,6 @@ object SearchOps {
             lit(true).as("compacted"),
             lit(true).as("pruned_before"),
             lit(true).as("pruned_after"))
-        } finally {
-          // every value is collected into literals above — the per-pass
-          // table is dead weight; best-effort cleanup
-          try {
-            val p = new org.apache.hadoop.fs.Path(work)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case scala.util.control.NonFatal(_) => () }
         }
       },
       Some("""SELECT (SELECT count(*) FROM orders

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.GateArtifacts.{fresh, once}
 import graft.streaming.{StreamingAggregates, StreamingDedup, StreamingJoin, StreamingRollup, StreamingSessions}
 
 /** Streaming↔batch parity gates: the streaming operators run over the
@@ -46,36 +47,19 @@ object StreamingOps {
       // and keep it.
       "spark.sql.adaptive.enabled" -> "false")(body)
 
-  /** Replay scratch space: RAM-backed when the host offers it. The
-    * drop folder, checkpoint, state store, and sink are all
-    * gate-lifetime-scoped throwaways, and their fsync/CRC traffic on
-    * a real disk is harness cost the bench should not bill to the
-    * operators.
+  /** Replay fixtures are built ONCE per (gate, sfDir)
+    * (GateArtifacts.once): the drop-folder contents are a pure function
+    * of the fixture tables, identical on every pass, so rebuilding them
+    * per bench repeat charged a fixture-prep scan+write to the
+    * streaming operator three times over (batch gates read their
+    * fixtures for free from the testdata dir — this levels the
+    * accounting). Checkpoints, state dirs and sinks live in one run dir
+    * per gate that every pass empties (GateArtifacts.fresh): each pass
+    * replays the stream from scratch; the streaming query is what the
+    * pass measures. Both sit in the RAM-backed-when-available scratch
+    * root — their fsync/CRC traffic on a real disk is harness cost the
+    * bench should not bill to the operators.
     */
-  private def replayDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
-  /** Replay fixture built ONCE per (gate, sfDir): the drop-folder
-    * contents are a pure function of the fixture tables, identical on
-    * every pass, so rebuilding them per bench repeat charged a
-    * fixture-prep scan+write to the streaming operator three times
-    * over (batch gates read their fixtures for free from the testdata
-    * dir — this levels the accounting). Checkpoints, state dirs and
-    * sinks are NOT cached: each pass replays the stream from scratch;
-    * the streaming query is what the pass measures.
-    */
-  private val fixtureCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedFixture(gate: String, d: String)(build: String => Unit): String =
-    fixtureCache.computeIfAbsent(s"$gate|$d", { _ =>
-      val dir = replayDir(gate)
-      build(dir)
-      dir
-    })
-
   /** The q_sessionize oracle, verbatim — the entire point of the gate
     * is that the streaming path answers the identical question.
     */
@@ -112,7 +96,7 @@ object StreamingOps {
       "q_sessionize_stream",
       (s, d) => {
         val gap = 1800L
-        val fx = cachedFixture("sess_stream", d) { fx =>
+        val fx = once(s"sess_stream|$d") { fx =>
           val ev = Tables.events(s, d).select(
             col("user_id"),
             col("ts").cast("long").as("ts"), // floor to epoch seconds
@@ -133,7 +117,7 @@ object StreamingOps {
           ev.unionByName(sentinel).coalesce(2).write.mode("overwrite").parquet(s"$fx/drop")
           ev.unpersist(blocking = false)
         }
-        val work = replayDir("sess_stream_run")
+        val work = fresh("sess_stream_run")
         withReplayConf(s) { r =>
           StreamingSessions.sessionStream(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", gapSeconds = gap,
@@ -158,7 +142,7 @@ object StreamingOps {
     GateQuery(
       "q_agg_window_stream",
       (s, d) => {
-        val fx = cachedFixture("aggw_stream", d) { fx =>
+        val fx = once(s"aggw_stream|$d") { fx =>
           val ev = Tables.events(s, d).select(
             col("ts").cast("long").as("ts"),
             col("event_type"),
@@ -171,7 +155,7 @@ object StreamingOps {
           ev.unionByName(sentinel).coalesce(2).write.mode("overwrite").parquet(s"$fx/drop")
           ev.unpersist(blocking = false)
         }
-        val work = replayDir("aggw_stream_run")
+        val work = fresh("aggw_stream_run")
         withReplayConf(s) { r =>
           StreamingAggregates.windowedCounts(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", windowLength = "1 hour", lateness = "30 minutes",
@@ -199,7 +183,7 @@ object StreamingOps {
     GateQuery(
       "q_dedup_stream",
       (s, d) => {
-        val fx = cachedFixture("dedup_stream", d) { fx =>
+        val fx = once(s"dedup_stream|$d") { fx =>
           Tables.documents(s, d).select(
               col("doc_id"),
               lit(1700000000L).as("ts"), // one instant: all within horizon
@@ -207,7 +191,7 @@ object StreamingOps {
             .filter(col("text").isNotNull)
             .coalesce(2).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("dedup_stream_run")
+        val work = fresh("dedup_stream_run")
         withReplayConf(s) { r =>
           StreamingDedup.dedupStream(r, s"$fx/drop", s"$work/out",
             s"$work/ckpt", horizon = "1 hour",
@@ -238,7 +222,7 @@ object StreamingOps {
     GateQuery(
       "q_reward_join_stream",
       (s, d) => {
-        val fx = cachedFixture("rjoin_stream", d) { fx =>
+        val fx = once(s"rjoin_stream|$d") { fx =>
           val ev = Tables.events(s, d).select(
             col("event_id"),
             col("ts").cast("long").as("ts"), // floor to epoch seconds
@@ -262,7 +246,7 @@ object StreamingOps {
             .write.mode("overwrite").parquet(s"$fx/rewards")
           ev.unpersist(blocking = false)
         }
-        val work = replayDir("rjoin_stream_run")
+        val work = fresh("rjoin_stream_run")
         withReplayConf(s) { r =>
           StreamingJoin.rewardJoinStream(r, s"$fx/decisions", s"$fx/rewards",
             s"$work/out", s"$work/ckpt",
@@ -310,7 +294,7 @@ object StreamingOps {
         val query = emb.filter(col("vec_id") === 0)
           .select("v").collect().head.getSeq[Double](0)
         val corpus = emb.filter(col("vec_id") =!= 0)
-        val fx = cachedFixture("ivf_stream", d) { fx =>
+        val fx = once(s"ivf_stream|$d") { fx =>
           // 12 files / 4 per trigger: same ~3 micro-batch appends, but
           // each batch arrives 4-file-parallel instead of as one file
           // (the cell-assignment pass below is per-row work — see the
@@ -322,8 +306,8 @@ object StreamingOps {
         // the index is NOT fixture: each pass rebuilds it from the odd
         // half and replays the appends against a fresh checkpoint —
         // the maintenance loop under test
-        val work = replayDir("ivf_stream_run")
-        val dir = GateScratch.dir("ivf_stream_gate")
+        val work = fresh("ivf_stream_run")
+        val dir = fresh("ivf_stream_gate")
         val idx = graft.operators.IvfIndex.build(
           corpus.filter(col("vec_id") % 2 === 1),
           "v", "vec_id", dir, numCells = 8, seed = 5L)
@@ -353,14 +337,14 @@ object StreamingOps {
       "q_expectations_stream",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val fx = cachedFixture("audit_stream", d) { fx =>
+        val fx = once(s"audit_stream|$d") { fx =>
           // several files → several micro-batches (maxFilesPerTrigger
           // = 1), so the accumulate/ledger path actually exercises
           Tables.documents(s, d)
             .select("doc_id", "text", "lang", "n_chars")
             .repartition(4).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("audit_stream_run")
+        val work = fresh("audit_stream_run")
         withReplayConf(s) { r =>
           graft.streaming.StreamingAudit.auditStream(
             r, s"$fx/drop", s"$work/state", s"$work/ckpt",
@@ -388,7 +372,7 @@ object StreamingOps {
     GateQuery(
       "q_neardup_stream",
       (s, d) => {
-        val fx = cachedFixture("neardup_stream", d) { fx =>
+        val fx = once(s"neardup_stream|$d") { fx =>
           Tables.documents(s, d).select(col("doc_id"), col("text"))
             .filter(col("text").isNotNull)
             // several files -> several micro-batches, so the
@@ -400,7 +384,7 @@ object StreamingOps {
             .repartition(4)
             .write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("neardup_stream_run")
+        val work = fresh("neardup_stream_run")
         withReplayConf(s) { r =>
           graft.streaming.StreamingNearDup.flagStream(
             r, s"$fx/drop", s"$work/nd", s"$work/ckpt",
@@ -451,13 +435,13 @@ object StreamingOps {
       (s, d) => {
         import org.apache.spark.sql.types._
         import graft.operators.CountMin
-        val fx = cachedFixture("cms_stream", d) { fx =>
+        val fx = once(s"cms_stream|$d") { fx =>
           Tables.lineitem(s, d).select("l_partkey")
             // several files -> several micro-batches, so merged() really
             // sums cross-batch contributions
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("cms_stream_run")
+        val work = fresh("cms_stream_run")
         withReplayConf(s) { r =>
           StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
@@ -494,13 +478,13 @@ object StreamingOps {
       (s, d) => {
         import org.apache.spark.sql.types._
         import graft.operators.Stats
-        val fx = cachedFixture("bootstrap_stream", d) { fx =>
+        val fx = once(s"bootstrap_stream|$d") { fx =>
           Tables.events(s, d)
             .select(col("event_id"),
               round(col("value") * 100).cast("long").as("cents"))
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("bootstrap_stream_run")
+        val work = fresh("bootstrap_stream_run")
         withReplayConf(s) { r =>
           StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
@@ -530,13 +514,13 @@ object StreamingOps {
       "q_cusum_stream",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val fx = cachedFixture("cusum_stream", d) { fx =>
+        val fx = once(s"cusum_stream|$d") { fx =>
           Tables.events(s, d)
             .select(col("event_type"), unix_micros(col("ts")).as("tus"),
               round(col("value") * 100).cast("long").as("cents"))
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("cusum_stream_run")
+        val work = fresh("cusum_stream_run")
         withReplayConf(s) { r =>
           StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
@@ -569,12 +553,12 @@ object StreamingOps {
       (s, d) => {
         import org.apache.spark.sql.types._
         import graft.operators.Metrics
-        val fx = cachedFixture("auc_stream", d) { fx =>
+        val fx = once(s"auc_stream|$d") { fx =>
           EvalOps.scored(s, d)
             .select(col("y"), col("score").cast("double").as("score"))
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("auc_stream_run")
+        val work = fresh("auc_stream_run")
         withReplayConf(s) { r =>
           StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt",
@@ -611,12 +595,12 @@ object StreamingOps {
         val ref = li.filter(col("l_orderkey") % 2 === 0)
         val b = Drift.refBounds(ref, "l_extendedprice").head()
         val (lo, hi) = (b.getDouble(0), b.getDouble(1))
-        val fx = cachedFixture("drift_stream", d) { fx =>
+        val fx = once(s"drift_stream|$d") { fx =>
           li.filter(col("l_orderkey") % 2 === 1)
             .select(col("l_extendedprice").cast("double").as("x"))
             .repartition(16).write.mode("overwrite").parquet(s"$fx/drop")
         }
-        val work = replayDir("drift_stream_run")
+        val work = fresh("drift_stream_run")
         withReplayConf(s) { r =>
           StreamingRollup.rollupStream(r, s"$fx/drop", s"$work/state",
             s"$work/ckpt", StructType(Seq(StructField("x", DoubleType))),

@@ -272,7 +272,7 @@ object VectorOps {
             concat(array(element_at(col("v"), 1) + lit(10.0)),
               slice(col("v"), lit(2), size(col("v")) - 1)).as("v"))
         val idx = graft.operators.IvfIndex.build(
-          base, "v", "vec_id", GateScratch.dir("drift_monitor_gate"),
+          base, "v", "vec_id", graft.pipeline.GateArtifacts.fresh("drift_monitor_gate"),
           numCells = 8, seed = 5L)
         graft.operators.IvfIndex.append(idx, drifted, "v")
         val report = graft.operators.IvfIndex.driftReport(idx).getOrElse(

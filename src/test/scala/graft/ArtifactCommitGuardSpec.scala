@@ -12,13 +12,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/main` is a second copy of that protocol — this spec names every
   * such line. Likewise a GBT artifact is one driver-written model.gbt:
   * MLlib model persistence, a metadata.json sidecar or a tar codec under
-  * `src/main` would be a second artifact format.
+  * `src/main` would be a second artifact format. And per-JVM scratch
+  * has one home, [[graft.pipeline.GateArtifacts]]: a temp directory, a
+  * shutdown hook or a /dev/shm probe elsewhere is a second scratch
+  * mechanism.
   */
 class ArtifactCommitGuardSpec extends AnyFunSuite {
 
   private val swap = """Rename\.OVERWRITE|ATOMIC_MOVE|\.old-""".r
   private val modelPersistence =
     """\.write\.overwrite\(\)\.save|Model\.load\(|metadata\.json|core\.Tar\b|\bTar\.""".r
+
+  private val scratch = """createTempDirectory|addShutdownHook|/dev/shm""".r
 
   private lazy val files: Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -45,6 +50,13 @@ class ArtifactCommitGuardSpec extends AnyFunSuite {
 
   test("no MLlib model persistence, metadata.json sidecar or tar codec") {
     val found = offending(modelPersistence, _ => false)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no temp dir, shutdown hook or /dev/shm probe outside GateArtifacts") {
+    val home = Paths.get("graft", "pipeline", "GateArtifacts.scala")
+    assert(files.exists(_.endsWith(home)))
+    val found = offending(scratch, _.endsWith(home))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -32,14 +32,15 @@ class GateContextSpec extends AnyFunSuite {
 
   test("every declared consumer set member is a registered gate name") {
     val names = graft.SparkEntry.queries.keySet
-    val sets = Map(
-      "ExtOps" -> graft.queries.ExtOps.derivedConsumers,
-      "RdrPipeline" -> graft.pipeline.RdrPipeline.derivedConsumers,
-      "SearchOps" -> graft.queries.SearchOps.derivedConsumers)
-    sets.foreach { case (owner, set) =>
-      val stale = set -- names
+    val tasks = graft.SparkEntry.setupTasks
+    assert(Set("setup_dedup_pairs", "setup_rdr_merged", "setup_zonemap_table")
+      .subsetOf(tasks.map(_.name).toSet))
+    assert(tasks.map(_.name).distinct == tasks.map(_.name))
+    tasks.foreach { task =>
+      assert(task.consumers.nonEmpty, task.name)
+      val stale = task.consumers -- names
       assert(stale.isEmpty,
-        s"$owner.derivedConsumers names unregistered gates: $stale — " +
+        s"${task.name} names unregistered gates: $stale — " +
           "a renamed/removed gate leaves the bench setup trigger stale")
     }
   }

@@ -144,9 +144,10 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     val rows = small ++ dense ++ sparse
     // count how many times the merged frame's rows are EVALUATED: the
     // single-pass contract means upstream executes once, not once per
-    // model. (Accumulators over-count on task retries; local mode has
-    // none, and the 2× slack keeps the assertion about O(1) vs
-    // O(models) passes, not exact evaluation counts.)
+    // model and not once per store pass — exactly rows.size here.
+    // (Accumulators over-count on task retries; local mode has none.
+    // The bound stays below a second full pass rather than pinning the
+    // exact count.)
     val evals = spark.sparkContext.longAccumulator("merged_evals")
     val counted = org.apache.spark.sql.functions.udf { (s: String) =>
       evals.add(1L); s
@@ -156,7 +157,7 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
 
     assert(written.keySet ==
       (0 until nModels).map(mi => f"model-$mi%02d").toSet ++ Set("dense", "sparse"))
-    assert(evals.value <= 2L * rows.size,
+    assert(evals.value < 2L * rows.size,
       s"merged frame evaluated ${evals.value} times for ${rows.size} rows — not one pass")
     // every model's store round-trips its own rows, nobody else's
     Seq(0, 17, 49).foreach { mi =>
@@ -187,6 +188,61 @@ class PartitionStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](Merge.writePerModel(
       sparse.toDF().withColumn(Schema.Model, lit(null).cast("string")), refused))
     assert(!new java.io.File(refused, "rewarded_decisions").exists())
+  }
+
+  test("writeModels: key shapes match a pure-Scala prefix model on random multi-model rows") {
+    import org.scalacheck.{Gen, Prop}
+    import spark.implicits._
+    // second offsets at three scales, so the chosen prefix length
+    // ranges from months down to whole seconds
+    val genOffset = Gen.oneOf(Gen.choose(0L, 59L), Gen.choose(0L, 6L * 3600),
+      Gen.choose(0L, 90L * 24 * 3600))
+    val genCase = for {
+      maxRows <- Gen.choose(2, 5)
+      nModels <- Gen.choose(1, 3)
+      offsets <- Gen.listOfN(nModels, Gen.choose(0, 25).flatMap(Gen.listOfN(_, genOffset)))
+      // one same-second overflow: more rows in one second than a file
+      // holds, which the write keeps in one oversized file
+      overflowModel <- Gen.choose(0, nModels - 1)
+      overflowSecond <- genOffset
+      overflowRows <- Gen.choose(maxRows + 1, maxRows + 3)
+    } yield (maxRows, offsets.zipWithIndex.map { case (offs, mi) =>
+      f"model-$mi" -> (offs ++ (if (mi == overflowModel) Seq.fill(overflowRows)(overflowSecond)
+        else Nil))
+    })
+    // the model: per model, the first prefix length in 6..15 whose
+    // largest group fits in maxRows (else 15), and one file per group
+    // at that length
+    def expectedShapes(maxRows: Int, ids: Seq[String], m: String): Seq[String] = {
+      val ts = ids.map(id => id -> PartitionFilename.timestampOf(id))
+      val len = (6 to 15).find(i => ts.groupBy(_._2.take(i)).values.map(_.size).max <= maxRows)
+        .getOrElse(15)
+      ts.groupBy(_._2.take(len)).values.toSeq.map { g =>
+        val gIds = g.map(_._1)
+        shapeOf(PartitionFilename.key(m, gIds.min, gIds.max, gIds.size.toLong))
+      }.sorted
+    }
+    var seq = 0L
+    val prop = Prop.forAllNoShrink(genCase) { case (maxRows, models) =>
+      val rows = models.flatMap { case (m, offs) =>
+        offs.map { off =>
+          seq += 1
+          RewardedDecisionRow(Ksuid.deterministic(base + off, seq), Some("{}"), Some("{}"),
+            Some(2.0), None, Some("{}"), Some(0.0), m)
+        }
+      }
+      val dir = java.nio.file.Files.createTempDirectory("pstore_prop").toString
+      val written = PartitionStore.writeModels(rows.toDF(), dir, maxRows)
+      Prop.all(models.map { case (m, _) =>
+        val ids = rows.filter(_.model == m).map(_.decision_id)
+        val want = if (ids.isEmpty) Nil else expectedShapes(maxRows, ids, m)
+        val got = written.getOrElse(m, Nil).map(shapeOf).sorted
+        Prop(got == want) :| s"$m maxRows=$maxRows got=$got want=$want"
+      }: _*)
+    }
+    val result = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(8).withWorkers(1), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("an upstream that changes between write()'s two passes fails loudly, store untouched") {
