@@ -3,7 +3,7 @@ package graft.core
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe artifact commit: the ONE place that knows how a
@@ -88,6 +88,31 @@ object Commit {
         f.delete(tmp, false)
         throw new java.io.IOException(s"commit: rename $tmp -> $dst failed")
       }
+    }
+  }
+
+  /** Create file `path`, which must not exist yet, with what `write`
+    * streams: a temp sibling is written in full, then renamed to the
+    * target with the FileSystem rename, which never overwrites a file,
+    * so readers see the whole file or none. For keys unique by
+    * construction (a timestamped archive object): it skips
+    * [[replaceFile]]'s overwriting rename, which costs several times the
+    * write on the local filesystem. Throws FileAlreadyExistsException,
+    * leaving the target untouched, when it exists. Neither failure nor a
+    * `write` that throws leaves a temp sibling.
+    */
+  def createFile(path: String)(write: java.io.OutputStream => Unit): Unit = {
+    val dst = new HPath(path)
+    val f = fs(path)
+    val tmp = staging(dst, UUID.randomUUID())
+    try {
+      val out = f.create(tmp, false)
+      try write(out) finally out.close()
+    } catch { case e: Throwable => f.delete(tmp, false); throw e }
+    if (!f.rename(tmp, dst)) {
+      f.delete(tmp, false)
+      if (f.exists(dst)) throw new FileAlreadyExistsException(s"commit: $dst exists")
+      throw new java.io.IOException(s"commit: rename $tmp -> $dst failed")
     }
   }
 

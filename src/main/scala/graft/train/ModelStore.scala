@@ -170,10 +170,11 @@ object ModelStore {
           gz.write(bytes)
           gz.close()
           val arcKey = s"models/archive/$modelName/${keyName(s"$modelName-$stamp", file)}"
-          // the archive object first, then the same bytes over latest:
-          // each lands whole through the commit, so the key consumers
-          // poll is never absent or partial
-          Commit.replaceFile(new HPath(modelsRoot, arcKey).toString)(_.write(buf.toByteArray))
+          // the archive object first (a fresh key: created, never
+          // replaced), then the same bytes over latest: each lands whole
+          // through the commit, so the key consumers poll is never
+          // absent or partial
+          Commit.createFile(new HPath(modelsRoot, arcKey).toString)(_.write(buf.toByteArray))
           Commit.replaceFile(latest)(_.write(buf.toByteArray))
           Some(arcKey)
       }

@@ -88,18 +88,23 @@ object Trainer {
     shiftrightunsigned(xxhash64(c, lit(seed)), 12).cast("double") /
       (1L << 52).toDouble
 
-  /** Partition count for the pre-fit encoded frame. Boosting pays
-    * per-ITERATION scheduling proportional to partition count (each
-    * tree level is a distributed aggregation), and the trainer input
-    * is bounded by the load cap (maxRows, 8M default) — so size
-    * partitions for the fit instead of inheriting the session's
-    * shuffle width. Floor 8 (tree-statistics aggregation wants real
-    * parallelism — measured 1.6 s at 8 parts vs 3.8 s at 2 on the
-    * 200k-row gate), +1 per 250k rows, cap 64 (the 8M-row production
-    * cap trains on ~33; past that per-iteration scheduling dominates).
+  /** Partition count for the pre-fit encoded frame, from its row count
+    * alone (so a model's partitioning, and its bits, do not depend on the
+    * machine). MLlib's boosting runs a two-stage job per tree level, and
+    * every stage pays one task per partition whatever the rows, so the
+    * floor scales with the rows: one partition per 12,500 rows up to 8.
+    * Floor 8 was measured on the 200k-row gate (1.6 s at 8 parts vs 3.8 s
+    * at 2: tree-statistics aggregation wants real parallelism), and every
+    * fit of more than 87.5k rows keeps it. Past 8: +1 per 250k rows, cap 64
+    * (the 8M-row production cap trains on 33; past that per-iteration
+    * scheduling dominates). Per-model fits under 12.5k rows (every
+    * pipebench fit) run on 1 partition: traced at trickle seed 42, the
+    * propensity fits ran 46 tasks instead of 232 and the decision fits
+    * 112 instead of 644, with the same jobs.
     */
-  private def fitPartitions(rows: Long): Int =
-    math.max(8, math.min(64, (rows / 250000L).toInt + 1))
+  private[train] def fitPartitions(rows: Long): Int =
+    math.max(math.min(8L, math.ceil(rows / 12500.0).toLong),
+      math.min(64L, rows / 250000L + 1)).toInt
 
   /** Phase 1. `df` = rewarded decisions (item/context/sample/count). */
   def trainPropensity(df: DataFrame, config: TrainConfig = TrainConfig()): PropensityModel = {
@@ -115,31 +120,31 @@ object Trainer {
       .withColumn("nums",
         map_concat(col("nums"), map(lit(TimestampFeature), col("_t"))))
       .persist()
+    try {
+      val featureNames = Encoding.selectFeatures(flat, config.maxFeatures)
+      // no prior: propensity is memorization (propensities.py design note)
+      val tables = Encoding.buildStringTables(flat, featureNames, modelSeed,
+        priorMean = 0.0, priorCount = 0,
+        pruneMinCount = config.pruneMinStringCount,
+        maxStringsPerFeature = config.maxStringsPerFeature)
 
-    val featureNames = Encoding.selectFeatures(flat, config.maxFeatures)
-    // no prior: propensity is memorization (propensities.py design note)
-    val tables = Encoding.buildStringTables(flat, featureNames, modelSeed,
-      priorMean = 0.0, priorCount = 0,
-      pruneMinCount = config.pruneMinStringCount,
-      maxStringsPerFeature = config.maxStringsPerFeature)
+      // label metadata pins numClasses = 2: without it MLlib runs its
+      // own discovery pass over the label column before boosting starts
+      val labelMeta = org.apache.spark.ml.attribute.NominalAttribute
+        .defaultAttr.withName("label").withNumValues(2).toMetadata()
+      val encoded = Encoding.withFeatureVector(flat, featureNames, tables, modelSeed)
+        .select(col(Schema.DecisionId), col("features"),
+          col(TargetCol).cast("double").as("label", labelMeta), col(WeightCol))
+        .repartition(fitPartitions(nRows))
 
-    // label metadata pins numClasses = 2: without it MLlib runs its
-    // own discovery pass over the label column before boosting starts
-    val labelMeta = org.apache.spark.ml.attribute.NominalAttribute
-      .defaultAttr.withName("label").withNumValues(2).toMetadata()
-    val encoded = Encoding.withFeatureVector(flat, featureNames, tables, modelSeed)
-      .select(col(Schema.DecisionId), col("features"),
-        col(TargetCol).cast("double").as("label", labelMeta), col(WeightCol))
-      .repartition(fitPartitions(nRows))
-
-    val gbt = new GBTClassifier()
-      .setMaxIter(config.propensityTrees)
-      .setMaxDepth(config.treeDepth)
-      .setWeightCol(WeightCol)
-      .setSeed(modelSeed)
-    val model = fitWithValidation(gbt.fit, gbt.setValidationIndicatorCol _, encoded, config)
-    flat.unpersist()
-    PropensityModel(model, featureNames, tables, modelSeed, meanItemCount)
+      val gbt = new GBTClassifier()
+        .setMaxIter(config.propensityTrees)
+        .setMaxDepth(config.treeDepth)
+        .setWeightCol(WeightCol)
+        .setSeed(modelSeed)
+      val model = fitWithValidation(gbt.fit, gbt.setValidationIndicatorCol _, encoded, config)
+      PropensityModel(model, featureNames, tables, modelSeed, meanItemCount)
+    } finally { flat.unpersist(); () }
   }
 
   /** Inverse-propensity weights: (1/max(p, clip)) / meanItemCount. */
@@ -218,41 +223,41 @@ object Trainer {
             col(Schema.Context)))
           .drop("nums", "strs"))
       .persist()
+    try {
+      val featureNames = pm.selectedFeatures
+      val priorMean = if (config.normalizeRewards) 0.0 else rewardMean
+      val tables = Encoding.buildStringTables(dropped, featureNames, modelSeed,
+        priorMean = priorMean, priorCount = config.rewardPriorCount,
+        pruneMinCount = config.pruneMinStringCount,
+        maxStringsPerFeature = config.maxStringsPerFeature)
 
-    val featureNames = pm.selectedFeatures
-    val priorMean = if (config.normalizeRewards) 0.0 else rewardMean
-    val tables = Encoding.buildStringTables(dropped, featureNames, modelSeed,
-      priorMean = priorMean, priorCount = config.rewardPriorCount,
-      pruneMinCount = config.pruneMinStringCount,
-      maxStringsPerFeature = config.maxStringsPerFeature)
+      // per-row population-id noise sprinkled over every feature
+      val encoded = Encoding.withFeatureVector(
+          dropped, featureNames, tables, modelSeed,
+          Some(hashUniform(col(Schema.DecisionId), modelSeed + 17)))
+        .select(col("features"), col(TargetCol).cast("double").as("label"), col(WeightCol))
+        .repartition(fitPartitions(nRows))
 
-    // per-row population-id noise sprinkled over every feature
-    val encoded = Encoding.withFeatureVector(
-        dropped, featureNames, tables, modelSeed,
-        Some(hashUniform(col(Schema.DecisionId), modelSeed + 17)))
-      .select(col("features"), col(TargetCol).cast("double").as("label"), col(WeightCol))
-      .repartition(fitPartitions(nRows))
-
-    val gbt = new GBTRegressor()
-      .setMaxIter(config.maxTrees)
-      .setMaxDepth(config.treeDepth)
-      .setWeightCol(WeightCol)
-      .setSeed(modelSeed)
-    val model = gbt.fit(encoded) // no early stop in phase 2 (reference)
-    // XGBoost4J probe: when the jars are on the classpath, also emit a
-    // genuine native booster (same encoded frame, mapped params) so
-    // reference consumers keep loading `.xgb` artifacts unchanged; on
-    // the zero-egress classpath this is a no-op returning None
-    val nativeBooster = Boosters.trainNativeBooster(
-      encoded, Boosters.decisionParams(config, modelSeed))
-    dropped.unpersist() // the pinned frame (weighted is no longer persisted)
-    // the stored (mean, std) are the Scorer's DE-normalization params:
-    // identity when the target was trained raw, else predictions in
-    // reward units would be scaled a second time
-    val (outMean, outStd) =
-      if (config.normalizeRewards) (rewardMean, rewardStd) else (0.0, 1.0)
-    DecisionModel(model, featureNames, tables, modelSeed, outMean, outStd,
-      nativeBooster)
+      val gbt = new GBTRegressor()
+        .setMaxIter(config.maxTrees)
+        .setMaxDepth(config.treeDepth)
+        .setWeightCol(WeightCol)
+        .setSeed(modelSeed)
+      val model = gbt.fit(encoded) // no early stop in phase 2 (reference)
+      // XGBoost4J probe: when the jars are on the classpath, also emit a
+      // genuine native booster (same encoded frame, mapped params) so
+      // reference consumers keep loading `.xgb` artifacts unchanged; on
+      // the zero-egress classpath this is a no-op returning None
+      val nativeBooster = Boosters.trainNativeBooster(
+        encoded, Boosters.decisionParams(config, modelSeed))
+      // the stored (mean, std) are the Scorer's DE-normalization params:
+      // identity when the target was trained raw, else predictions in
+      // reward units would be scaled a second time
+      val (outMean, outStd) =
+        if (config.normalizeRewards) (rewardMean, rewardStd) else (0.0, 1.0)
+      DecisionModel(model, featureNames, tables, modelSeed, outMean, outStd,
+        nativeBooster)
+    } finally { dropped.unpersist(); () } // the pinned frame (weighted is not persisted)
   }
 
   /** 70/30 split with early-stop validation (reference model_utils

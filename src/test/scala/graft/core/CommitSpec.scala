@@ -37,6 +37,34 @@ class CommitSpec extends AnyFunSuite {
     assert(Commit.readBytes(dir.resolve("absent").toString).isEmpty)
   }
 
+  test("createFile: refuses an existing target and leaves it byte-identical") {
+    val dir = Files.createTempDirectory("commit_create")
+    val target = dir.resolve("m-2026-01-01-00-00-00-u1.gbt.gz").toString
+    Commit.createFile(target)(_.write("v1".getBytes("UTF-8")))
+    assert(Commit.readBytes(target).map(new String(_, "UTF-8")) == Some("v1"))
+    val before = Files.readAllBytes(Paths.get(target))
+
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      Commit.createFile(target)(_.write("v2".getBytes("UTF-8"))))
+    assert(Files.readAllBytes(Paths.get(target)).sameElements(before))
+    assert(!names(dir).exists(_.contains(".tmp-")), names(dir))
+  }
+
+  test("createFile: a writer that throws leaves no target and no temp sibling") {
+    val dir = Files.createTempDirectory("commit_create_fail")
+    val target = dir.resolve("archive.gz").toString
+    val boom = intercept[RuntimeException](Commit.createFile(target) { out =>
+      out.write("partial".getBytes("UTF-8"))
+      throw new RuntimeException("writer failed")
+    })
+    assert(boom.getMessage == "writer failed")
+    assert(names(dir).isEmpty, names(dir))
+
+    Commit.createFile(target)(_.write("whole".getBytes("UTF-8")))
+    assert(Commit.readBytes(target).map(new String(_, "UTF-8")) == Some("whole"))
+    assert(!names(dir).exists(_.contains(".tmp-")), names(dir))
+  }
+
   test("replaceDir: a failed build keeps the old dir; a good one replaces it whole") {
     val parent = Files.createTempDirectory("commit_dir")
     val dir = parent.resolve("artifact").toString

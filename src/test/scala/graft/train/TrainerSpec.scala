@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.core.Ksuid
 import graft.encoding.Encoding
+import graft.obs.Spans
 import graft.schema.RewardedDecisionRow
 import graft.train.Trainer.TrainConfig
 
@@ -232,6 +233,50 @@ class TrainerSpec extends AnyFunSuite with SparkTestBase {
     assert(models.map(_.stringTables).distinct.size == 1)
     // avg() itself sums in partition order: ulp-level drift only
     assert(models.map(_.rewardMean).max - models.map(_.rewardMean).min < 1e-12)
+  }
+
+  test("fitPartitions: one partition per 12.5k rows up to 8, then +1 per 250k rows up to 64") {
+    assert(Trainer.fitPartitions(0L) == 1)
+    assert(Trainer.fitPartitions(10000L) == 1)
+    assert(Trainer.fitPartitions(12500L) == 1)
+    assert(Trainer.fitPartitions(12501L) == 2)
+    assert(Trainer.fitPartitions(63000L) == 6)
+    assert(Trainer.fitPartitions(87500L) == 7)
+    // above 87.5k rows the old floor of 8 holds, and with it the sizes
+    // that set it
+    assert(Trainer.fitPartitions(87501L) == 8)
+    assert(Trainer.fitPartitions(100000L) == 8)
+    assert(Trainer.fitPartitions(200000L) == 8)
+    assert(Trainer.fitPartitions(8000000L) == 33)
+    assert(Trainer.fitPartitions(15750000L) == 64)
+    assert(Trainer.fitPartitions(Long.MaxValue) == 64)
+  }
+
+  test("a fit that throws after its persist leaves nothing cached") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val df = syntheticDecisions(100).toDF()
+    // maxDepth 31 is past MLlib's limit of 30: the estimator's setter
+    // throws after the trainer has pinned its flattened frame
+    val tooDeep = cfg.copy(treeDepth = 31)
+    intercept[IllegalArgumentException](Trainer.trainPropensity(df, tooDeep))
+    assert(spark.sharedState.cacheManager.isEmpty, "trainPropensity left its frame cached")
+    val pm = Trainer.trainPropensity(df, cfg)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    intercept[IllegalArgumentException](Trainer.trainDecision(df, pm, tooDeep))
+    assert(spark.sharedState.cacheManager.isEmpty, "trainDecision left its frame cached")
+  }
+
+  test("a small decision fit stays within its task budget") {
+    import spark.implicits._
+    val df = syntheticDecisions(200).toDF()
+    val pm = Trainer.trainPropensity(df, cfg)
+    Spans.span(spark, "trainer_spec_budget")(Trainer.trainDecision(df, pm, cfg))
+    val fit = Spans.report(spark, "trainer_spec_budget")("trainer_spec_budget")
+    // 200 rows fit on one partition: 57 tasks in 26 jobs. The old floor
+    // of 8 partitions ran the same 26 jobs in 282 tasks (each tree
+    // level's stages pay one task per partition, whatever the rows)
+    assert(fit.tasks < 100, s"${fit.tasks} tasks in ${fit.jobs} jobs")
   }
 
   test("publish writes latest + timestamped archive; unpack round-trips the model") {
