@@ -7,8 +7,14 @@ import org.apache.spark.sql.SparkSession
 import graft.obs.Spans
 
 object Bench {
-  /** A gate whose first pass takes this long or more repeats. */
-  private val RepeatSec = 1.0
+  /** A gate whose first pass runs this many Spark jobs or more
+    * repeats. The job count is load-invariant, so every run repeats
+    * the same gates; a wall-time bar flipped 14 of 209 gates between
+    * two back-to-back sf0.001 suites. 10 keeps the suite's cost near
+    * that of the 1 s bar it replaced: at sf0.001 on a 4-CPU box it
+    * repeats 64 gates where 1 s repeated 55.
+    */
+  private val RepeatJobs = 10
   /** Passes of a repeated gate, whose median is reported. */
   private val MaxRepeats = 3
 
@@ -69,15 +75,13 @@ object Bench {
     val setup = SparkEntry.setupTasks.filter(_.consumers.exists(selectedNames))
       .map(t => t.name -> wallS(t.name)(t.dir(spark, sfDir)))
     // shared-box load can inflate a single pass by >10× (a 5.9 s query
-    // once recorded 9.9 s inside a busy suite), so expensive queries
-    // report a MEDIAN of several passes instead of one sample. Cheap
-    // queries stay single-shot: their absolute noise is bounded by the
-    // threshold, so it cannot manufacture a phantom regression, and
-    // repeating ~100 sub-second queries would double the suite for
-    // nothing; their span counters (jobs, stages, tasks) carry the
-    // comparison that a noisy wall time cannot. The per-query repeat
-    // count is recorded in the JSON so round-over-round comparisons
-    // know what each number is.
+    // once recorded 9.9 s inside a busy suite), so job-heavy queries
+    // report a MEDIAN of several passes instead of one sample. Queries
+    // under RepeatJobs stay single-shot: repeating ~150 light queries
+    // would double the suite for nothing, and their span counters
+    // (jobs, stages, tasks) carry the comparison that a noisy wall time
+    // cannot. The per-query repeat count is recorded in the JSON so
+    // round-over-round comparisons know what each number is.
     // A pass is one span (Profile.gatePass, the pass Profile runs); a
     // failure must be LOUD and visible in the JSON (-1 marker):
     // swallowing it would record a crashing query as a ~0s success.
@@ -93,7 +97,7 @@ object Bench {
       // just burns the suite); repeat-pass failures are dropped from
       // the median rather than poisoning it
       val passes =
-        if (first._1 < 0 || first._1 < RepeatSec) Seq(first)
+        if (first._1 < 0 || first._2(name).jobs < RepeatJobs) Seq(first)
         else first +: (2 to MaxRepeats).map(_ => once(name, fn)).filter(_._1 >= 0)
       (name, median(passes.map(_._1).sorted), passes)
     }

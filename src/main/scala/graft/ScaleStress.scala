@@ -514,7 +514,7 @@ object ScaleStress {
     ZoneMap.writeSidecar(spark, s"$workB/t",
       ZoneMap.build(spark, s"$workB/t", Seq("event_id")))
     val tB0 = System.nanoTime()
-    val nBlooms = ZoneMap.buildBloomSidecar(spark, s"$workB/t",
+    val nBlooms = ZoneMap.refreshBlooms(spark, s"$workB/t",
       Seq("event_id"), numBits = 1L << 21)
     val bloomBuildSec = (System.nanoTime() - tB0) / 1e9
     val rowsB = evB.count()
@@ -558,8 +558,8 @@ object ScaleStress {
       // scans — the bounds must hold at 1M rows exactly as the specs
       // pin them at fixture scale
       val tS0 = System.nanoTime()
-      graft.operators.ZoneMap.buildHllSidecar(spark, s"$workB/t", Seq("user_id"))
-      graft.operators.ZoneMap.buildKllSidecar(spark, s"$workB/t", Seq("value"))
+      graft.operators.ZoneMap.refreshHlls(spark, s"$workB/t", Seq("user_id"))
+      graft.operators.ZoneMap.refreshKlls(spark, s"$workB/t", Seq("value"))
       val sketchBuildSec = (System.nanoTime() - tS0) / 1e9
       val ndv = graft.operators.ZoneMap.ndvFromManifest(spark, s"$workB/t", "user_id")
         .getOrElse(sys.error("fresh x10 table must answer the NDV census"))

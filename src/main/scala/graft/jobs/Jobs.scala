@@ -180,12 +180,12 @@ object AnalyzeJob {
       val tablePath = new org.apache.hadoop.fs.Path(path)
       val tableFs = tablePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (tableFs.getFileStatus(tablePath).isDirectory)
-        graft.operators.Cbo.writeStats(spark, tStats, path)
+        graft.operators.Cbo.writeStats(tStats, path)
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[analyze] in-table stats sidecar skipped for $path: $e")
     }
-    if (outDir != path) graft.operators.Cbo.writeStats(spark, tStats, outDir)
+    if (outDir != path) graft.operators.Cbo.writeStats(tStats, outDir)
     println(s"table_stats: rows=${tStats.rows} bytes=${tStats.bytes}")
   }
 }
@@ -251,7 +251,7 @@ object ZoneMapJob {
   * — attach (or incrementally refresh) per-file BLOOM FILTERS in the
   * table's zone-map sidecar for the named DATA columns, enabling
   * transparent point-lookup file skipping on high-cardinality
-  * unclustered columns (see ZoneMap.buildBloomSidecar). Incremental
+  * unclustered columns (see ZoneMap.refreshBlooms). Incremental
   * when the sidecar already blooms the columns: only files lacking
   * fresh coverage re-scan.
   */
@@ -295,7 +295,7 @@ object CompactJob {
 /** `runMain graft.jobs.HllMapJob <parquetDir> <col[,col...]> [lgK]` —
   * attach (or incrementally refresh) per-file HLL sketches in the
   * zone-map sidecar and print the metadata NDV census (see
-  * ZoneMap.buildHllSidecar / ndvFromManifest).
+  * ZoneMap.refreshHlls / ndvFromManifest).
   */
 object HllMapJob {
   def main(args: Array[String]): Unit = {
@@ -322,7 +322,7 @@ object HllMapJob {
 /** `runMain graft.jobs.KllMapJob <parquetDir> <col[,col...]> [k]` —
   * attach (or incrementally refresh) per-file KLL quantile sketches in
   * the zone-map sidecar and print the metadata quantile census
-  * (median / p90 / p99, see ZoneMap.buildKllSidecar /
+  * (median / p90 / p99, see ZoneMap.refreshKlls /
   * quantilesFromManifest).
   */
 object KllMapJob {

@@ -78,7 +78,7 @@ object Cbo {
     */
   val StatsFile = "_table_stats.json"
 
-  def writeStats(spark: SparkSession, stats: TableStats, dir: String): Unit = {
+  def writeStats(stats: TableStats, dir: String): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.createObjectNode()
     root.put("rows", stats.rows)
@@ -89,11 +89,6 @@ object Cbo {
     // reads this file mid-planning and must never see a torn one
     graft.core.Commit.replaceFile(new org.apache.hadoop.fs.Path(dir, StatsFile).toString)(
       _.write(m.writeValueAsBytes(root)))
-    // best-effort cleanup of the legacy UNPREFIXED sidecar name: left
-    // in a table directory it gets listed as table data and fails
-    // every read of the table (the reason StatsFile is now _-prefixed)
-    val legacy = new org.apache.hadoop.fs.Path(dir, "table_stats.json")
-    legacy.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(legacy, false)
   }
 
   def readStats(spark: SparkSession, dir: String): Option[TableStats] =

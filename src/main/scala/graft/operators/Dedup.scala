@@ -68,8 +68,7 @@ object Dedup {
     // array<int> measured WORSE here (same box, back-to-back isolated
     // bench: setup 11.6→12.4 s, capped gate 7.4→8.6 s): the 64 extra
     // cast expressions per row cost more than the halved sig bytes
-    // save at fixture scale, where the verify joins are already
-    // estimate-pruned. Left at long.
+    // save at fixture scale. Left at long.
     val sig = array(perms(seed).map { case (a, b) =>
       array_min(transform(col("_h31"), h => pmod(h * a + b, lit(MersennePrime))))
     }: _*)
@@ -215,72 +214,27 @@ object Dedup {
       .agg(count(lit(1)).as("fanin"))
   }
 
-  /** Exact Jaccard verification of candidate pairs against word sets.
+  /** Exact Jaccard verification of candidate pairs against word sets —
+    * shared by the symmetric ([[exactVerify]]) and incremental
+    * ([[deltaPairsSigned]]) paths. Each side's word set joins on its
+    * id key; `jac = |a ∩ b| / |a ∪ b|` keeps pairs at or above
+    * `threshold`. Exact by construction: every candidate is verified
+    * by set intersection, with no signature pre-filter.
     *
     * Both lookups are plain equi-joins on id: Spark hash-partitions
-    * candidates and the (id → wset, sig) relation on the same key, so
+    * the candidates and the (id → wset) relation on the same key, so
     * the verify scales with the corpus instead of requiring the whole
     * corpus's word sets to fit in one executor's memory (a broadcast
-    * here is a scale-killer — the "small" side IS the corpus).
+    * here is a scale-killer — the "small" side IS the corpus). Each
+    * join carries only the id keys, the carried columns and one word
+    * set per side. Each signed relation is read once per side, so
+    * callers keep it persisted or materialized (the production shape).
     */
-  /** est-gate + exact Jaccard over a joined frame carrying
-    * set_a/set_b/sig_a/sig_b — shared by the symmetric and incremental
-    * verify paths. The signature estimate gates the exact verify:
-    * matching positions / k estimates jaccard (sd ≈ √(j(1−j)/64) ≈
-    * 0.037 at j=0.9), so est ≥ threshold − 0.25 is a > 6σ margin — it
-    * cannot drop a true pair, but discards the mid-similarity
-    * candidate bulk before the (more expensive) set intersection.
-    */
-  /** TWO-STAGE candidate verification, each join carrying only what
-    * its stage needs. The old single wide join pulled (wset_a, wset_b,
-    * sig_a, sig_b) — up to ~10 KB per candidate row — through both
-    * shuffles, which is what pushed the x10 stress replay to an
-    * 80 GiB heap (the candidate relation grows with clique
-    * replication, so row WIDTH is the memory lever). Stage 1 joins
-    * signatures only (fixed 64 longs/side) and applies the estimate
-    * pre-filter; stage 2 joins the (much smaller) survivor set against
-    * the word sets for the exact Jaccard. Same semantics, ~an order of
-    * magnitude less buffered bytes at peak; the price is reading each
-    * signed relation twice — callers keep them persisted/materialized
-    * (the production shape).
-    */
-  private def verifyStaged(cands: DataFrame,
+  private def verifyExact(cands: DataFrame,
       left: DataFrame, leftIdIn: String, leftKey: String,
       right: DataFrame, rightIdIn: String, rightKey: String,
-      threshold: Double, carryCols: Seq[String] = Nil,
-      estimateGate: Boolean = true): DataFrame = {
-    // matching-position count via zip_with+filter+size. Measured
-    // alternative for the record: unrolling into 64 getItem equality
-    // terms (to stay inside whole-stage codegen) ran ~6× SLOWER
-    // (setup 12→78 s, capped gate 7→27 s, clean calibration) — the
-    // 128-leaf expression tree falls out of codegen entirely and the
-    // whole join stage drops to interpreted mode. The higher-order
-    // form evaluates as one compact loop per row.
-    val est = size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b)).cast("double") / NumHashes
-    // estimateGate=false skips the signature stage entirely and
-    // verifies every candidate by set intersection. Measured (sf0.1
-    // capped candidates, 2.1M rows): direct verify 0.9 s vs 3.0 s
-    // est-gated, identical output — the per-candidate cost of the
-    // 64-slot zip_with PLUS two 512-byte sig joins exceeds one
-    // intersection of ~23-element word-hash sets. The estimate stays
-    // the DEFAULT because its value is width/volume control where word
-    // sets are large (long documents) or candidate bulk is mostly
-    // sub-threshold: the sig row is a fixed 512 bytes while wset is
-    // document-sized, and est prunes before the wset join. Callers
-    // whose candidate sets are high-precision and whose word sets are
-    // short (the capped clique path) switch it off on measurement.
-    val survivors =
-      if (!estimateGate) cands.select(
-        col(leftKey) +: col(rightKey) +: carryCols.map(col): _*)
-      else cands
-        .join(left.select(col(leftIdIn).as(leftKey), col("sig").as("sig_a")),
-          Seq(leftKey))
-        .join(right.select(col(rightIdIn).as(rightKey), col("sig").as("sig_b")),
-          Seq(rightKey))
-        .filter(est >= threshold - 0.25)
-        .select(col(leftKey) +: col(rightKey) +: carryCols.map(col): _*)
-    survivors
+      threshold: Double, carryCols: Seq[String] = Nil): DataFrame =
+    cands.select(col(leftKey) +: col(rightKey) +: carryCols.map(col): _*)
       .join(left.select(col(leftIdIn).as(leftKey), col("wset").as("set_a")),
         Seq(leftKey))
       .join(right.select(col(rightIdIn).as(rightKey), col("wset").as("set_b")),
@@ -290,13 +244,11 @@ object Dedup {
         (size(col("set_a")) + size(col("set_b")) - col("n_common")))
       .filter(col("jac") >= threshold)
       .select(col(leftKey) +: col(rightKey) +: col("jac") +: carryCols.map(col): _*)
-  }
 
   def exactVerify(signed: DataFrame, cands: DataFrame, idCol: String,
-      threshold: Double, carryCols: Seq[String] = Nil,
-      estimateGate: Boolean = true): DataFrame =
-    verifyStaged(cands, signed, idCol, "id_a", signed, idCol, "id_b",
-      threshold, carryCols, estimateGate)
+      threshold: Double, carryCols: Seq[String] = Nil): DataFrame =
+    verifyExact(cands, signed, idCol, "id_a", signed, idCol, "id_b",
+      threshold, carryCols)
 
   /** Exact Jaccard verification of candidates against word sets.
     * `groupCols` scope the dedup to same-group pairs (see
@@ -316,9 +268,9 @@ object Dedup {
     * of re-shingling the corpus.
     */
   def verifiedPairsSigned(signed: DataFrame, idCol: String, threshold: Double,
-      groupCols: Seq[String] = Nil, estimateGate: Boolean = true): DataFrame = {
+      groupCols: Seq[String] = Nil): DataFrame = {
     val out = exactVerify(signed, candidatePairs(signed, idCol, groupCols),
-      idCol, threshold, carryCols = groupCols, estimateGate = estimateGate)
+      idCol, threshold, carryCols = groupCols)
     // materialize eagerly so any upstream signature cache can be
     // released; the (bounded) pair set is what stays cached — the
     // caller owns it (Caching.handOff contract)
@@ -570,18 +522,15 @@ object Dedup {
     * (Caching.handOff contract) — `.unpersist()` when done.
     */
   def deltaPairsSigned(sd: DataFrame, sc: DataFrame, idCol: String,
-      threshold: Double, estimateGate: Boolean = true): DataFrame = {
-    {
-      val a = sd.select(col(idCol).as("id_delta"), explode(bandKeys).as("bk"))
-        .select(col("id_delta"), col("bk.band"), col("bk.bucket"))
-      val b = sc.select(col(idCol).as("id_corpus"), explode(bandKeys).as("bk"))
-        .select(col("id_corpus"), col("bk.band"), col("bk.bucket"))
-      val cands = a.join(b, Seq("band", "bucket"))
-        .select("id_delta", "id_corpus").distinct()
-      val out = verifyStaged(cands, sd, idCol, "id_delta",
-        sc, idCol, "id_corpus", threshold, estimateGate = estimateGate)
-      Caching.handOff(out)
-    }
+      threshold: Double): DataFrame = {
+    val a = sd.select(col(idCol).as("id_delta"), explode(bandKeys).as("bk"))
+      .select(col("id_delta"), col("bk.band"), col("bk.bucket"))
+    val b = sc.select(col(idCol).as("id_corpus"), explode(bandKeys).as("bk"))
+      .select(col("id_corpus"), col("bk.band"), col("bk.bucket"))
+    val cands = a.join(b, Seq("band", "bucket"))
+      .select("id_delta", "id_corpus").distinct()
+    Caching.handOff(verifyExact(cands, sd, idCol, "id_delta",
+      sc, idCol, "id_corpus", threshold))
   }
 
   /** The removal step over a PRE-COMPUTED cluster assignment
@@ -674,12 +623,6 @@ object Dedup {
 
   // ---- SimHash -----------------------------------------------------------
 
-  /** 64-bit SimHash over the word multiset: bit i of the fingerprint
-    * is the sign of Σ_words (±1 by bit i of xxh64(word)). Hamming-near
-    * fingerprints ⇒ similar documents. Bucketing on 16-bit chunks
-    * gives candidates for hamming ≤ 3 verification (any pair within
-    * distance 3 shares at least one of 4 intact chunks).
-    */
   /** Default word hash: XXH3-64 (fast, high quality). Named enum
     * members, not closures — see [[graft.core.WordHash]].
     */
@@ -690,6 +633,13 @@ object Dedup {
     */
   val md5WordHash: graft.core.WordHash = graft.core.WordHash.Md5
 
+  /** 64-bit SimHash over the word multiset: bit i of the fingerprint
+    * is the sign of Σ_words (±1 by bit i of `wordHash(word)`, XXH3-64
+    * by default). Hamming-near fingerprints ⇒ similar documents.
+    * Bucketing on 16-bit chunks gives candidates for hamming ≤ 3
+    * verification (any pair within distance 3 shares at least one of
+    * 4 intact chunks).
+    */
   def simHash(words: Seq[String], wordHash: graft.core.WordHash = xxh3WordHash): Long = {
     val v = new Array[Int](64)
     words.foreach { w =>

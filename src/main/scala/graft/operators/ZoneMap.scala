@@ -87,7 +87,7 @@ object ZoneMap {
       boundsLossy: Boolean = false,
       // base64 of a Spark-sketch bloom filter over xxhash64(col) —
       // present only on BLOOM pseudo-column entries ([[bloomKey]]),
-      // built by [[buildBloomSidecar]] (a data pass, unlike the
+      // built by [[refreshBlooms]] (a data pass, unlike the
       // footer-only range harvest). Lets equality/IN predicates prune
       // files on HIGH-CARDINALITY unclustered columns where min/max
       // zones are useless (a point lookup on an id column: every
@@ -96,14 +96,14 @@ object ZoneMap {
       bloom: Option[String] = None,
       // base64 of a DataSketches HLL sketch of the column's values —
       // present only on HLL pseudo-column entries ([[hllKey]]), built
-      // by [[buildHllSidecar]]. Per-file sketches MERGE losslessly, so
+      // by [[refreshHlls]]. Per-file sketches MERGE losslessly, so
       // the table's NDV is answerable from metadata alone
       // ([[ndvFromManifest]]) and maintains incrementally: an ingest
       // batch sketches only its new files, where ANALYZE's
       // count(distinct) rescans the world.
       hll: Option[String] = None,
       // base64 of a DataSketches KLL quantile sketch — KLL pseudo-
-      // column entries ([[kllKey]]), built by [[buildKllSidecar]].
+      // column entries ([[kllKey]]), built by [[refreshKlls]].
       // Mergeable like the HLL shards: the table's quantile census
       // (median, percentiles, equi-depth boundaries for range
       // partitioning) answers from metadata ([[quantilesFromManifest]])
@@ -488,8 +488,7 @@ object ZoneMap {
     * and referenced by exact name from the index, written BEFORE the
     * index swaps in: a concurrent reader sees either the old snapshot
     * or the new one, never a mix (stale shards are garbage-collected
-    * after the index write). A v1 sidecar (a bare JSON array) still
-    * reads — and the next write upgrades it.
+    * after the index write).
     */
   val SidecarFile = "_zone_map.json"
 
@@ -653,11 +652,25 @@ object ZoneMap {
     (todo.size, (known -- liveMtime.keySet).size)
   }
 
-  /** Attach per-file BLOOM FILTERS for `cols` to the table's sidecar —
-    * the index a point lookup on a high-cardinality UNCLUSTERED column
-    * needs (min/max zones only prune clustered data; an id-equality
-    * scan over an arrival-ordered table keeps every file on ranges but
-    * exactly the holder(s) + false positives on blooms).
+  /** Attach or incrementally re-attach per-file BLOOM FILTERS for
+    * `cols` in the table's sidecar — the index a point lookup on a
+    * high-cardinality UNCLUSTERED column needs (min/max zones only
+    * prune clustered data; an id-equality scan over an arrival-ordered
+    * table keeps every file on ranges but exactly the holder(s) +
+    * false positives on blooms).
+    *
+    * Only files lacking a fresh (mtime-matching) bloom for every
+    * tracked column are scanned — O(changed files) data IO after
+    * ingest batches or [[Compact.compact]] rewrites, the same
+    * maintenance-loop shape as [[refreshSidecar]]. On a table with no
+    * blooms yet every live file is a todo, so explicit `cols` are the
+    * first build; they throw when the table has no parquet data files.
+    * Columns default to the ones the sidecar already blooms; pass them
+    * explicitly after a FULL rewrite too (every file replaced), where
+    * no bloom entry survives to carry the column set
+    * ([[Compact.compact]] snapshots the set before refreshing for
+    * exactly this reason). Tracked columns must be DATA columns (the
+    * explicit-file read carries no partition values).
     *
     * Unlike the footer harvest this is a DATA pass: one distributed
     * aggregation reading only `cols` (column-pruned scan), grouped by
@@ -680,87 +693,36 @@ object ZoneMap {
     * blooms written. Default sizing: 2^18 bits with numBits/16
     * estimated items ⇒ k = 11 hashes, fp ≈ 5e-6 at 10k rows/file.
     */
-  def buildBloomSidecar(spark: SparkSession, tableDir: String,
-      cols: Seq[String], numBits: Long = 1L << 18): Int = {
-    require(cols.nonEmpty, "bloom sidecar needs at least one column")
-    require(cols.forall(!isBloomKey(_)), "pass REAL column names")
-    // list BEFORE reading: a file rewritten between the listing and the
-    // scan records the OLD mtime, so the live-mtime freshness check at
-    // prune time rejects its bloom — stale bits can never prune
-    val statuses = dataFileStatuses(spark, tableDir)
-    require(statuses.nonEmpty, s"no parquet data files under $tableDir")
-    val fresh = bloomEntries(spark,
-      spark.read.parquet(tableDir), statuses, cols, numBits)
-    mergeAuxWrite(spark, tableDir, fresh)
-  }
-
-  /** Incrementally RE-ATTACH blooms after table maintenance (ingest
-    * batches, [[Compact.compact]] rewrites): only files lacking a
-    * fresh (mtime-matching) bloom for every tracked column are
-    * re-scanned — O(changed files) data IO, the same maintenance-loop
-    * shape as [[refreshSidecar]]. Columns default to the ones the
-    * sidecar already blooms; pass them explicitly for a first build of
-    * a file subset — and after a FULL rewrite (every file replaced), in
-    * which case no bloom entry survives to carry the column set
-    * ([[Compact.compact]] snapshots the set before refreshing for
-    * exactly this reason). Tracked columns must be DATA columns (the
-    * explicit-file read carries no partition values). Returns blooms
-    * written.
-    */
   def refreshBlooms(spark: SparkSession, tableDir: String,
       cols: Seq[String] = Nil, numBits: Long = 1L << 18): Int =
     refreshAux(spark, tableDir, cols, BloomPrefix,
       (df, statuses, cs) => bloomEntries(spark, df, statuses, cs, numBits))
 
-  /** Attach per-file HLL SKETCHES for `cols` (NDV pseudo-shards,
-    * [[hllKey]]): one grouped data pass like the bloom build, same
-    * list-before-read mtime discipline, same incremental refresh shape
-    * ([[refreshHlls]]). Per-file sketches merge losslessly, so
-    * [[ndvFromManifest]] answers the table's distinct-count census
-    * from metadata — the ANALYZE-without-a-rescan maintenance loop
-    * ([[Cbo.collectStats]] pays a full `count(distinct)` scan every
-    * time; this pays one O(changed files) sketch pass per batch).
-    * `lgK = 12` ⇒ ~1.6 % relative standard error, ~2 KiB per
-    * (file, column). Returns sketches written.
-    */
-  def buildHllSidecar(spark: SparkSession, tableDir: String,
-      cols: Seq[String], lgK: Int = 12): Int = {
-    require(cols.nonEmpty, "HLL sidecar needs at least one column")
-    require(cols.forall(!isAuxKey(_)), "pass REAL column names")
-    val statuses = dataFileStatuses(spark, tableDir)
-    require(statuses.nonEmpty, s"no parquet data files under $tableDir")
-    val fresh = hllEntries(spark, spark.read.parquet(tableDir), statuses, cols, lgK)
-    mergeAuxWrite(spark, tableDir, fresh)
-  }
-
-  /** Incremental [[buildHllSidecar]] — the [[refreshBlooms]] contract
-    * (fresh coverage per (file, col), explicit cols after a full
-    * rewrite, DATA columns only).
+  /** Attach or incrementally re-attach per-file HLL SKETCHES for `cols`
+    * (NDV pseudo-shards, [[hllKey]]) — the [[refreshBlooms]] contract:
+    * one grouped data pass over the files lacking fresh coverage, same
+    * list-before-read mtime discipline, explicit cols for a first build
+    * or after a full rewrite, DATA columns only. Per-file sketches
+    * merge losslessly, so [[ndvFromManifest]] answers the table's
+    * distinct-count census from metadata — the ANALYZE-without-a-rescan
+    * maintenance loop ([[Cbo.collectStats]] pays a full
+    * `count(distinct)` scan every time; this pays one O(changed files)
+    * sketch pass per batch). `lgK = 12` ⇒ ~1.6 % relative standard
+    * error, ~2 KiB per (file, column). Returns sketches written.
     */
   def refreshHlls(spark: SparkSession, tableDir: String,
       cols: Seq[String] = Nil, lgK: Int = 12): Int =
     refreshAux(spark, tableDir, cols, HllPrefix,
       (df, statuses, cs) => hllEntries(spark, df, statuses, cs, lgK))
 
-  /** Attach per-file KLL QUANTILE sketches for numeric `cols`
-    * ([[kllKey]] pseudo-shards, ~3 KiB per file-column at k = 200 ⇒
-    * ~1.65 % normalized rank error): the metadata path to medians,
-    * percentiles and equi-depth boundaries ([[quantilesFromManifest]])
-    * — [[Analyze.equiDepth]] pays a full scan every run; this pays
-    * one O(changed files) pass per batch ([[refreshKlls]]). Same
-    * list-before-read mtime discipline as the bloom/HLL builds.
+  /** Attach or incrementally re-attach per-file KLL QUANTILE sketches
+    * for numeric `cols` ([[kllKey]] pseudo-shards, ~3 KiB per
+    * file-column at k = 200 ⇒ ~1.65 % normalized rank error) — the
+    * [[refreshBlooms]] contract. The metadata path to medians,
+    * percentiles and equi-depth boundaries ([[quantilesFromManifest]]):
+    * [[Analyze.equiDepth]] pays a full scan every run; this pays one
+    * O(changed files) pass per batch.
     */
-  def buildKllSidecar(spark: SparkSession, tableDir: String,
-      cols: Seq[String], k: Int = 200): Int = {
-    require(cols.nonEmpty, "KLL sidecar needs at least one column")
-    require(cols.forall(!isAuxKey(_)), "pass REAL column names")
-    val statuses = dataFileStatuses(spark, tableDir)
-    require(statuses.nonEmpty, s"no parquet data files under $tableDir")
-    val fresh = kllEntries(spark, spark.read.parquet(tableDir), statuses, cols, k)
-    mergeAuxWrite(spark, tableDir, fresh)
-  }
-
-  /** Incremental [[buildKllSidecar]] (the [[refreshBlooms]] contract). */
   def refreshKlls(spark: SparkSession, tableDir: String,
       cols: Seq[String] = Nil, k: Int = 200): Int =
     refreshAux(spark, tableDir, cols, KllPrefix,
@@ -854,8 +816,16 @@ object ZoneMap {
         case e if e.col.startsWith(prefix) => e.col.stripPrefix(prefix)
       }.distinct
     if (tracked.isEmpty) return 0
+    // list BEFORE reading: a file rewritten between the listing and the
+    // scan records the OLD mtime, so the live-mtime freshness check at
+    // prune time rejects its sketch — stale bits can never prune
     val statuses = dataFileStatuses(spark, tableDir)
-    if (statuses.isEmpty) return 0
+    if (statuses.isEmpty) {
+      // named columns over an empty listing is a misdirected build, not
+      // a no-op maintenance pass
+      require(cols.isEmpty, s"no parquet data files under $tableDir")
+      return 0
+    }
     val liveM = statuses.toMap
     val covered: Map[String, Set[String]] = prior
       .filter(e => e.col.startsWith(prefix) && e.mtime != 0L &&
@@ -874,7 +844,7 @@ object ZoneMap {
 
   /** One grouped-by-source-file bloom aggregation over `df` → sidecar
     * entries, mtimes taken from the PRE-SCAN listing (see
-    * [[buildBloomSidecar]] for why that ordering is load-bearing).
+    * [[refreshAux]] for why that ordering is load-bearing).
     */
   private def bloomEntries(spark: SparkSession,
       df: DataFrame, statuses: Seq[(String, Long)],
@@ -1078,7 +1048,8 @@ object ZoneMap {
   /** Column-sliced sidecar read: `cols = Some(set)` reads ONLY those
     * columns' shards — O(files × |cols|) driver bytes regardless of
     * how many columns the manifest tracks; `None` reads everything.
-    * A v1 sidecar (bare array) is read whole and filtered. Double
+    * Anything but the sharded index (a bare JSON array included) reads
+    * as no sidecar, so the rule prunes nothing. Double
     * bounds survive the JSON round-trip exactly (Jackson renders
     * doubles losslessly).
     */
@@ -1126,10 +1097,7 @@ object ZoneMap {
     val text = readText(p).getOrElse(return None)
     try {
       val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      if (root.isArray) // legacy v1: one blob, filter in memory
-        parseEntries(text).map(es =>
-          cols.fold(es)(want => es.filter(e => want.contains(e.col))))
-      else if (root.isObject && root.has("shards")) {
+      if (root.isObject && root.has("shards")) {
         val sh = root.get("shards")
         val names = scala.jdk.CollectionConverters
           .IteratorHasAsScala(sh.fieldNames()).asScala.toSeq

@@ -459,7 +459,7 @@ object ZoneSkipRule {
       }
     }
     // BLOOM extraction: only a BARE attribute compared to a same-type
-    // non-null literal — exactly the shape buildBloomSidecar hashed
+    // non-null literal — exactly the shape refreshBlooms hashed
     // (xxhash64 of the column in its own type). Any cast changes the
     // hashed bit width (Spark hashes int as 4 bytes, long as 8), so
     // cast shapes contribute ranges only. A false negative is

@@ -214,11 +214,7 @@ object CurationOps {
         val signed = ExtOps.cachedSigned(s, d)
         val delta = signed.filter(col("doc_id") % 10 === 0)
         val corpus = signed.filter(col("doc_id") % 10 =!= 0)
-        // est gate off: same measurement as the symmetric paths — the
-        // hashed word sets are short, so direct intersection beats the
-        // sig-join estimate stage (Dedup.verifyStaged doc)
-        graft.operators.Dedup.deltaPairsSigned(delta, corpus, "doc_id", 0.9,
-          estimateGate = false)
+        graft.operators.Dedup.deltaPairsSigned(delta, corpus, "doc_id", 0.9)
           // per-pair jac quantized to exact ×1e8 ints (identical
           // doubles on both engines — same integer division), then an
           // integer half-up average — no float accumulates

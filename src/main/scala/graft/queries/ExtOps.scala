@@ -52,12 +52,7 @@ object ExtOps {
       try graft.Sessions.isolated(s, "spark.sql.adaptive.enabled" -> "false") { r =>
         val rSigned = GraftSession.rebind(signed, r)
         rSigned.write.mode("overwrite").parquet(s"$out/signed")
-        // est gate off (measured: setup 12.4 → 10.5 s — this corpus's
-        // hashed word sets average ~23 longs, so direct intersection
-        // beats the 64-slot estimate + two 512-byte sig joins;
-        // Dedup.verifyStaged doc has the scale tradeoff)
-        val pairs = Dedup.verifiedPairsSigned(rSigned, "doc_id", 0.9,
-          estimateGate = false)
+        val pairs = Dedup.verifiedPairsSigned(rSigned, "doc_id", 0.9)
         pairs.write.mode("overwrite").parquet(s"$out/pairs")
         pairs.unpersist(blocking = false)
         // the cluster-assignment table is ALSO a materialized lake
@@ -215,11 +210,7 @@ object ExtOps {
           // handOff-persisted (Caching contract): released as soon as
           // `capped` is materialized, which is all that reads it
           val cands = Dedup.cappedCandidatePairs(signed, "doc_id", cap)
-          val verified = Dedup.exactVerify(signed, cands, "doc_id", 0.9,
-            // capped candidates are clique-precision with short hashed
-            // word sets — direct intersection measured 0.9 s vs 3.0 s
-            // for the est-gated path, identical pairs (Dedup doc)
-            estimateGate = false)
+          val verified = Dedup.exactVerify(signed, cands, "doc_id", 0.9)
           val capped = Dedup.duplicateClusters(verified).persist()
           val nCap = try capped.count() finally cands.unpersist(blocking = false)
           val uncapped = cachedClusters(r, d)

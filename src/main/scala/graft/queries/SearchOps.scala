@@ -74,11 +74,11 @@ object SearchOps {
         .write.mode("overwrite").parquet(s"$out/table_id")
       ZoneMap.writeSidecar(s, s"$out/table_id",
         ZoneMap.build(s, s"$out/table_id", Seq("okey2", "okey_str")))
-      ZoneMap.buildBloomSidecar(s, s"$out/table_id", Seq("okey2", "okey_str"))
+      ZoneMap.refreshBlooms(s, s"$out/table_id", Seq("okey2", "okey_str"))
       // HLL shards for the metadata NDV census gate (q_ndv_census)
-      ZoneMap.buildHllSidecar(s, s"$out/table_id", Seq("okey2", "o_orderstatus"))
+      ZoneMap.refreshHlls(s, s"$out/table_id", Seq("okey2", "o_orderstatus"))
       // KLL shards for the metadata quantile census (q_quantile_census)
-      ZoneMap.buildKllSidecar(s, s"$out/table_id", Seq("o_totalprice"))
+      ZoneMap.refreshKlls(s, s"$out/table_id", Seq("o_totalprice"))
     })
 
   val queries: Seq[GateQuery] = Seq(
@@ -689,7 +689,7 @@ object SearchOps {
           .repartitionByRange(24, col("o_orderkey"))
           .write.mode("overwrite").parquet(table)
         ZoneMap.writeSidecar(s, table, ZoneMap.build(s, table, Seq("o_orderkey")))
-        ZoneMap.buildBloomSidecar(s, table, Seq("o_orderkey"))
+        ZoneMap.refreshBlooms(s, table, Seq("o_orderkey"))
         graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
           def census() = r.read.parquet(table)
             .filter(col("o_orderkey") < 375L)

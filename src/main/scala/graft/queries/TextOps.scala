@@ -233,8 +233,7 @@ object TextOps {
         // applied to this gate ran 5.3-7.8 s vs 4.2 s — the source join
         // and per-source band join profit from AQE's runtime broadcast
         // conversion more than they pay in re-planning)
-        Dedup.verifiedPairsSigned(signed, "doc_id", 0.9, groupCols = Seq("source"),
-          estimateGate = false) // short hashed word sets: direct verify wins (Dedup doc)
+        Dedup.verifiedPairsSigned(signed, "doc_id", 0.9, groupCols = Seq("source"))
           .withColumn("_jx", round(col("jac") * 100000000).cast("long"))
           .groupBy("source")
           .agg(count(lit(1)).as("n_pairs"),

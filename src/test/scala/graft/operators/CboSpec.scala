@@ -65,7 +65,7 @@ class CboSpec extends AnyFunSuite with SparkTestBase {
     val st = Cbo.TableStats(123L, 4567L,
       Map("a,b" -> 9L, "x=y" -> 3L, "q`\"z" -> 123L))
     val dir = java.nio.file.Files.createTempDirectory("cbo_spec").toString
-    Cbo.writeStats(spark, st, dir)
+    Cbo.writeStats(st, dir)
     assert(Cbo.readStats(spark, dir) === Some(st))
     assert(Cbo.readStats(spark, dir + "/missing") === None)
     assert(Cbo.readStats(spark, dir).get.isKey("q`\"z") &&

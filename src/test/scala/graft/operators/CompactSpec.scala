@@ -28,7 +28,7 @@ class CompactSpec extends AnyFunSuite with SparkTestBase {
         .coalesce(1).write.mode("append").partitionBy("p").parquet(dir)
     }
     ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("id")))
-    assert(ZoneMap.buildBloomSidecar(spark, dir, Seq("id")) === 10)
+    assert(ZoneMap.refreshBlooms(spark, dir, Seq("id")) === 10)
 
     val before = spark.read.parquet(dir)
     val wantN = before.count()

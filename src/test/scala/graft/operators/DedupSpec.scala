@@ -140,26 +140,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(viaLocal(emoji) == hi && viaLocal(hi) == hi && viaLocal("ab") == "aa")
   }
 
-  test("exactVerify: estimate gate on/off produce identical pairs") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog tonight again"),
-      (2L, "the quick brown fox jumps over the lazy dog tonight again"),
-      (3L, "the quick brown fox jumps over the lazy dog tonight maybe"),
-      (4L, "completely different words live in this other document here"))
-      .toDF("doc_id", "text")
-    val signed = Dedup.withSignature(docs, "text").persist()
-    try {
-      val cands = Dedup.candidatePairs(signed, "doc_id")
-      def run(gate: Boolean): Set[(Long, Long, Double)] =
-        Dedup.exactVerify(signed, cands, "doc_id", 0.9, estimateGate = gate)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val withGate = run(true)
-      val withoutGate = run(false)
-      assert(withGate == withoutGate && withGate.nonEmpty)
-    } finally { signed.unpersist(blocking = false); () }
-  }
-
   test("duplicate clusters: null-id pairs drop out on both paths") {
     import spark.implicits._
     val pairs = Seq((Some(1L), Some(2L)), (None, Some(3L)), (Some(4L), None))

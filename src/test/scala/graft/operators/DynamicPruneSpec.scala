@@ -24,7 +24,7 @@ class DynamicPruneSpec extends AnyFunSuite with SparkTestBase {
       .repartitionByRange(12, $"grp")
       .write.mode("overwrite").parquet(d)
     ZoneMap.writeSidecar(spark, d, ZoneMap.build(spark, d, Seq("id")))
-    ZoneMap.buildBloomSidecar(spark, d, Seq("id"))
+    ZoneMap.refreshBlooms(spark, d, Seq("id"))
     d
   }
 

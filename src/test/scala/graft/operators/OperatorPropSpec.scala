@@ -90,6 +90,49 @@ class OperatorPropSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("exactVerify equals brute-force Jaccard over the candidate pairs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(71)
+    var (kept, dropped) = (0, 0)
+    for (trial <- 1 to 6) {
+      // a few base documents over a small vocabulary, each with
+      // variants that swap or drop random words — candidate pairs
+      // then span the whole Jaccard range, exact copies included
+      val vocab = (1 to 40).map(i => s"w$i")
+      val rows = (1 to 4).flatMap { f =>
+        val base = rnd.shuffle(vocab).take(8 + rnd.nextInt(10))
+        (0 to 2 + rnd.nextInt(4)).map { v =>
+          val words = base.map(w => if (rnd.nextInt(8) < v) vocab(rnd.nextInt(40)) else w)
+            .filter(_ => rnd.nextInt(10) > 0)
+          (f * 100L + v) -> (if (words.isEmpty) base else words).mkString(" ")
+        }
+      }
+      // thresholds on a tenths grid in [0.3, 1.0]: ties with exact
+      // Jaccard values such as 3/5 and 1/1 land on the boundary
+      val threshold = (3 + rnd.nextInt(8)) / 10.0
+      val signed = Dedup.withSignature(rows.toDF("doc_id", "text").repartition(3), "text")
+        .persist()
+      try {
+        val cands = Dedup.candidatePairs(signed, "doc_id")
+        val pairs = cands.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val got = Dedup.exactVerify(signed, cands, "doc_id", threshold)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+        // driver-side truth: Jaccard of the distinct word sets
+        val words = rows.toMap.view.mapValues(_.split(" ").toSet).toMap
+        val jacs = pairs.map { case (a, b) =>
+          val n = (words(a) intersect words(b)).size
+          (a, b, n.toDouble / (words(a) union words(b)).size)
+        }
+        val want = jacs.filter(_._3 >= threshold).toSet
+        assert(got == want, s"trial $trial (threshold $threshold)")
+        kept += want.size
+        dropped += jacs.length - want.size
+      } finally { signed.unpersist(blocking = false); () }
+    }
+    assert(kept > 0 && dropped > 0, s"vacuous corpora: kept $kept, dropped $dropped")
+  }
+
   test("frequent pairs equal brute force on random baskets") {
     import spark.implicits._
     val rnd = new scala.util.Random(31)

@@ -239,7 +239,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     assert(entries().map(_.file).distinct.size === 2)
   }
 
-  test("sharded sidecar: column slices bound the read, legacy v1 still parses, snapshots GC") {
+  test("sharded sidecar: column slices bound the read, snapshots GC") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val dir = scratch() + "/t"
@@ -281,23 +281,48 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     assert(after.length === 2, s"stale shards must GC (got ${after.toSeq})")
     assert(after.toSet.intersect(shards.toSet).isEmpty,
       "new snapshot must use fresh shard names")
+  }
 
-    // legacy v1 (bare array) sidecars still read, sliced or whole
-    val legacy = ZoneMap.readSidecarPath(idx, conf).get
+  test("a bare-array _zone_map.json reads as no sidecar") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = scratch() + "/t"
+    writePartitioned((0 until 100).map(i => (i.toLong, i.toDouble)).toDF("k", "v"), dir, 4)
+    ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("k", "v")))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val idx = new Path(dir, ZoneMap.SidecarFile)
+    val entries = ZoneMap.readSidecarPath(idx, conf).get
+    assert(entries.size === 8)
+
+    // the same entries as one bare JSON array in place of the index:
+    // no build writes that shape, so it must not prune anything
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val arr = m.createArrayNode()
-    legacy.foreach { e =>
+    entries.foreach { e =>
       val o = arr.addObject()
       o.put("file", e.file); o.put("col", e.col); o.put("nRows", e.nRows)
       o.put("hasStats", e.hasStats)
       e.vminNum.foreach(o.put("vminNum", _)); e.vmaxNum.foreach(o.put("vmaxNum", _))
       o.put("nNulls", e.nNulls); o.put("isFloat", e.isFloat); o.put("mtime", e.mtime)
     }
-    val out = fs.create(idx, true)
+    val out = idx.getFileSystem(conf).create(idx, true)
     try out.write(m.writeValueAsBytes(arr)) finally out.close()
-    assert(ZoneMap.readSidecarPath(idx, conf).get.size === legacy.size)
-    assert(ZoneMap.readSidecarColumns(idx, conf, Some(Set("v"))).get
-      .forall(_.col == "v"))
+    assert(ZoneMap.readSidecarColumns(idx, conf, cols = None) === None)
+    assert(ZoneMap.readSidecarColumns(idx, conf, Some(Set("v"))) === None)
+  }
+
+  test("sketch refresh with named columns fails loudly on a table without data files") {
+    val dir = scratch() + "/empty"
+    new java.io.File(dir).mkdirs()
+    Seq[Seq[String] => Int](
+      ZoneMap.refreshBlooms(spark, dir, _),
+      ZoneMap.refreshHlls(spark, dir, _),
+      ZoneMap.refreshKlls(spark, dir, _)).foreach { refresh =>
+      val e = intercept[IllegalArgumentException](refresh(Seq("k")))
+      assert(e.getMessage.contains("no parquet data files"))
+      // no named columns and no sidecar: nothing tracked, nothing to do
+      assert(refresh(Nil) === 0)
+    }
   }
 
   test("aggFromManifest: exact metadata-only census, refuses whenever it cannot prove exactness") {
@@ -391,7 +416,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
       }.toDF("k", "s").coalesce(1).write.mode("append").parquet(dir)
     }
     ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("k")))
-    assert(ZoneMap.buildHllSidecar(spark, dir, Seq("k", "s")) === 12)
+    assert(ZoneMap.refreshHlls(spark, dir, Seq("k", "s")) === 12)
 
     val exactK = spark.read.parquet(dir).select("k").distinct().count()
     val exactS = spark.read.parquet(dir).select("s").distinct().count()
@@ -431,7 +456,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
         ((g * 7919L) % 3000L, s"x$g")
       }.toDF("v", "s").coalesce(1).write.mode("append").parquet(dir)
     }
-    assert(ZoneMap.buildKllSidecar(spark, dir, Seq("v")) === 6)
+    assert(ZoneMap.refreshKlls(spark, dir, Seq("v")) === 6)
     val q = ZoneMap.quantilesFromManifest(spark, dir, "v", Seq(0.5, 0.9))
       .getOrElse(fail("fresh table must answer"))
     assert(q.n === 3000L, "sketch n is the exact non-null count")
@@ -451,7 +476,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
 
     // non-numeric columns are refused at build time
     val e = intercept[IllegalArgumentException] {
-      ZoneMap.buildKllSidecar(spark, dir, Seq("s"))
+      ZoneMap.refreshKlls(spark, dir, Seq("s"))
     }
     assert(e.getMessage.contains("NUMERIC"))
   }

@@ -49,7 +49,7 @@ class ExtensionRulesInterplaySpec extends AnyFunSuite {
       // dim: physically 50 rows; measured sidecar says broadcastable
       (1L to 50L).map(i => (i, s"name$i")).toDF("dim_id", "name")
         .write.mode("overwrite").parquet(s"$work/dim")
-      Cbo.writeStats(s, Cbo.collectStats(s.read.parquet(s"$work/dim")),
+      Cbo.writeStats(Cbo.collectStats(s.read.parquet(s"$work/dim")),
         s"$work/dim")
 
       def query() = s.read.parquet(s"$work/fact")

@@ -46,7 +46,7 @@ class StatsBroadcastRuleSpec extends AnyFunSuite {
       // no sidecar yet: nothing to go on -> shuffle join
       assert(!plan("dim_small").contains("BroadcastHashJoin"))
       // measured-small sidecar -> the rule fills a BROADCAST hint
-      Cbo.writeStats(s, Cbo.collectStats(s.read.parquet(s"$work/dim_small")),
+      Cbo.writeStats(Cbo.collectStats(s.read.parquet(s"$work/dim_small")),
         s"$work/dim_small")
       assert(plan("dim_small").contains("BroadcastHashJoin"),
         "measured-small sidecar must broadcast")
@@ -56,7 +56,7 @@ class StatsBroadcastRuleSpec extends AnyFunSuite {
         Seq("k")).queryExecution.executedPlan.toString()
       assert(filtered.contains("BroadcastHashJoin"))
       // forged huge sidecar -> over budget -> shuffle join
-      Cbo.writeStats(s, Cbo.TableStats(20L, 1L << 40, Map.empty),
+      Cbo.writeStats(Cbo.TableStats(20L, 1L << 40, Map.empty),
         s"$work/dim_huge")
       assert(!plan("dim_huge").contains("BroadcastHashJoin"),
         "measured-huge sidecar must NOT broadcast")

@@ -228,7 +228,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
           .write.mode("append").partitionBy("day").parquet(dir)
       }
       ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("id")))
-      ZoneMap.buildBloomSidecar(s, dir, Seq("tag"))
+      ZoneMap.refreshBlooms(s, dir, Seq("tag"))
 
       // the recursive harvest saw every partition's files
       assert(ZoneMap.dataFiles(s, dir).length === 15)
@@ -429,7 +429,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
         .repartitionByRange(12, $"grp")
         .write.mode("overwrite").parquet(dir)
       ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("id", "name")))
-      val written = ZoneMap.buildBloomSidecar(s, dir, Seq("id", "name"))
+      val written = ZoneMap.refreshBlooms(s, dir, Seq("id", "name"))
       val total = scanFileCount(s.read.parquet(dir))
       assert(written === 2 * total, "one bloom per (file, col)")
 
