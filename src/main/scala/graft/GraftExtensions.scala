@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{AdcScoreExpression, ArrayCosineExpression, FlattenJsonExpression, KsuidBasicIsoExpression, KsuidTimestampExpression, Xxh3Expression}
-
 /** Library packaging as a Spark extension: running ANY Spark app with
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
@@ -22,40 +20,16 @@ import graft.functions.{AdcScoreExpression, ArrayCosineExpression, FlattenJsonEx
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("xxh3_64"),
-      new ExpressionInfo(classOf[Xxh3Expression].getName, "xxh3_64"),
-      graft.functions.Functions.xxh3Builder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("array_cosine"),
-      new ExpressionInfo(classOf[ArrayCosineExpression].getName, "array_cosine"),
-      graft.functions.Functions.cosineBuilder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("adc_score"),
-      new ExpressionInfo(classOf[AdcScoreExpression].getName, "adc_score"),
-      graft.functions.Functions.adcBuilder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("ksuid_timestamp"),
-      new ExpressionInfo(classOf[KsuidTimestampExpression].getName, "ksuid_timestamp"),
-      graft.functions.Functions.ksuidTimestampBuilder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("ksuid_basic_iso"),
-      new ExpressionInfo(classOf[KsuidBasicIsoExpression].getName, "ksuid_basic_iso"),
-      graft.functions.Functions.ksuidBasicIsoBuilder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("flatten_features"),
-      new ExpressionInfo(classOf[FlattenJsonExpression].getName, "flatten_features"),
-      graft.functions.Functions.flattenFeaturesBuilder(_)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[graft.functions.WinnowExpression].getName, "winnow_fps"),
-      graft.functions.Functions.winnowFpsBuilder(_)))
+    graft.functions.Functions.natives.foreach { n =>
+      ext.injectFunction((FunctionIdentifier(n.name),
+        new ExpressionInfo(n.cls.getName, n.name), n.builder))
+    }
     // the ANALYZE feedback loop as an optimizer rule: measured
     // _table_stats.json sidecars fill absent Join hints with BROADCAST
     // (graft.plans.StatsBroadcastRule — the session-wide statsJoin)
     ext.injectOptimizerRule(graft.plans.StatsBroadcastRule.apply)
     // transparent zone-map data skipping: _zone_map.json sidecars
-    // (ZoneMapJob / ZoneMap.writeSidecar) shrink a filtered scan's
+    // (ZoneMapJob / ZoneMap.refreshSidecar) shrink a filtered scan's
     // file list before the scan plans (graft.plans.ZoneSkipRule)
     ext.injectOptimizerRule(graft.plans.ZoneSkipRule.apply)
     // transparent count(*) from the same sidecars when every live file

@@ -19,8 +19,8 @@ import graft.obs.Spans
   * Usage: runMain graft.Profile <name[,name...]> [--passes N] [--plans DIR]
   *   name     a gate (a key of SparkEntry.queries) or a bench setup
   *            task (SparkEntry.setupTasks; its derivation is kept per
-  *            JVM, so only its first pass does the work)
-  *   --passes passes per name (default 3); 0 only writes plans
+  *            JVM, so it is measured in one pass, whatever --passes says)
+  *   --passes passes per gate (default 3); 0 only writes plans
   *   --plans  write each gate's plan to DIR/<gate>.txt
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
@@ -52,7 +52,8 @@ object Profile {
   }
 
   /** Profiles `names` on `sfDir`, printing one line per pass; returns
-    * the passes. Every name is resolved before anything runs.
+    * the passes. Every name is resolved before anything runs. A setup
+    * task gets one pass: later ones would read its per-JVM memo.
     */
   def run(spark: SparkSession, sfDir: String, names: Seq[String],
       passes: Int = 3, plansDir: Option[String] = None): Seq[Pass] = {
@@ -73,7 +74,7 @@ object Profile {
         target.foreach(fn => writePlan(name, GateContext.runningGate(name)(fn(spark, sfDir))))
         spark.catalog.clearCache()
         Nil
-      } else (1 to passes).map { pass =>
+      } else (1 to (if (target.isLeft) 1 else passes)).map { pass =>
         val (df, spans) = target match {
           case Right(fn) =>
             val (df, spans) = gatePass(spark, sfDir, name, fn)

@@ -452,8 +452,7 @@ object ScaleStress {
     ev.select("event_id", "event_type", "value")
       .repartitionByRange(24, col("event_id"))
       .write.mode("overwrite").parquet(s"$work/probe")
-    ZoneMap.writeSidecar(spark, s"$work/probe",
-      ZoneMap.build(spark, s"$work/probe", Seq("event_id")))
+    ZoneMap.refreshSidecar(spark, s"$work/probe", Seq("event_id"))
     // dim: per-event-type census + ANALYZE sidecar (measured bytes)
     ev.groupBy("event_type").agg(count(lit(1)).as("n_type"))
       .coalesce(1).write.mode("overwrite").parquet(s"$work/dim")
@@ -511,8 +510,7 @@ object ScaleStress {
     evB.select("event_id", "user_id", "value")
       .repartitionByRange(24, col("user_id"))
       .write.mode("overwrite").parquet(s"$workB/t")
-    ZoneMap.writeSidecar(spark, s"$workB/t",
-      ZoneMap.build(spark, s"$workB/t", Seq("event_id")))
+    ZoneMap.refreshSidecar(spark, s"$workB/t", Seq("event_id"))
     val tB0 = System.nanoTime()
     val nBlooms = ZoneMap.refreshBlooms(spark, s"$workB/t",
       Seq("event_id"), numBits = 1L << 21)

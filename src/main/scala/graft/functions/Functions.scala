@@ -45,10 +45,25 @@ case class Xxh3Expression(left: Expression, right: Expression)
   */
 object Functions {
 
-  /** The xxh3_64 expression builder — ONE definition shared by the
-    * imperative registration below and `graft.GraftExtensions`, so the
-    * two registration paths can never drift semantically.
+  /** One native SQL function: its name, the expression class it
+    * builds, and the builder Spark's function registry calls.
     */
+  final case class Native(name: String, cls: Class[_ <: Expression],
+      builder: Seq[Expression] => Expression)
+
+  /** The native SQL functions — ONE list that [[register]] and
+    * `graft.GraftExtensions` both iterate, so the two registration
+    * paths can never drift.
+    */
+  val natives: Seq[Native] = Seq(
+    Native("xxh3_64", classOf[Xxh3Expression], xxh3Builder),
+    Native("array_cosine", classOf[ArrayCosineExpression], cosineBuilder),
+    Native("adc_score", classOf[AdcScoreExpression], adcBuilder),
+    Native("ksuid_timestamp", classOf[KsuidTimestampExpression], ksuidTimestampBuilder),
+    Native("ksuid_basic_iso", classOf[KsuidBasicIsoExpression], ksuidBasicIsoBuilder),
+    Native("flatten_features", classOf[FlattenJsonExpression], flattenFeaturesBuilder),
+    Native("winnow_fps", classOf[WinnowExpression], winnowFpsBuilder))
+
   def xxh3Builder(args: Seq[Expression]): Expression = {
     require(args.length == 1 || args.length == 2, "xxh3_64(str[, seed])")
     // coerce integer seed literals — the natural SQL spelling is
@@ -116,20 +131,8 @@ object Functions {
 
   def register(spark: SparkSession): Unit = {
     // native expressions via the function registry (not UDFs)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "xxh3_64", xxh3Builder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_cosine", cosineBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "adc_score", adcBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ksuid_timestamp", ksuidTimestampBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ksuid_basic_iso", ksuidBasicIsoBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "flatten_features", flattenFeaturesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", winnowFpsBuilder, "scala_udf")
+    natives.foreach(n => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(n.name, n.builder, "scala_udf"))
 
     spark.udf.register("is_valid_ksuid",
       (id: String, nowEpochSeconds: Long) => Ksuid.isValid(id, nowEpochSeconds))

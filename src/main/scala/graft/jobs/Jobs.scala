@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ingest.{FirehoseRecords, Groom, Merge, PartitionStore}
 import graft.obs.Spans
+import graft.operators.{Compact, ZoneMap}
 import graft.pipeline.RdrPipeline
 import graft.train.{ModelStore, Trainer}
 
@@ -16,6 +17,10 @@ object Jobs {
   private[jobs] def session(app: String): SparkSession =
     graft.Sessions.local(app,
       sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(32))
+
+  /** A comma-separated column list argument. */
+  private[jobs] def columns(arg: String): Seq[String] =
+    arg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** A job's `main`: runs `body` on a new session, then writes one
     * `[span]` line per span it opened to stderr. */
@@ -190,61 +195,49 @@ object AnalyzeJob {
   }
 }
 
-/** ZoneMapJob <parquetDir> <outDir> <col[,col...]> — harvest the
-  * file-level zone manifest (per-file min/max/null stats from parquet
-  * FOOTERS — no data pages read) for the named columns, write it to
-  * <outDir>/zone_map.parquet for the explicit `ZoneMap.prunedRead`
-  * path, AND drop the `_zone_map.json` sidecar into <parquetDir> so
-  * `graft.plans.ZoneSkipRule` skips files TRANSPARENTLY for every
-  * filtered query in extension-built sessions. Pairs with
-  * Layout.zOrder so BOTH layout dimensions prune.
+/** ZoneMapJob <parquetDir> <col[,col...]> — harvest (or incrementally
+  * refresh) the file-level zone manifest, the `_zone_map.json` sidecar
+  * in <parquetDir> (per-file min/max/null stats from parquet FOOTERS —
+  * no data pages read), for the named columns, so `ZoneMap.prunedRead`
+  * and `graft.plans.ZoneSkipRule` skip files for every filtered query.
+  * Only files the sidecar does not already cover freshly are read.
+  * Pairs with Layout.zOrder so BOTH layout dimensions prune.
   */
 object ZoneMapJob {
   def main(args: Array[String]): Unit = {
-    require(args.length == 3, "usage: ZoneMapJob <parquetDir> <outDir> <col[,col...]>")
-    val Array(path, outDir, colArg) = args
-    val cols = colArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = Jobs.session("graft-zonemap")
-    val zm = graft.operators.ZoneMap
-    // incremental when a sidecar already exists: only changed files
-    // re-harvest (footer reads are cheap, but O(new) beats O(all) on
-    // a table with millions of files); fresh tables do the full build
-    val sidecar = new org.apache.hadoop.fs.Path(path, zm.SidecarFile)
-    val hasSidecar = sidecar
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar)
-    val mf = if (hasSidecar) {
-      val (harvested, dropped) = zm.refreshSidecar(spark, path, cols)
-      println(s"sidecar refreshed: $harvested file(s) harvested, $dropped dropped")
-      import spark.implicits._
-      zm.readSidecarPath(sidecar, spark.sparkContext.hadoopConfiguration)
-        .get.toDF()
-    } else {
-      val built = zm.build(spark, path, cols).persist()
-      zm.writeSidecar(spark, path, built)
-      built
-    }
-    mf.coalesce(1).write.mode("overwrite").parquet(s"$outDir/zone_map.parquet")
-    val perCol = mf.groupBy("col")
-      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.sum("nNulls"))
-      .collect()
-    perCol.foreach(r => println(s"${r.get(0)}: files=${r.get(1)} nulls=${r.get(2)}"))
-    // the metadata-only census the fresh sidecar can now answer —
-    // zero data IO (see ZoneMap.aggFromManifestMulti: ONE sidecar
-    // slice + ONE listing for every column; "refused" = the manifest
-    // cannot prove exactness — float or ulp-widened bounds, a file
-    // changing underfoot — and a reader must scan instead)
-    val census = zm.aggFromManifestMulti(spark, path, cols)
-    cols.foreach { c =>
-      census(c) match {
-        case Some(a) =>
-          val b = a.bounds.map(x => s"min=${x._1} max=${x._2}").getOrElse("bounds=refused")
-          println(s"census $c: rows=${a.nRows} non_null=${a.nNonNull} $b")
-        case None => println(s"census $c: refused (manifest not exact)")
-      }
-    }
-    spark.stop()
+    require(args.length == 2, "usage: ZoneMapJob <parquetDir> <col[,col...]>")
+    Jobs.runMain("graft-zonemap")(run(_, args(0), Jobs.columns(args(1))))
   }
+
+  /** The job body, session-in, in span `zonemap`; returns the metadata
+    * census per column (None = refused: the manifest cannot prove it
+    * exact — float or ulp-widened bounds, a file changing underfoot —
+    * and a reader must scan instead).
+    */
+  def run(spark: SparkSession, path: String,
+      cols: Seq[String]): Map[String, Option[ZoneMap.ManifestAgg]] =
+    Spans.span(spark, "zonemap") {
+      val (harvested, dropped) = ZoneMap.refreshSidecar(spark, path, cols)
+      println(s"sidecar refreshed: $harvested file(s) harvested, $dropped dropped")
+      val entries = ZoneMap.readSidecarColumns(
+        new org.apache.hadoop.fs.Path(path, ZoneMap.SidecarFile),
+        spark.sparkContext.hadoopConfiguration, Some(cols.toSet)).getOrElse(Nil)
+      val byCol = entries.groupBy(_.col)
+      cols.foreach { c =>
+        val es = byCol.getOrElse(c, Nil)
+        println(s"$c: files=${es.length} nulls=${es.map(_.nNulls).sum}")
+      }
+      val census = ZoneMap.aggFromManifestMulti(spark, path, cols)
+      cols.foreach { c =>
+        census(c) match {
+          case Some(a) =>
+            val b = a.bounds.map(x => s"min=${x._1} max=${x._2}").getOrElse("bounds=refused")
+            println(s"census $c: rows=${a.nRows} non_null=${a.nNonNull} $b")
+          case None => println(s"census $c: refused (manifest not exact)")
+        }
+      }
+      census
+    }
 }
 
 /** `runMain graft.jobs.BloomMapJob <parquetDir> <col[,col...]> [numBits]`
@@ -259,16 +252,21 @@ object BloomMapJob {
   def main(args: Array[String]): Unit = {
     require(args.length == 2 || args.length == 3,
       "usage: BloomMapJob <parquetDir> <col[,col...]> [numBits]")
-    val path = args(0)
-    val cols = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val numBits = if (args.length == 3) args(2).toLong else 1L << 18
-    val spark = Jobs.session("graft-bloommap")
-    // with explicit columns, refreshBlooms IS the fresh build too: no
-    // prior coverage means every live file is a todo
-    val written = graft.operators.ZoneMap.refreshBlooms(spark, path, cols, numBits)
-    println(s"blooms written: $written (${cols.mkString(",")}, $numBits bits/file)")
-    spark.stop()
+    val numBits = args.lift(2).fold(1L << 18)(_.toLong)
+    Jobs.runMain("graft-bloommap")(run(_, args(0), Jobs.columns(args(1)), numBits))
   }
+
+  /** The job body, session-in, in span `bloommap`; returns the number
+    * of (file, column) blooms written. With explicit columns it is the
+    * first build too: no prior coverage means every live file is a todo.
+    */
+  def run(spark: SparkSession, path: String, cols: Seq[String],
+      numBits: Long = 1L << 18): Int =
+    Spans.span(spark, "bloommap") {
+      val written = ZoneMap.refreshBlooms(spark, path, cols, numBits)
+      println(s"blooms written: $written (${cols.mkString(",")}, $numBits bits/file)")
+      written
+    }
 }
 
 /** `runMain graft.jobs.CompactJob <parquetDir> [targetBytes] [sortCol]`
@@ -280,16 +278,19 @@ object CompactJob {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty && args.length <= 3,
       "usage: CompactJob <parquetDir> [targetBytes] [sortCol]")
-    val path = args(0)
-    val target = if (args.length >= 2) args(1).toLong else 128L * 1024 * 1024
-    val sortCol = if (args.length == 3) Some(args(2)) else None
-    val spark = Jobs.session("graft-compact")
-    val res = graft.operators.Compact.compact(spark, path,
-      targetBytes = target, sortCol = sortCol)
-    println(s"compacted: ${res.filesIn} files (${res.bytesIn} bytes) " +
-      s"-> ${res.filesOut} in ${res.bins} bin(s)")
-    spark.stop()
+    val target = args.lift(1).fold(128L * 1024 * 1024)(_.toLong)
+    Jobs.runMain("graft-compact")(run(_, args(0), target, args.lift(2)))
   }
+
+  /** The job body, session-in, in span `compact`. */
+  def run(spark: SparkSession, path: String, targetBytes: Long = 128L * 1024 * 1024,
+      sortCol: Option[String] = None): Compact.CompactResult =
+    Spans.span(spark, "compact") {
+      val res = Compact.compact(spark, path, targetBytes = targetBytes, sortCol = sortCol)
+      println(s"compacted: ${res.filesIn} files (${res.bytesIn} bytes) " +
+        s"-> ${res.filesOut} in ${res.bins} bin(s)")
+      res
+    }
 }
 
 /** `runMain graft.jobs.HllMapJob <parquetDir> <col[,col...]> [lgK]` —
@@ -301,22 +302,25 @@ object HllMapJob {
   def main(args: Array[String]): Unit = {
     require(args.length == 2 || args.length == 3,
       "usage: HllMapJob <parquetDir> <col[,col...]> [lgK]")
-    val path = args(0)
-    val cols = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val lgK = if (args.length == 3) args(2).toInt else 12
-    val spark = Jobs.session("graft-hllmap")
-    val zm = graft.operators.ZoneMap
-    val written = zm.refreshHlls(spark, path, cols, lgK)
-    println(s"hll sketches written: $written (${cols.mkString(",")}, lgK=$lgK)")
-    cols.foreach { c =>
-      zm.ndvFromManifest(spark, path, c) match {
-        case Some(n) =>
-          println(s"ndv $c: ~${n.estimate} (2sigma [${n.lower}, ${n.upper}])")
-        case None => println(s"ndv $c: refused (manifest not fresh-complete)")
-      }
-    }
-    spark.stop()
+    val lgK = args.lift(2).fold(12)(_.toInt)
+    Jobs.runMain("graft-hllmap")(run(_, args(0), Jobs.columns(args(1)), lgK))
   }
+
+  /** The job body, session-in, in span `hllmap`; returns the NDV census
+    * per column (None = refused: not every live file is sketched).
+    */
+  def run(spark: SparkSession, path: String, cols: Seq[String],
+      lgK: Int = 12): Map[String, Option[ZoneMap.NdvEstimate]] =
+    Spans.span(spark, "hllmap") {
+      val written = ZoneMap.refreshHlls(spark, path, cols, lgK)
+      println(s"hll sketches written: $written (${cols.mkString(",")}, lgK=$lgK)")
+      cols.map { c =>
+        val ndv = ZoneMap.ndvFromManifest(spark, path, c)
+        println(ndv.fold(s"ndv $c: refused (manifest not fresh-complete)")(n =>
+          s"ndv $c: ~${n.estimate} (2sigma [${n.lower}, ${n.upper}])"))
+        c -> ndv
+      }.toMap
+    }
 }
 
 /** `runMain graft.jobs.KllMapJob <parquetDir> <col[,col...]> [k]` —
@@ -329,21 +333,24 @@ object KllMapJob {
   def main(args: Array[String]): Unit = {
     require(args.length == 2 || args.length == 3,
       "usage: KllMapJob <parquetDir> <col[,col...]> [k]")
-    val path = args(0)
-    val cols = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val k = if (args.length == 3) args(2).toInt else 200
-    val spark = Jobs.session("graft-kllmap")
-    val zm = graft.operators.ZoneMap
-    val written = zm.refreshKlls(spark, path, cols, k)
-    println(s"kll sketches written: $written (${cols.mkString(",")}, k=$k)")
-    cols.foreach { c =>
-      zm.quantilesFromManifest(spark, path, c, Seq(0.5, 0.9, 0.99)) match {
-        case Some(q) =>
-          println(f"quantiles $c: p50=${q.values(0)}%.4f p90=${q.values(1)}%.4f " +
-            f"p99=${q.values(2)}%.4f (n=${q.n}, rank err ±${q.rankError * 100}%.2f%%)")
-        case None => println(s"quantiles $c: refused (manifest not fresh-complete)")
-      }
-    }
-    spark.stop()
+    val k = args.lift(2).fold(200)(_.toInt)
+    Jobs.runMain("graft-kllmap")(run(_, args(0), Jobs.columns(args(1)), k))
   }
+
+  /** The job body, session-in, in span `kllmap`; returns the p50/p90/p99
+    * census per column (None = refused: not every live file is sketched).
+    */
+  def run(spark: SparkSession, path: String, cols: Seq[String],
+      k: Int = 200): Map[String, Option[ZoneMap.QuantileCensus]] =
+    Spans.span(spark, "kllmap") {
+      val written = ZoneMap.refreshKlls(spark, path, cols, k)
+      println(s"kll sketches written: $written (${cols.mkString(",")}, k=$k)")
+      cols.map { c =>
+        val q = ZoneMap.quantilesFromManifest(spark, path, c, Seq(0.5, 0.9, 0.99))
+        println(q.fold(s"quantiles $c: refused (manifest not fresh-complete)")(q =>
+          f"quantiles $c: p50=${q.values(0)}%.4f p90=${q.values(1)}%.4f " +
+            f"p99=${q.values(2)}%.4f (n=${q.n}, rank err ±${q.rankError * 100}%.2f%%)"))
+        c -> q
+      }.toMap
+    }
 }

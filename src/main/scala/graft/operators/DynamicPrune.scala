@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -115,38 +114,8 @@ object DynamicPrune {
       return DynPrune(spark.read.parquet(probeDir), total, total, nKeys,
         usedBlooms = false)
 
-    val (kept, totalLive) = keptFilesFromSidecar(spark, probeDir, preds)
-    val df =
-      if (kept.isEmpty) spark.read.parquet(probeDir).limit(0)
-      else if (kept.length == totalLive) spark.read.parquet(probeDir)
-      else spark.read.parquet(kept: _*)
-    DynPrune(df, totalLive, kept.length, nKeys, usedBlooms)
-  }
-
-  /** Sidecar-backed kept-files decision with the rule's freshness
-    * semantics (one listing, mtime-stale entries ignored, unmentioned
-    * files kept). The explicit-operator path pays one listing; the
-    * transparent rule reuses the scan's own index instead.
-    */
-  private def keptFilesFromSidecar(spark: SparkSession, dir: String,
-      preds: Seq[ZoneMap.ZonePred]): (Seq[String], Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statuses = ZoneMap.dataFileStatuses(spark, dir)
-    val entries = ZoneMap.readSidecarColumns(
-      new Path(dir, ZoneMap.SidecarFile), conf,
-      Some(preds.flatMap(ZoneMap.predCols).toSet),
-      bloomShardCapBytes = 256L * 1024 * 1024)
-      .getOrElse(return (statuses.map(_._1), statuses.length))
-    def norm(f: String) = new Path(f).toUri.getPath
-    val byFile = entries.groupBy(e => norm(e.file))
-      .map { case (f, es) => f -> es }
-    val kept = statuses.filter { case (f, mtime) =>
-      byFile.get(norm(f)).forall { es =>
-        val fresh = es.filter(e => e.mtime != 0L && e.mtime == mtime)
-        ZoneMap.keepFile(fresh.map(e => e.col -> e).toMap, preds)
-      }
-    }.map(_._1)
-    (kept, statuses.length)
+    val pr = ZoneMap.prunedRead(spark, probeDir, preds)
+    DynPrune(pr.df, pr.filesTotal, pr.filesKept, nKeys, usedBlooms)
   }
 
   /** The full dynamically-pruned equi-join: prune the probe's file

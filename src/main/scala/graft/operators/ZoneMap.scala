@@ -27,14 +27,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dimensions prune — that end-to-end pair is gated by
   * `q_zonemap_prune` and spec-tested in ZoneMapSpec.
   *
-  * Scale shape: the manifest build is one flatMap over the FILE LIST
-  * (footer reads, ~KBs per file); pruning collects only the manifest
-  * slice for the predicate columns — O(files × predicate columns)
-  * driver rows, the same order as the file listing Spark's own scan
-  * planning already materializes. At 100 TB the manifest is built
-  * incrementally per ingest batch and unioned; `build` is
-  * deterministic per file so re-running a batch overwrites to the
-  * identical rows.
+  * The manifest is the table's `_zone_map.json` sidecar and nothing
+  * else: [[refreshSidecar]] is its only harvest and its only writer,
+  * and [[freshEntries]] is the one rule that decides which of its
+  * entries speak for a live file — every reader (pruned reads, the
+  * optimizer rules, the metadata censuses) and every refresh applies
+  * it to a live listing, so a file added or rewritten after the last
+  * harvest is never judged on entries that do not describe it.
+  *
+  * Scale shape: the harvest is one flatMap over the FILE LIST of the
+  * files the sidecar does not already cover (footer reads, ~KBs per
+  * file); pruning reads only the predicate columns' shards —
+  * O(files × predicate columns) driver rows, the same order as the
+  * file listing Spark's own scan planning already materializes.
   *
   * Executors open footers with a fresh `Configuration()` — on a real
   * cluster the filesystem conf (core-site.xml) rides the executor
@@ -219,21 +224,6 @@ object ZoneMap {
     buf.sortBy(_._1).toSeq
   }
 
-  /** Harvest the zone manifest for `cols` over every data file of
-    * `dir`: one distributed pass over the file LIST, footer-only IO.
-    */
-  def build(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "zone map needs at least one column")
-    val files = dataFiles(spark, dir)
-    require(files.nonEmpty, s"no parquet data files under $dir")
-    val slices = math.min(files.size, spark.sparkContext.defaultParallelism)
-    val colsB = cols.toVector
-    val rdd = spark.sparkContext
-      .parallelize(files, slices)
-      .flatMap(f => readZones(f, colsB))
-    spark.createDataFrame(rdd)
-  }
-
   /** Footer scan of one file → one ZoneEntry per requested column. */
   private[operators] def readZones(
       file: String, cols: Seq[String]): Seq[ZoneEntry] = {
@@ -363,8 +353,9 @@ object ZoneMap {
 
   /** THE prune decision for one file: can a file with these zones
     * (keyed by column; a column may be absent) still satisfy every
-    * predicate? Shared by the DataFrame path ([[keptFiles]]) and the
-    * optimizer-rule sidecar path ([[graft.plans.ZoneSkipRule]]).
+    * predicate? Shared by [[prunedRead]], [[DynamicPrune]] and the
+    * optimizer rule ([[graft.plans.ZoneSkipRule]]); callers pass only
+    * the file's [[freshEntries]], so an empty map keeps the file.
     */
   def keepFile(entries: Map[String, ZoneEntry], preds: Seq[ZonePred]): Boolean =
     preds.forall(satisfiable(entries, _))
@@ -429,48 +420,68 @@ object ZoneMap {
       }
     }
 
-  /** Files that can still satisfy EVERY predicate (conjunction), plus
-    * the total file count. Driver work is one bounded collect of the
-    * manifest slice for the predicate columns.
+  /** Scheme-independent file identity: the sidecar records paths as
+    * the harvest listed them, a scan or another listing may render
+    * them with an explicit scheme/authority — compare URI paths.
     */
-  def keptFiles(manifest: DataFrame, preds: Seq[ZonePred]): (Seq[String], Int) = {
-    require(preds.nonEmpty, "no predicates — nothing to prune on")
-    import org.apache.spark.sql.functions.col
-    // collect only the predicate columns' slice; the full file list
-    // comes from a distinct projection (a predicate on a never-mapped
-    // column must keep every file, including ones the slice misses)
-    val sliceCols = preds.flatMap(predCols).distinct
-    val rows = manifest
-      .where(col("col").isin(sliceCols: _*))
-      .select("file", "col", "nRows", "hasStats", "vminNum", "vmaxNum",
-        "vminStr", "vmaxStr", "nNulls", "isFloat")
-      .collect()
-      .map(r => ZoneEntry(r.getString(0), r.getString(1), r.getLong(2),
-        r.getBoolean(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4)),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-        Option(r.getString(6)), Option(r.getString(7)), r.getLong(8),
-        r.getBoolean(9)))
-    val byFile = rows.groupBy(_.file)
-    val all = manifest.select("file").distinct()
-      .collect().map(_.getString(0))
-    val kept = all.filter { f =>
-      byFile.get(f).forall(es => keepFile(es.map(e => e.col -> e).toMap, preds))
+  private[graft] def normalizeUri(file: String): String =
+    new Path(file).toUri.getPath
+
+  /** THE freshness rule: for each live file `(path, mtime)`, in order,
+    * the sidecar entries that speak for it — same URI path, and a
+    * harvest mtime that is known (non-zero) and equal to the live one.
+    * An entry of a file rewritten in place since its harvest, or a
+    * legacy entry without an mtime, speaks for nothing; a file the
+    * sidecar never saw gets no entries. Each caller keeps its own
+    * policy on top (pruning keeps a file without fresh entries, a
+    * census refuses a table with one); the caller supplies the listing,
+    * so the optimizer rules pass their scan index's statuses.
+    */
+  def freshEntries(live: Seq[(String, Long)],
+      entries: Seq[ZoneEntry]): Seq[Seq[ZoneEntry]] = {
+    val byFile = entries.groupBy(e => normalizeUri(e.file))
+    live.map { case (f, mtime) =>
+      byFile.getOrElse(normalizeUri(f), Nil).filter(e => e.mtime != 0L && e.mtime == mtime)
     }
-    (kept.sorted.toSeq, all.length)
+  }
+
+  /** Driver cap on a BLOOM shard read by a pruning decision (range
+    * shards are never capped): an oversized shard is skipped and its
+    * column does not bloom-prune — less pruning, never a wrong read.
+    */
+  private[graft] val BloomShardCapBytes = 256L * 1024 * 1024
+
+  /** The live data files of `dir` that can still satisfy EVERY
+    * predicate (conjunction), plus the live file count: one listing,
+    * one read of the predicate columns' sidecar shards. A file without
+    * fresh entries is kept; no sidecar keeps every file.
+    */
+  private[graft] def keptLiveFiles(spark: SparkSession, dir: String,
+      preds: Seq[ZonePred]): (Seq[String], Int) = {
+    require(preds.nonEmpty, "no predicates — nothing to prune on")
+    val live = dataFileStatuses(spark, dir)
+    val entries = readSidecarColumns(new Path(dir, SidecarFile),
+      spark.sparkContext.hadoopConfiguration,
+      Some(preds.flatMap(predCols).toSet), BloomShardCapBytes)
+      .getOrElse(Nil)
+    val kept = live.zip(freshEntries(live, entries)).collect {
+      case ((f, _), es) if keepFile(es.map(e => e.col -> e).toMap, preds) => f
+    }
+    (kept, live.length)
   }
 
   /** Read `dir` with zone-map file skipping: only files whose zones
     * overlap every predicate are handed to the scan. The caller MUST
     * still apply its real filter — pruning guarantees a superset.
     */
-  def prunedRead(spark: SparkSession, dir: String, manifest: DataFrame,
+  def prunedRead(spark: SparkSession, dir: String,
       preds: Seq[ZonePred]): PruneResult = {
-    val (kept, total) = keptFiles(manifest, preds)
+    val (kept, total) = keptLiveFiles(spark, dir, preds)
     val df =
       if (kept.isEmpty) spark.read.parquet(dir).limit(0)
+      else if (kept.length == total) spark.read.parquet(dir)
       else spark.read.parquet(kept: _*)
-    PruneResult(df, total, kept.size)
+    PruneResult(df, total, kept.length)
   }
 
   /** Sidecar INDEX filename inside the table directory. Underscore-
@@ -502,32 +513,11 @@ object ZoneMap {
     s"_zone_map.c$hex.$uuid.json"
   }
 
-  /** Persist the manifest as the table's sidecar: one bounded collect
-    * (files × columns rows), one FS write.
+  /** Driver-side sidecar write from an in-memory entry list (no Spark
+    * job for data already on the driver) — the one writer under
+    * [[refreshSidecar]] and the sketch refreshes.
     */
-  def writeSidecar(spark: SparkSession, tableDir: String, manifest: DataFrame): Unit = {
-    val hasBloom = manifest.columns.contains("bloom")
-    val entries = manifest
-      .select(("file" +: "col" +: "nRows" +: "hasStats" +: "vminNum" +:
-        "vmaxNum" +: "vminStr" +: "vmaxStr" +: "nNulls" +: "isFloat" +:
-        "mtime" +: "boundsLossy" +:
-        (if (hasBloom) Seq("bloom") else Nil)).map(org.apache.spark.sql.functions.col): _*)
-      .collect()
-      .map(r => ZoneEntry(r.getString(0), r.getString(1), r.getLong(2),
-        r.getBoolean(3),
-        if (r.isNullAt(4)) None else Some(r.getDouble(4)),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-        Option(r.getString(6)), Option(r.getString(7)), r.getLong(8),
-        r.getBoolean(9), r.getLong(10), r.getBoolean(11),
-        if (hasBloom) Option(r.getString(12)) else None))
-    writeSidecarEntries(tableDir, entries.toSeq)
-  }
-
-  /** Driver-side sidecar write from an in-memory entry list — the
-    * path [[refreshSidecar]] uses (no Spark job for data already on
-    * the driver).
-    */
-  def writeSidecarEntries(tableDir: String, entries: Seq[ZoneEntry]): Unit = {
+  private def writeSidecarEntries(tableDir: String, entries: Seq[ZoneEntry]): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     def entryArray(es: Seq[ZoneEntry]): String = {
       val root = m.createArrayNode()
@@ -605,51 +595,47 @@ object ZoneMap {
     val conf = spark.sparkContext.hadoopConfiguration
     val prior = readSidecarPath(new Path(tableDir, SidecarFile), conf)
       .getOrElse(Seq.empty)
-    // auxiliary (bloom/HLL) pseudo-entries are NOT footer-harvestable:
-    // they survive the refresh for unchanged live files and drop for
-    // rewritten/dead ones (a rewritten file's sketches re-attach on the
-    // next refreshBlooms/refreshHlls run — until then the file simply
-    // never bloom-prunes and poisons the NDV census to refusal, both
-    // sound)
-    val (priorBloom, priorRange) = prior.partition(e => isAuxKey(e.col))
     val trackCols =
-      if (cols.nonEmpty) cols else priorRange.map(_.col).distinct
-    require(trackCols.nonEmpty || priorBloom.nonEmpty,
+      if (cols.nonEmpty) cols else prior.map(_.col).filterNot(isAuxKey).distinct
+    require(trackCols.nonEmpty || prior.nonEmpty,
       "no existing sidecar and no columns named — nothing to track")
     // ONE listStatus carries both the file list and the live mtimes —
     // a per-file getFileStatus loop here would be 10⁶ NameNode calls
     // on the table this maintenance loop is for
-    val liveStatuses = dataFileStatuses(spark, tableDir)
-    val live = liveStatuses.map(_._1)
+    val live = dataFileStatuses(spark, tableDir)
     // a transiently empty listing (mid-overwrite window) must not
     // silently wipe the manifest and lose the tracked-column set
     require(live.nonEmpty, s"no parquet data files under $tableDir — " +
       "refusing to wipe the sidecar (retry after the write settles)")
-    val liveMtime = liveStatuses.toMap
-    val known = prior.map(_.file).toSet
-    val keepBloom = priorBloom.filter(e =>
-      liveMtime.get(e.file).contains(e.mtime) && e.mtime != 0L)
-    // prior entries survive only for still-live UNCHANGED files and
-    // still-tracked columns; mtime 0 (legacy entries) is always stale
-    val keepPrior = priorRange.filter(e =>
-      liveMtime.get(e.file).contains(e.mtime) && e.mtime != 0L &&
-        trackCols.contains(e.col))
-    val coveredCols = keepPrior.groupBy(_.file).view.mapValues(_.map(_.col).toSet)
-    val todo = live.filter(f =>
-      !trackCols.forall(coveredCols.getOrElse(f, Set.empty)))
+    // prior entries survive only where they speak for a live file, and
+    // range entries only for still-tracked columns
+    val kept = live.zip(freshEntries(live, prior)).map { case ((f, _), es) =>
+      f -> es.filter(e => isAuxKey(e.col) || trackCols.contains(e.col))
+    }
+    val todo = kept.collect {
+      case (f, es) if !trackCols.forall(es.map(_.col).toSet) => f
+    }
     val colsB = trackCols.toVector
-    val freshEntries: Seq[ZoneEntry] =
+    val harvested: Seq[ZoneEntry] =
       if (todo.isEmpty) Seq.empty
       else {
         val slices = math.min(todo.size, spark.sparkContext.defaultParallelism)
         spark.sparkContext.parallelize(todo, slices)
           .flatMap(f => readZones(f, colsB)).collect().toSeq
       }
-    val freshKeys = freshEntries.map(e => (e.file, e.col)).toSet
-    val merged = keepPrior.filterNot(e => freshKeys.contains((e.file, e.col))) ++
-      freshEntries ++ keepBloom
+    // a re-harvested file keeps only its auxiliary (bloom/HLL/KLL)
+    // entries: they are NOT footer-harvestable, so they survive for
+    // unchanged live files and drop for rewritten/dead ones (a
+    // rewritten file's sketches re-attach on the next sketch refresh —
+    // until then it never bloom-prunes and its census refuses, both
+    // sound)
+    val todoSet = todo.toSet
+    val merged = kept.flatMap { case (f, es) =>
+      if (todoSet(f)) es.filter(e => isAuxKey(e.col)) else es
+    } ++ harvested
     writeSidecarEntries(tableDir, merged)
-    (todo.size, (known -- liveMtime.keySet).size)
+    val liveFiles = live.map(l => normalizeUri(l._1)).toSet
+    (todo.size, prior.map(e => normalizeUri(e.file)).distinct.count(!liveFiles(_)))
   }
 
   /** Attach or incrementally re-attach per-file BLOOM FILTERS for
@@ -772,13 +758,8 @@ object ZoneMap {
       .getOrElse(return None)
     val live = dataFileStatuses(spark, tableDir)
     if (live.isEmpty) return None
-    val byFile = entries.filter(_.col == key)
-      .map(e => normalizeUri(e.file) -> e).toMap
-    val sketches = live.map { case (f, mtime) =>
-      byFile.get(normalizeUri(f))
-        .filter(e => e.mtime != 0L && e.mtime == mtime)
-        .flatMap(_.kll)
-    }
+    val sketches = freshEntries(live, entries.filter(_.col == key))
+      .map(_.flatMap(_.kll).headOption)
     if (sketches.exists(_.isEmpty)) return None
     try {
       val parts = sketches.flatten.map { b64 =>
@@ -826,16 +807,10 @@ object ZoneMap {
       require(cols.isEmpty, s"no parquet data files under $tableDir")
       return 0
     }
-    val liveM = statuses.toMap
-    val covered: Map[String, Set[String]] = prior
-      .filter(e => e.col.startsWith(prefix) && e.mtime != 0L &&
-        liveM.get(e.file).contains(e.mtime))
-      .groupBy(_.file)
-      .map { case (f, es) =>
-        f -> es.map(_.col.stripPrefix(prefix)).toSet
-      }
-    val todo = statuses.filter { case (f, _) =>
-      !tracked.forall(covered.getOrElse(f, Set.empty))
+    val todo = statuses.zip(freshEntries(statuses, prior)).collect {
+      case (st, es) if !tracked.forall(es.collect {
+        case e if e.col.startsWith(prefix) => e.col.stripPrefix(prefix)
+      }.toSet) => st
     }
     if (todo.isEmpty) return 0
     val fresh = build(spark.read.parquet(todo.map(_._1): _*), todo, tracked)
@@ -917,13 +892,8 @@ object ZoneMap {
       .getOrElse(return None)
     val live = dataFileStatuses(spark, tableDir)
     if (live.isEmpty) return None
-    val byFile = entries.filter(_.col == key)
-      .map(e => normalizeUri(e.file) -> e).toMap
-    val sketches = live.map { case (f, mtime) =>
-      byFile.get(normalizeUri(f))
-        .filter(e => e.mtime != 0L && e.mtime == mtime)
-        .flatMap(_.hll)
-    }
+    val sketches = freshEntries(live, entries.filter(_.col == key))
+      .map(_.flatMap(_.hll).headOption)
     if (sketches.exists(_.isEmpty)) return None
     try {
       val union = new org.apache.datasketches.hll.Union(21)
@@ -946,8 +916,8 @@ object ZoneMap {
     val prior = readSidecarPath(
       new Path(tableDir, SidecarFile),
       spark.sparkContext.hadoopConfiguration).getOrElse(Seq.empty)
-    val freshKeys = fresh.map(e => (e.file, e.col)).toSet
-    val merged = prior.filterNot(e => freshKeys.contains((e.file, e.col))) ++ fresh
+    val freshKeys = fresh.map(e => (normalizeUri(e.file), e.col)).toSet
+    val merged = prior.filterNot(e => freshKeys.contains((normalizeUri(e.file), e.col))) ++ fresh
     writeSidecarEntries(tableDir, merged)
     fresh.size
   }
@@ -1002,17 +972,12 @@ object ZoneMap {
       .getOrElse(return refusedAll)
     val live = dataFileStatuses(spark, tableDir)
     if (live.isEmpty) return refusedAll
-    val byColFile: Map[String, Map[String, ZoneEntry]] = entries
-      .groupBy(_.col)
-      .map { case (c, es) => c -> es.map(e => normalizeUri(e.file) -> e).toMap }
+    val byCol = entries.groupBy(_.col)
     columns.map { column =>
-      val byFile = byColFile.getOrElse(column, Map.empty)
       // EVERY live file must be freshly covered; extra (deleted-file)
       // entries are ignored — they no longer contribute rows
-      val covered = live.map { case (f, mtime) =>
-        byFile.get(normalizeUri(f))
-          .filter(e => e.hasStats && e.mtime != 0L && e.mtime == mtime)
-      }
+      val covered = freshEntries(live, byCol.getOrElse(column, Nil))
+        .map(_.find(_.hasStats))
       column -> (if (covered.exists(_.isEmpty)) None
       else {
         val es = covered.map(_.get)
@@ -1033,11 +998,8 @@ object ZoneMap {
     }.toMap
   }
 
-  private def normalizeUri(file: String): String =
-    new Path(file).toUri.getPath
-
   /** FS-level full sidecar read (every tracked column) — the
-    * maintenance path ([[refreshSidecar]], ZoneMapJob reporting). The
+    * maintenance path ([[refreshSidecar]], the sketch refreshes). The
     * optimizer rule uses [[readSidecarColumns]] instead, which touches
     * only the predicate columns' shards.
     */

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
@@ -87,16 +86,10 @@ case class ManifestCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val col = shardCols.find(c => !ZoneMap.isAuxKey(c)).getOrElse(return None)
     val entries = ZoneSkipRule.cachedSidecar(root, conf, Set(col))
       .getOrElse(return None)
-    val byFile = entries.map(e => ZoneSkipRule.normalize(e.file) -> e).toMap
     val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-    if (statuses.isEmpty) return Some(0L)
-    var n = 0L
-    statuses.foreach { st =>
-      val e = byFile.getOrElse(ZoneSkipRule.normalize(st.getPath.toString),
-        return None)
-      if (e.mtime == 0L || e.mtime != st.getModificationTime) return None
-      n += e.nRows
-    }
-    Some(n)
+    val covered = ZoneMap.freshEntries(
+      statuses.map(st => (st.getPath.toString, st.getModificationTime)), entries)
+    if (covered.exists(_.isEmpty)) None
+    else Some(covered.map(_.head.nRows).sum)
   }
 }

@@ -18,7 +18,7 @@ import graft.operators.ZoneMap.{BloomEq, NullnessPred, NumRange, OrPred, StrRang
 /** TRANSPARENT zone-map data skipping as an injected optimizer rule
   * (`spark.sql.extensions=graft.GraftExtensions`): a plain
   * `spark.read.parquet(dir).filter(...)` over a table whose directory
-  * carries a `_zone_map.json` sidecar (the [[ZoneMap.writeSidecar]] /
+  * carries a `_zone_map.json` sidecar (the [[ZoneMap.refreshSidecar]] /
   * `ZoneMapJob` product) scans ONLY the files whose zones can satisfy
   * the filter — the explicit [[ZoneMap.prunedRead]] entry point,
   * promoted to every query in every session without touching query
@@ -107,7 +107,7 @@ case class ZoneSkipRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val bloomCap = spark.conf
       .getOption("spark.graft.zonemap.bloom.maxShardBytes")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(256L * 1024 * 1024)
+      .getOrElse(ZoneMap.BloomShardCapBytes)
     // predicate columns FIRST: the sharded sidecar reads only their
     // slices — O(files × predicate cols) driver bytes in-planning, no
     // matter how wide the tracked-column set is
@@ -117,53 +117,37 @@ case class ZoneSkipRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // no sidecar, or none of the predicate columns tracked: nothing
     // can prune — skip the listing walk entirely
     if (entries.isEmpty || entries.get.isEmpty) return None
-    val byFile: Map[String, Map[String, ZoneEntry]] = entries.get
-      .groupBy(e => ZoneSkipRule.normalize(e.file))
-      .map { case (f, es) => f -> es.map(e => e.col -> e).toMap }
-    // the index already carries live FileStatus mtimes — use them to
-    // reject STALE zones: between an in-place rewrite (compactor) and
-    // the next refreshSidecar, path identity alone would prune on the
-    // old file's bounds. An entry whose harvest mtime is unknown (0,
-    // legacy) or differs from the live mtime is treated as no-stats.
-    def keep(st: FileStatusWithMetadata): Boolean = {
-      val nf = ZoneSkipRule.normalize(st.getPath.toString)
-      byFile.get(nf).forall { es => // unmentioned file: keep
-        val live = st.getModificationTime
-        val fresh = es.filter { case (_, e) => e.mtime != 0L && e.mtime == live }
-        ZoneMap.keepFile(fresh, preds)
+    // the index already carries live FileStatus mtimes — the freshness
+    // rule uses them to reject STALE zones: between an in-place rewrite
+    // (compactor) and the next refreshSidecar, path identity alone
+    // would prune on the old file's bounds. A file without fresh
+    // entries is kept.
+    val dirs = fs.location.listFiles(Nil, Nil)
+    val files = dirs.flatMap(_.files)
+    val kept = files.zip(ZoneMap.freshEntries(
+        files.map(st => (st.getPath.toString, st.getModificationTime)), entries.get))
+      .collect { case (st, es) if ZoneMap.keepFile(es.map(e => e.col -> e).toMap, preds) => st }
+    if (kept.length == files.length) return None
+    val newIndex =
+      if (fs.partitionSchema.isEmpty) new KeptFilesIndex(kept.toIndexedSeq)
+      else {
+        // PARTITIONED relation (the common 100 TB lake layout): zone-
+        // prune the files INSIDE each partition directory while keeping
+        // the partition values — the kept index still answers partition
+        // filters, so Spark's own partition pruning composes with the
+        // footer-zone pruning instead of being traded away for it.
+        // Partition-column conjuncts in `cond` extract as predicates the
+        // manifest never tracks (partition values live in paths, not
+        // footers) and keep every file — harmless; the partition filter
+        // does that pruning at planning time.
+        val keptPaths = kept.map(_.getPath).toSet
+        val keptDirs = dirs.flatMap { pd =>
+          val k = pd.files.filter(st => keptPaths(st.getPath))
+          if (k.isEmpty) None else Some(PartitionDirectory(pd.values, k))
+        }
+        new KeptPartitionedIndex(root, fs.partitionSchema, keptDirs)
       }
-    }
-    if (fs.partitionSchema.isEmpty) {
-      val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-      val kept = statuses.filter(keep)
-      if (kept.length == statuses.length) return None
-      val newIndex = new KeptFilesIndex(kept.toIndexedSeq)
-      Some(lr.copy(relation = fs.copy(location = newIndex)(spark)))
-    } else {
-      // PARTITIONED relation (the common 100 TB lake layout): zone-
-      // prune the files INSIDE each partition directory while keeping
-      // the partition values — the kept index still answers partition
-      // filters, so Spark's own partition pruning composes with the
-      // footer-zone pruning instead of being traded away for it.
-      // Partition-column conjuncts in `cond` extract as predicates the
-      // manifest never tracks (partition values live in paths, not
-      // footers) and keep every file — harmless; the partition filter
-      // does that pruning at planning time.
-      val dirs = fs.location.listFiles(Nil, Nil)
-      var total = 0
-      var keptN = 0
-      val keptDirs = dirs.flatMap { pd =>
-        val kept = pd.files.filter(keep)
-        total += pd.files.length
-        keptN += kept.length
-        if (kept.isEmpty) None
-        else Some(org.apache.spark.sql.execution.datasources
-          .PartitionDirectory(pd.values, kept))
-      }
-      if (keptN == total) return None
-      val newIndex = new KeptPartitionedIndex(root, fs.partitionSchema, keptDirs)
-      Some(lr.copy(relation = fs.copy(location = newIndex)(spark)))
-    }
+    Some(lr.copy(relation = fs.copy(location = newIndex)(spark)))
   }
 }
 
@@ -228,13 +212,6 @@ final class KeptPartitionedIndex(
 }
 
 object ZoneSkipRule {
-
-  /** Scheme-independent file identity: the manifest records paths as
-    * the harvester listed them, the scan may render them with an
-    * explicit scheme/authority — compare URI paths.
-    */
-  private[plans] def normalize(file: String): String =
-    new Path(file).toUri.getPath
 
   private val cache = new ConcurrentHashMap[String, (Long, Option[Seq[ZoneEntry]])]()
 

@@ -40,14 +40,8 @@ object SearchOps {
         .write.mode("overwrite").parquet(s"$out/table")
       // l_orderkey rides along for the metadata-aggregate gate
       // (q_zonemap_agg): counts + int extrema answerable sidecar-only
-      val mf = ZoneMap.build(s, s"$out/table",
-          Seq("l_quantity", "l_extendedprice", "l_orderkey"))
-        .persist()
-      mf.write.mode("overwrite").parquet(s"$out/zone_map")
-      // the sharded JSON sidecar too: the gate's second census routes
-      // through the TRANSPARENT ZoneSkipRule, which reads exactly this
-      ZoneMap.writeSidecar(s, s"$out/table", mf)
-      mf.unpersist(blocking = false)
+      ZoneMap.refreshSidecar(s, s"$out/table",
+        Seq("l_quantity", "l_extendedprice", "l_orderkey"))
       // the PARTITIONED lake shape (Hive k=v layout) for the composed-
       // pruning gate: partition dirs by return flag, files range-
       // clustered on quantity within each dir so footer zones are
@@ -57,8 +51,7 @@ object SearchOps {
         .repartitionByRange(6, org.apache.spark.sql.functions.col("l_quantity"))
         .write.mode("overwrite").partitionBy("l_returnflag")
         .parquet(s"$out/table_part")
-      ZoneMap.writeSidecar(s, s"$out/table_part",
-        ZoneMap.build(s, s"$out/table_part", Seq("l_quantity")))
+      ZoneMap.refreshSidecar(s, s"$out/table_part", Seq("l_quantity"))
       // the UNCLUSTERED point-lookup shape (q_bloom_skip): orders
       // spread round-robin on o_orderkey mod 16, so every file's
       // [min, max] on the id columns covers nearly the whole domain —
@@ -72,8 +65,7 @@ object SearchOps {
         .repartitionByRange(16, col("grp"))
         .drop("grp")
         .write.mode("overwrite").parquet(s"$out/table_id")
-      ZoneMap.writeSidecar(s, s"$out/table_id",
-        ZoneMap.build(s, s"$out/table_id", Seq("okey2", "okey_str")))
+      ZoneMap.refreshSidecar(s, s"$out/table_id", Seq("okey2", "okey_str"))
       ZoneMap.refreshBlooms(s, s"$out/table_id", Seq("okey2", "okey_str"))
       // HLL shards for the metadata NDV census gate (q_ndv_census)
       ZoneMap.refreshHlls(s, s"$out/table_id", Seq("okey2", "o_orderstatus"))
@@ -264,7 +256,7 @@ object SearchOps {
               |ORDER BY zbucket""".stripMargin)),
 
     // Manifest-driven data skipping end-to-end: the z-ordered lineitem
-    // copy + its parquet-FOOTER zone map answer a 2-D range census
+    // copy + its parquet-FOOTER zone sidecar answer a 2-D range census
     // through ZoneMap.prunedRead — whole files are dropped BEFORE the
     // scan (the Delta/Iceberg data-skipping shape; at 100 TB the
     // manifest prunes the file listing itself, not just row groups).
@@ -275,8 +267,7 @@ object SearchOps {
       "q_zonemap_prune",
       (s, d) => {
         val root = zonemapSetup.dir(s, d)
-        val mf = s.read.parquet(s"$root/zone_map")
-        val pr = ZoneMap.prunedRead(s, s"$root/table", mf, Seq(
+        val pr = ZoneMap.prunedRead(s, s"$root/table", Seq(
           ZoneMap.NumRange("l_quantity", None, Some(5.0)),
           ZoneMap.NumRange("l_extendedprice", None, Some(20000.0))))
         // SECOND census through the TRANSPARENT rule: ZoneSkipRule on
@@ -688,7 +679,7 @@ object SearchOps {
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .repartitionByRange(24, col("o_orderkey"))
           .write.mode("overwrite").parquet(table)
-        ZoneMap.writeSidecar(s, table, ZoneMap.build(s, table, Seq("o_orderkey")))
+        ZoneMap.refreshSidecar(s, table, Seq("o_orderkey"))
         ZoneMap.refreshBlooms(s, table, Seq("o_orderkey"))
         graft.Sessions.isolatedWithRules(s, r => Seq(graft.plans.ZoneSkipRule(r))) { r =>
           def census() = r.read.parquet(table)

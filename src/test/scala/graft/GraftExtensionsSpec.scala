@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
@@ -43,6 +44,39 @@ class GraftExtensionsSpec extends AnyFunSuite {
           " winnow_fps('a b c d e f g h i j', 5, 4) AS e").collect().head
       assert(fps.getSeq[String](0).nonEmpty &&
         fps.getSeq[String](0) == fps.getSeq[String](1))
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      old.foreach { o =>
+        SparkSession.setDefaultSession(o)
+        SparkSession.setActiveSession(o)
+      }
+    }
+  }
+
+  test("every listed native function resolves with the extension and after register") {
+    val names = graft.functions.Functions.natives.map(_.name)
+    assert(names.distinct.length == 7, names)
+    val old = SparkSession.getDefaultSession
+    def fresh(b: SparkSession.Builder): SparkSession = {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      b.master("local[2]").appName("graft-ext-test")
+        .config("spark.ui.enabled", "false").getOrCreate()
+    }
+    def registered(s: SparkSession): Seq[String] =
+      names.filter(n => s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    try {
+      val ext = fresh(SparkSession.builder().withExtensions(new GraftExtensions))
+      assert(registered(ext) == names)
+      graft.functions.Functions.natives.foreach { n =>
+        val info = ext.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(n.name))
+        assert(info.map(_.getClassName) == Some(n.cls.getName), n.name)
+      }
+      val plain = fresh(SparkSession.builder())
+      assert(registered(plain).isEmpty, "a session without the extension has none yet")
+      graft.functions.Functions.register(plain)
+      assert(registered(plain) == names)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -16,6 +16,13 @@ class ProfileSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("Physical Plan"), plan)
   }
 
+  // runs before any other test builds setup_zonemap_table in this JVM
+  test("a setup task is measured once per JVM, whatever passes says") {
+    val rows = Profile.run(spark, sfDir, Seq("setup_zonemap_table"), passes = 3)
+    assert(rows.map(r => (r.name, r.pass)) == Seq(("setup_zonemap_table", 1)))
+    assert(rows.head.jobs > 0, rows)
+  }
+
   test("a bench setup task is a valid name") {
     val rows = Profile.run(spark, sfDir, Seq("setup_zonemap_table"), passes = 1)
     assert(rows.map(_.name) == Seq("setup_zonemap_table"))

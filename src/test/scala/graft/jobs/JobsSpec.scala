@@ -13,6 +13,8 @@ import graft.train.Trainer
   * ingest batches (the second carries late rewards and new decisions,
   * so its file overlaps the first), a groom, then a cold and a warm
   * train. Checks the store the chain leaves and the spans each job opens.
+  * The lake-index jobs (zone map, bloom, HLL, KLL, compaction) each run
+  * once on a small parquet table.
   */
 class JobsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -93,5 +95,63 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
       "a warm train reuses phase 1: " + warm)
     assert(warm("train.load").calls == 1)
     assert(new java.io.File(s"$out/${graft.train.ModelStore.latestKey(model)}").isFile)
+  }
+
+  /** A 6-file parquet table: id 0..599 range-clustered, v = id / 2,
+    * s with 7 distinct values.
+    */
+  private def lakeTable(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("jobs_lake").toString + "/t"
+    (0 until 600).map(i => (i.toLong, i / 2.0, s"s${i % 7}")).toDF("id", "v", "s")
+      .repartitionByRange(6, col("id")).write.parquet(dir)
+    dir
+  }
+
+  /** Runs `body`, checks it opened exactly span `job`, once, with
+    * jobs; returns what `body` returned.
+    */
+  private def inOneSpan[A](job: String)(body: => A): A = {
+    var out: Option[A] = None
+    val s = spansOf(s"$job-root") { out = Some(body) }
+    assert(s.keySet == Set(job) && s(job).calls == 1 && s(job).jobs > 0, s)
+    out.get
+  }
+
+  test("ZoneMapJob harvests the sidecar and answers the metadata census") {
+    val dir = lakeTable()
+    val census = inOneSpan("zonemap")(ZoneMapJob.run(spark, dir, Seq("id", "v")))
+    assert(census("id") == Some(graft.operators.ZoneMap.ManifestAgg(600L, 600L, Some((0.0, 599.0)))))
+    assert(census("v").map(_.nRows) == Some(600L) && census("v").get.bounds.isEmpty,
+      "float bounds are refused")
+    assert(new java.io.File(dir, graft.operators.ZoneMap.SidecarFile).isFile)
+  }
+
+  test("BloomMapJob writes one bloom per file and column") {
+    val dir = lakeTable()
+    assert(inOneSpan("bloommap")(BloomMapJob.run(spark, dir, Seq("id", "s"))) == 12)
+  }
+
+  test("HllMapJob sketches every file and answers the NDV census") {
+    val dir = lakeTable()
+    val ndv = inOneSpan("hllmap")(HllMapJob.run(spark, dir, Seq("s")))
+    assert(ndv("s").map(_.estimate) == Some(7L))
+  }
+
+  test("KllMapJob sketches every file and answers the quantile census") {
+    val dir = lakeTable()
+    val q = inOneSpan("kllmap")(KllMapJob.run(spark, dir, Seq("id")))
+    val c = q("id").getOrElse(fail("a fresh table must answer"))
+    assert(c.n == 600L && c.values.length == 3)
+    assert(math.abs(c.values.head - 299.5) <= 2 * c.rankError * 600 + 1, c)
+  }
+
+  test("CompactJob packs the small files and keeps every row") {
+    val dir = lakeTable()
+    val res = inOneSpan("compact")(CompactJob.run(spark, dir, targetBytes = 1L << 30))
+    assert(res.filesIn == 6 && res.filesOut == 1, res)
+    assert(graft.operators.ZoneMap.dataFiles(spark, dir).length == 1)
+    assert(spark.read.parquet(dir).agg(count(lit(1)), sum("id")).head() ==
+      org.apache.spark.sql.Row(600L, (0 until 600).sum.toLong))
   }
 }

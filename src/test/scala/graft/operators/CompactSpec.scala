@@ -27,7 +27,7 @@ class CompactSpec extends AnyFunSuite with SparkTestBase {
       (0 until 50).map(j => (1000 + i * 50L + j, "b")).toDF("id", "p")
         .coalesce(1).write.mode("append").partitionBy("p").parquet(dir)
     }
-    ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("id")))
+    ZoneMap.refreshSidecar(spark, dir, Seq("id"))
     assert(ZoneMap.refreshBlooms(spark, dir, Seq("id")) === 10)
 
     val before = spark.read.parquet(dir)

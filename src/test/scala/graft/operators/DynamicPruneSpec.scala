@@ -23,7 +23,7 @@ class DynamicPruneSpec extends AnyFunSuite with SparkTestBase {
       .toDF("id", "grp")
       .repartitionByRange(12, $"grp")
       .write.mode("overwrite").parquet(d)
-    ZoneMap.writeSidecar(spark, d, ZoneMap.build(spark, d, Seq("id")))
+    ZoneMap.refreshSidecar(spark, d, Seq("id"))
     ZoneMap.refreshBlooms(spark, d, Seq("id"))
     d
   }

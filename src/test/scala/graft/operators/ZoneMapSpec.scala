@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.operators.ZoneMap.{NumRange, StrRange, ZoneEntry}
 
-/** Zone-map manifest + file pruning: footer stats must be EXACT on
+/** Zone-map sidecar + file pruning: footer stats must be EXACT on
   * what was written, pruning must never drop a matching row (the
-  * superset contract), and the prune decision table (no-stats /
-  * all-null / type-mismatch) must behave as documented.
+  * superset contract) — also for files added or rewritten after the
+  * harvest — and the prune decision table (no-stats / all-null /
+  * type-mismatch) must behave as documented.
   */
 class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
 
@@ -23,6 +24,10 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     df.repartitionByRange(parts, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(dir)
 
+  private def sidecar(dir: String): Seq[ZoneEntry] =
+    ZoneMap.readSidecarPath(new org.apache.hadoop.fs.Path(dir, ZoneMap.SidecarFile),
+      spark.sparkContext.hadoopConfiguration).get
+
   test("manifest carries exact per-file min/max/null/row stats") {
     import spark.implicits._
     val dir = scratch() + "/t"
@@ -30,8 +35,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     Seq((1L, 10.0, "apple"), (2L, -3.5, "pear"), (3L, 7.25, null))
       .toDF("k", "v", "s")
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    val mf = ZoneMap.build(spark, dir, Seq("k", "v", "s")).as[ZoneEntry]
-      .collect().map(e => e.col -> e).toMap
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v", "s"))
+    val mf = sidecar(dir).map(e => e.col -> e).toMap
     assert(mf.keySet === Set("k", "v", "s"))
     assert(mf.values.forall(e => e.hasStats && e.nRows == 3))
     assert(mf("k").vminNum.contains(1.0))
@@ -51,9 +56,9 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
       .map(i => (i.toLong, (i % 97).toDouble, s"u${i % 13}"))
       .toDF("k", "v", "s")
     writePartitioned(df, dir, 16)
-    val mf = ZoneMap.build(spark, dir, Seq("k", "v"))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v"))
     val preds = Seq(NumRange("k", Some(100.0), Some(340.0)))
-    val pr = ZoneMap.prunedRead(spark, dir, mf, preds)
+    val pr = ZoneMap.prunedRead(spark, dir, preds)
     assert(pr.filesTotal === 16)
     assert(pr.filesKept < pr.filesTotal, "range-sorted files must skip")
     val got = pr.df.filter(col("k").between(100, 340))
@@ -63,19 +68,78 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     assert(got === want)
   }
 
+  test("a file appended after the harvest is read: the pruned read stays exact") {
+    import spark.implicits._
+    val dir = scratch() + "/t"
+    writePartitioned((0 until 4000)
+      .map(i => (i.toLong, (i % 97).toDouble)).toDF("k", "v"), dir, 16)
+    ZoneMap.refreshSidecar(spark, dir, Seq("k"))
+    // a late file the sidecar never saw, its rows inside the predicate
+    (200 until 260).map(i => (i.toLong, -1.0)).toDF("k", "v")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val pr = ZoneMap.prunedRead(spark, dir, Seq(NumRange("k", Some(100.0), Some(340.0))))
+    assert(pr.filesTotal === 17)
+    assert(pr.filesKept < pr.filesTotal, "the harvested files still skip")
+    def filtered(df: DataFrame) = df.filter(col("k").between(100, 340))
+      .orderBy("k", "v").as[(Long, Double)].collect().toSeq
+    val want = filtered(spark.read.parquet(dir))
+    assert(want.count(_._2 == -1.0) === 60)
+    assert(filtered(pr.df) === want)
+  }
+
+  test("a file rewritten in place with new bounds: its matching rows come back") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val dir = scratch() + "/t"
+    writePartitioned((0 until 400).map(i => (i.toLong, i.toDouble)).toDF("k", "v"), dir, 4)
+    ZoneMap.refreshSidecar(spark, dir, Seq("k"))
+    val preds = Seq(NumRange("k", Some(900.0), Some(950.0)))
+    assert(ZoneMap.prunedRead(spark, dir, preds).filesKept === 0)
+    // same path, new content [900, 949] and a new mtime: the sidecar
+    // still holds the old file's bounds
+    val target = ZoneMap.dataFiles(spark, dir).head
+    val tmp = scratch() + "/rw"
+    (900 until 950).map(i => (i.toLong, -1.0)).toDF("k", "v")
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(target)
+    val fs = p.getFileSystem(conf)
+    val before = fs.getFileStatus(p).getModificationTime
+    FileUtil.copy(fs, new Path(ZoneMap.dataFiles(spark, tmp).head), fs, p, false, true, conf)
+    fs.setTimes(p, before + 60000L, -1)
+    val pr = ZoneMap.prunedRead(spark, dir, preds)
+    assert(pr.filesKept === 1, "the stale entry must not prune the rewritten file")
+    val got = pr.df.filter(col("k").between(900, 950)).as[(Long, Double)].collect()
+    assert(got.map(_._1).sorted.toSeq === (900L until 950L))
+  }
+
+  test("freshEntries: a known, equal mtime on the same URI path speaks for a live file") {
+    def entry(file: String, mtime: Long) = ZoneEntry(file, "k", 1, hasStats = true,
+      Some(0.0), Some(1.0), None, None, 0, isFloat = false, mtime = mtime)
+    val bare = entry("/t/a.parquet", 5L)         // bare path, scheme-qualified live path
+    val legacy = entry("file:/t/b.parquet", 0L)  // mtime 0: never fresh
+    val stale = entry("file:/t/c.parquet", 8L)   // rewritten since the harvest
+    val qualified = entry("file:/t/d.parquet", 11L) // scheme-qualified, bare live path
+    val gone = entry("file:/t/gone.parquet", 3L) // no live file
+    val live = Seq(("file:/t/a.parquet", 5L), ("/t/b.parquet", 0L), ("/t/c.parquet", 9L),
+      ("/t/d.parquet", 11L), ("/t/e.parquet", 4L)) // e: unmentioned
+    assert(ZoneMap.freshEntries(live, Seq(bare, legacy, stale, qualified, gone)) ===
+      Seq(Seq(bare), Nil, Nil, Seq(qualified), Nil))
+  }
+
   test("conjunction prunes on either column; open-ended bounds work") {
     import spark.implicits._
     val dir = scratch() + "/t"
     val df = (0 until 2000).map(i => (i.toLong, i.toDouble / 2)).toDF("k", "v")
     writePartitioned(df, dir, 8)
-    val mf = ZoneMap.build(spark, dir, Seq("k", "v"))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v"))
     // v tracks k here, so a v-only bound prunes too
-    val (keptV, total) = ZoneMap.keptFiles(mf, Seq(NumRange("v", None, Some(100.0))))
+    val (keptV, total) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("v", None, Some(100.0))))
     assert(total === 8 && keptV.size < 8)
-    val (keptBoth, _) = ZoneMap.keptFiles(
-      mf, Seq(NumRange("k", Some(1990.0), None), NumRange("v", None, Some(100.0))))
+    val (keptBoth, _) = ZoneMap.keptLiveFiles(spark, dir,
+      Seq(NumRange("k", Some(1990.0), None), NumRange("v", None, Some(100.0))))
     assert(keptBoth.isEmpty, "contradictory conjunction leaves no file")
-    val pr = ZoneMap.prunedRead(spark, dir, mf,
+    val pr = ZoneMap.prunedRead(spark, dir,
       Seq(NumRange("k", Some(1990.0), None), NumRange("v", None, Some(100.0))))
     assert(pr.df.count() === 0L && pr.df.columns.toSeq === Seq("k", "v"))
   }
@@ -86,8 +150,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val df = ('a' to 'z').flatMap(c => (0 until 40).map(i => (f"$c$i%02d", i.toLong)))
       .toDF("k", "n") // k: "a00".."z39", range-sorted into files
     writePartitioned(df, dir, 6)
-    val mf = ZoneMap.build(spark, dir, Seq("k"))
-    val pr = ZoneMap.prunedRead(spark, dir, mf,
+    ZoneMap.refreshSidecar(spark, dir, Seq("k"))
+    val pr = ZoneMap.prunedRead(spark, dir,
       Seq(StrRange("k", Some("c"), Some("d~"))))
     assert(pr.filesKept < pr.filesTotal)
     val got = pr.df.filter(col("k") >= "c" && col("k") <= "d~")
@@ -102,35 +166,36 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val dir = scratch() + "/t"
     Seq((1L, Option.empty[Double]), (2L, Option.empty[Double]))
       .toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(dir)
-    val mf = ZoneMap.build(spark, dir, Seq("v"))
-    val (kept, total) = ZoneMap.keptFiles(mf, Seq(NumRange("v", Some(0.0), None)))
+    ZoneMap.refreshSidecar(spark, dir, Seq("v"))
+    val (kept, total) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("v", Some(0.0), None)))
     assert(total === 1 && kept.isEmpty, "all-null file must prune")
     // mixed null/value file: bounds come from the values, file keeps
     val dir2 = scratch() + "/t2"
     Seq((1L, Some(5.0)), (2L, Option.empty[Double]))
       .toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(dir2)
-    val mf2 = ZoneMap.build(spark, dir2, Seq("v"))
-    val (kept2, _) = ZoneMap.keptFiles(mf2, Seq(NumRange("v", Some(4.0), Some(6.0))))
+    ZoneMap.refreshSidecar(spark, dir2, Seq("v"))
+    val (kept2, _) = ZoneMap.keptLiveFiles(spark, dir2, Seq(NumRange("v", Some(4.0), Some(6.0))))
     assert(kept2.size === 1)
   }
 
   test("decision table: no-stats keeps, type mismatch keeps, missing col keeps") {
-    import spark.implicits._
-    val manifest = Seq(
+    val entries = Seq(
       // f1: no usable stats on k -> never pruned on k
       ZoneEntry("f1", "k", 10, hasStats = false, None, None, None, None, 0, isFloat = false),
       // f2: string zone on k -> a NumRange on k is a type mismatch
       ZoneEntry("f2", "k", 10, hasStats = true, None, None, Some("a"), Some("b"), 0, isFloat = false),
       // f3: numeric zone far outside the predicate -> prunes
       ZoneEntry("f3", "k", 10, hasStats = true, Some(1000.0), Some(2000.0), None, None, 0, isFloat = false)
-    ).toDF()
-    val (kept, total) = ZoneMap.keptFiles(manifest, Seq(NumRange("k", Some(0.0), Some(5.0))))
-    assert(total === 3 && kept.toSet === Set("f1", "f2"))
-    // predicate on a column absent from the manifest: keep everything
-    val (kept2, _) = ZoneMap.keptFiles(manifest, Seq(NumRange("zzz", Some(0.0), Some(1.0))))
-    assert(kept2.toSet === Set("f1", "f2", "f3"))
+    )
+    def kept(preds: Seq[ZoneMap.ZonePred]): Set[String] =
+      entries.filter(e => ZoneMap.keepFile(Map(e.col -> e), preds)).map(_.file).toSet
+    assert(kept(Seq(NumRange("k", Some(0.0), Some(5.0)))) === Set("f1", "f2"))
+    // predicate on a column absent from the file's entries: keep
+    assert(kept(Seq(NumRange("zzz", Some(0.0), Some(1.0)))) === Set("f1", "f2", "f3"))
+    // a file with no (fresh) entries at all is kept
+    assert(ZoneMap.keepFile(Map.empty, Seq(NumRange("k", Some(0.0), Some(5.0)))))
     // StrRange against the string zone prunes / keeps by bounds
-    val (kept3, _) = ZoneMap.keptFiles(manifest, Seq(StrRange("k", Some("c"), None)))
+    val kept3 = kept(Seq(StrRange("k", Some("c"), None)))
     assert(!kept3.contains("f2") && kept3.contains("f1"))
   }
 
@@ -155,8 +220,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val dir = scratch() + "/nan"
     Seq((1L, 1.0), (2L, Double.NaN)).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    val mf = ZoneMap.build(spark, dir, Seq("v"))
-    val (keptLo, _) = ZoneMap.keptFiles(mf, Seq(NumRange("v", Some(5.0), None)))
+    ZoneMap.refreshSidecar(spark, dir, Seq("v"))
+    val (keptLo, _) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("v", Some(5.0), None)))
     assert(keptLo.size === 1, "float lo-bound must not prune (NaN rows match)")
     val sparkMatches = spark.read.parquet(dir).filter(col("v") >= 5.0).count()
     assert(sparkMatches === 1L, "Spark total order: NaN >= 5.0")
@@ -168,10 +233,10 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val dirF = scratch() + "/fl"
     Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(dirF)
-    val mfF = ZoneMap.build(spark, dirF, Seq("v"))
-    val (keptFLo, _) = ZoneMap.keptFiles(mfF, Seq(NumRange("v", Some(5.0), None)))
+    ZoneMap.refreshSidecar(spark, dirF, Seq("v"))
+    val (keptFLo, _) = ZoneMap.keptLiveFiles(spark, dirF, Seq(NumRange("v", Some(5.0), None)))
     assert(keptFLo.size === 1, "float zones never prune on a lower bound")
-    val (keptFHi, _) = ZoneMap.keptFiles(mfF, Seq(NumRange("v", None, Some(0.5))))
+    val (keptFHi, _) = ZoneMap.keptLiveFiles(spark, dirF, Seq(NumRange("v", None, Some(0.5))))
     assert(keptFHi.isEmpty, "float hi-bound pruning stays sound")
     assert(spark.read.parquet(dirF).filter(col("v") <= 0.5).count() === 0L)
 
@@ -180,8 +245,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val dir2 = scratch() + "/utf8"
     Seq((1L, "￿"), (2L, "😀")).toDF("k", "s")
       .coalesce(1).write.mode("overwrite").parquet(dir2)
-    val mf2 = ZoneMap.build(spark, dir2, Seq("s"))
-    val (keptS, _) = ZoneMap.keptFiles(mf2, Seq(StrRange("s", Some("￿"), None)))
+    ZoneMap.refreshSidecar(spark, dir2, Seq("s"))
+    val (keptS, _) = ZoneMap.keptLiveFiles(spark, dir2, Seq(StrRange("s", Some("￿"), None)))
     assert(keptS.size === 1, "file holds a matching row; byte-order max is the emoji")
 
     // one-sided sidecar entry must keep, never crash
@@ -210,8 +275,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     assert(ZoneMap.refreshSidecar(spark, dir) === ((1, 0)))
     val es = entries()
     assert(es.map(_.file).distinct.size === 3)
-    // the refreshed manifest prunes exactly like a fresh build
-    val (kept, total) = ZoneMap.keptFiles(es.toDF(), Seq(NumRange("k", Some(120.0), None)))
+    // the refreshed sidecar prunes the appended file like the others
+    val (kept, total) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("k", Some(120.0), None)))
     assert(total === 3 && kept.size === 1)
 
     // a file REWRITTEN IN PLACE (same path, new content/mtime) must
@@ -227,7 +292,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     org.apache.hadoop.fs.FileUtil.copy(
       fsy, new Path(tmpFile), fsy, new Path(rewrite), false, true, conf)
     assert(ZoneMap.refreshSidecar(spark, dir) === ((1, 0)))
-    val (keptRw, _) = ZoneMap.keptFiles(entries().toDF(),
+    val (keptRw, _) = ZoneMap.keptLiveFiles(spark, dir,
       Seq(NumRange("k", Some(9000.0), None)))
     assert(keptRw === Seq(rewrite),
       "refresh must pick up the rewritten file's new zones")
@@ -247,8 +312,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "v", "name", "w")
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(dir)
-    ZoneMap.writeSidecar(spark, dir,
-      ZoneMap.build(spark, dir, Seq("k", "v", "name", "w")))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v", "name", "w"))
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dir).getFileSystem(conf)
     val idx = new Path(dir, ZoneMap.SidecarFile)
@@ -274,8 +338,9 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     // table data stays readable with the sidecar files in place
     assert(spark.read.parquet(dir).count() === 400L)
 
-    // a re-write supersedes the snapshot and GCs the old shard files
-    ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("k", "v")))
+    // a re-write (here: dropping two tracked columns) supersedes the
+    // snapshot and GCs the old shard files
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v"))
     val after = fs.listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith("_zone_map.c"))
     assert(after.length === 2, s"stale shards must GC (got ${after.toSeq})")
@@ -288,7 +353,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.hadoop.fs.Path
     val dir = scratch() + "/t"
     writePartitioned((0 until 100).map(i => (i.toLong, i.toDouble)).toDF("k", "v"), dir, 4)
-    ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("k", "v")))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "v"))
     val conf = spark.sparkContext.hadoopConfiguration
     val idx = new Path(dir, ZoneMap.SidecarFile)
     val entries = ZoneMap.readSidecarPath(idx, conf).get
@@ -335,8 +400,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "opt", "f", "name")
       .repartitionByRange(3, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(dir)
-    ZoneMap.writeSidecar(spark, dir,
-      ZoneMap.build(spark, dir, Seq("k", "opt", "f", "name")))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k", "opt", "f", "name"))
 
     // int column: counts AND bounds exact
     val k = ZoneMap.aggFromManifest(spark, dir, "k").get
@@ -355,7 +419,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
     val nanDir = scratch() + "/nan"
     (0 until 50).map(i => (i.toLong, if (i % 3 == 0) Double.NaN else i.toDouble))
       .toDF("k", "f").coalesce(1).write.mode("overwrite").parquet(nanDir)
-    ZoneMap.writeSidecar(spark, nanDir, ZoneMap.build(spark, nanDir, Seq("f")))
+    ZoneMap.refreshSidecar(spark, nanDir, Seq("f"))
     assert(ZoneMap.aggFromManifest(spark, nanDir, "f").isEmpty)
     // string column: counts yes, numeric bounds refused
     assert(ZoneMap.aggFromManifest(spark, dir, "name").get.bounds.isEmpty)
@@ -389,15 +453,15 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
       .toDF("a", "b")
     Layout.zOrder(df, "a", "b", 16, ranges = Some((0.0, 100.0, 0.0, 100.0)))
       .write.mode("overwrite").parquet(dir)
-    val mf = ZoneMap.build(spark, dir, Seq("a", "b"))
-    val (keptA, total) = ZoneMap.keptFiles(mf, Seq(NumRange("a", None, Some(10.0))))
-    val (keptB, _) = ZoneMap.keptFiles(mf, Seq(NumRange("b", None, Some(10.0))))
+    ZoneMap.refreshSidecar(spark, dir, Seq("a", "b"))
+    val (keptA, total) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("a", None, Some(10.0))))
+    val (keptB, _) = ZoneMap.keptLiveFiles(spark, dir, Seq(NumRange("b", None, Some(10.0))))
     assert(total === 16)
     assert(keptA.size < total, "z-order must make dim a prunable")
     assert(keptB.size < total, "z-order must make dim b prunable")
     // correctness under the 2-D corner predicate
     val preds = Seq(NumRange("a", None, Some(10.0)), NumRange("b", None, Some(10.0)))
-    val pr = ZoneMap.prunedRead(spark, dir, mf, preds)
+    val pr = ZoneMap.prunedRead(spark, dir, preds)
     val got = pr.df.filter(col("a") <= 10 && col("b") <= 10).count()
     val want = spark.read.parquet(dir).filter(col("a") <= 10 && col("b") <= 10).count()
     assert(got === want && want > 0)
@@ -415,7 +479,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkTestBase {
         ((g * 7919L) % 1000L, s"s${g % 10}")
       }.toDF("k", "s").coalesce(1).write.mode("append").parquet(dir)
     }
-    ZoneMap.writeSidecar(spark, dir, ZoneMap.build(spark, dir, Seq("k")))
+    ZoneMap.refreshSidecar(spark, dir, Seq("k"))
     assert(ZoneMap.refreshHlls(spark, dir, Seq("k", "s")) === 12)
 
     val exactK = spark.read.parquet(dir).select("k").distinct().count()

@@ -44,8 +44,7 @@ class ExtensionRulesInterplaySpec extends AnyFunSuite {
         .toDF("k", "dim_id")
         .repartitionByRange(10, col("k")).sortWithinPartitions("k")
         .write.mode("overwrite").parquet(s"$work/fact")
-      ZoneMap.writeSidecar(s, s"$work/fact",
-        ZoneMap.build(s, s"$work/fact", Seq("k")))
+      ZoneMap.refreshSidecar(s, s"$work/fact", Seq("k"))
       // dim: physically 50 rows; measured sidecar says broadcastable
       (1L to 50L).map(i => (i, s"name$i")).toDF("dim_id", "name")
         .write.mode("overwrite").parquet(s"$work/dim")

@@ -39,7 +39,7 @@ class ManifestCountRuleSpec extends AnyFunSuite {
             if (j % 10 == 0) None else Some(s"v$j")))
           .toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
       }
-      ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("id")))
+      ZoneMap.refreshSidecar(s, dir, Seq("id"))
 
       def bare() = s.read.parquet(dir).agg(count(lit(1)).as("n"))
       assert(bare().as[Long].head() === 3000L)

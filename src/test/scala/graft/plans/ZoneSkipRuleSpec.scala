@@ -52,7 +52,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
 
       // harvest + sidecar -> the SAME query scans fewer files,
       // identical answer
-      ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("a", "b")))
+      ZoneMap.refreshSidecar(s, dir, Seq("a", "b"))
       val prunedFiles = scanFileCount(q())
       assert(prunedFiles < fullFiles,
         s"sidecar must shrink the file list (got $prunedFiles/$fullFiles)")
@@ -67,7 +67,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
         "rows in a file missing from the sidecar must not be skipped")
 
       // refresh the sidecar over the grown table: still exact
-      ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("a", "b")))
+      ZoneMap.refreshSidecar(s, dir, Seq("a", "b"))
       assert(q().count() === wantCount + 50)
 
       // a disjunction prunes as a UNION: only files where neither
@@ -129,8 +129,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
         }.toDF("ts", "id", "name", "value").coalesce(1)
           .write.mode("append").parquet(dir)
       }
-      ZoneMap.writeSidecar(s, dir,
-        ZoneMap.build(s, dir, Seq("ts", "id", "name", "value")))
+      ZoneMap.refreshSidecar(s, dir, Seq("ts", "id", "name", "value"))
       val total = scanFileCount(s.read.parquet(dir))
       assert(total === 10)
       def files(df: org.apache.spark.sql.DataFrame): Int = scanFileCount(df)
@@ -227,7 +226,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
         }.toDF("id", "tag", "day").coalesce(1)
           .write.mode("append").partitionBy("day").parquet(dir)
       }
-      ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("id")))
+      ZoneMap.refreshSidecar(s, dir, Seq("id"))
       ZoneMap.refreshBlooms(s, dir, Seq("tag"))
 
       // the recursive harvest saw every partition's files
@@ -428,7 +427,7 @@ class ZoneSkipRuleSpec extends AnyFunSuite {
       }.toDF("id", "name", "grp")
         .repartitionByRange(12, $"grp")
         .write.mode("overwrite").parquet(dir)
-      ZoneMap.writeSidecar(s, dir, ZoneMap.build(s, dir, Seq("id", "name")))
+      ZoneMap.refreshSidecar(s, dir, Seq("id", "name"))
       val written = ZoneMap.refreshBlooms(s, dir, Seq("id", "name"))
       val total = scanFileCount(s.read.parquet(dir))
       assert(written === 2 * total, "one bloom per (file, col)")
